@@ -108,18 +108,14 @@ object GraftFunctions {
   /** Bounded distinct min-k aggregate (see
     * [[graft.functions.expr.MinKDistinct]]): `graft_min_k(x, k)` — the k
     * smallest distinct BIGINTs of the group as an ascending array, O(k)
-    * buffer state. The analyzer wraps the returned AggregateFunction. */
+    * buffer state. The analyzer wraps the returned AggregateFunction and
+    * type-checks `k` (a constant INT or BIGINT, range-checked). */
   val minKDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_min_k"),
     new ExpressionInfo(classOf[MinKDistinct].getName, "graft_min_k"),
     (children: Seq[Expression]) => {
       require(children.size == 2, "graft_min_k(x, k) takes exactly 2 arguments")
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case _ => throw new IllegalArgumentException(
-          "graft_min_k: k must be an INT literal")
-      }
-      MinKDistinct(children.head, k)
+      MinKDistinct(children.head, children(1))
     })
 
   /** Idempotent imperative registration into `spark`'s function registry. */

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.explode.ChildTables
@@ -14,8 +14,9 @@ import graft.transform.WorkGraph
   * DAG_cloudrun_dataflow_sp.py:323-362 — http → 5 Beam jobs → 29 SP calls)
   * as one Spark driver. Sequencing is Scala statement order; the five
   * Beam jobs that each re-read the raw JSON become ONE read + five
-  * derivations (SURVEY §4.2 #3), and the SP chain is the WorkGraph
-  * composition, which Catalyst fuses into a handful of jobs.
+  * derivations (SURVEY §4.2 #3), and the SP chain is one
+  * [[WorkGraph.buildWork]] plan. A day with history runs about 30 Spark
+  * jobs end to end ([[run]]).
   */
 object Main {
 
@@ -71,11 +72,10 @@ object Main {
     // PERSISTED: the sinks below are SEPARATE actions (events sink, work
     // sink, master sink, ...) — without a persist each action re-runs the
     // flatten from the cached raw parse, and `events` re-explodes for its
-    // ~6 consumers (Q4/Q6/Q11, the fused Q14+Q15 pass, Q17, its own
-    // sink). At 100 TB that is several redundant corpus
-    // flattens/explodes per day — the exact re-derivation anti-pattern
-    // (SURVEY §4.2 #3) this driver exists to kill. Released after the
-    // sinks alongside the raw cache.
+    // three consumers (the Q-chain's event rollup, Q17, its own sink). At
+    // 100 TB that is several redundant corpus flattens/explodes per day —
+    // the exact re-derivation anti-pattern (SURVEY §4.2 #3) this driver
+    // exists to kill. Released after the sinks alongside the raw cache.
     val flat = Persist.hot(OrderFlatten.enrichPolygonLab(
       OrderFlatten.flatten(good), defaultPolygonLookup(spark)))
 
@@ -88,25 +88,20 @@ object Main {
     val reschedules = ChildTables.rescheduleEvents(flat)       // E3
     val packages = ChildTables.packages(flat)                  // E4
 
-    var work = WorkGraph.insertWorkTemp(master)                // Q3
-    work = WorkGraph.updateWorkStatus(work, events)            // Q4
-    work = WorkGraph.updateWorkMacroStatus(work)               // Q5
-    work = WorkGraph.updateWorkLob(work, events)               // Q6
-    work = WorkGraph.updateWorkPackages(work, packages)        // Q7
-    work = WorkGraph.updateWorkStructure(work)                 // Q8
-    work = WorkGraph.updateWorkTypeRoute(work)                 // Q9
-    work = WorkGraph.updateWorkRouteName(work, defaultRouteDim(spark)) // Q10
-    work = WorkGraph.updateWorkStatusTlmk(work, events)        // Q11
-    work = WorkGraph.updateWorkTotal(work, master)             // Q12
-    work = WorkGraph.updateWorkPortability(work)               // Q13
-    work = WorkGraph.updateWorkVisits(work, events, Seq(1, 2, 3, 0)) // Q14+Q15 fused
-    work = WorkGraph.updateWorkScheduled(work, schedules)      // Q16
+    val work = WorkGraph.buildWork(master, events, packages, schedules,
+      defaultRouteDim(spark))                                  // Q3-Q16, Q18
     val visits = WorkGraph.visitOrder(events)                  // Q17
-    work = WorkGraph.finalizeWork(work)                        // Q18
     val masterFinal = WorkGraph.masterVisitBackfill(master, work) // Q19
 
+    // RunReport counts ride the writes themselves: each reported sink
+    // carries an Observation counting the rows it writes, so the report
+    // costs no job of its own (re-reading the landed parquet cost 15).
+    val landed = Seq("delivery_order_work", "events_info_temp",
+      "schedule_events_info_temp", "reschedule_events_info_temp", "packages_temp")
+      .map(n => n -> Observation(n)).toMap
     def sink(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$outDir/$name")
+      landed.get(name).fold(df)(o => df.observe(o, count(lit(1)).as("rows")))
+        .write.mode("overwrite").parquet(s"$outDir/$name")
     // T6 + S2: master lands day-partitioned (America/Santiago bucketing,
     // SURVEY §1.3) so daily reruns overwrite only their own partition and
     // date-filtered scans prune at the directory level
@@ -136,13 +131,16 @@ object Main {
     // what materializes the shared raw→flat→events caches (Persist.hot is
     // lazy) — racing the other writers against it would compute the
     // flatten concurrently into the same cache blocks, duplicating the
-    // exact work the caches exist to share. Every remaining sink is then
-    // an INDEPENDENT action over cached upstreams; submitting them from a
-    // thread pool lets each job's task tail back-fill the cores the
-    // previous job is vacating instead of serializing seven commit
-    // protocols end-to-end. Output and report are byte-identical: the
-    // writes were already independent, only their wall-clock overlap
-    // changes.
+    // exact work the caches exist to share. The remaining sinks are
+    // independent actions, submitted from a thread pool so each job's
+    // task tail back-fills the cores the previous job is vacating. The
+    // child-table and visit-order sinks read only the caches; the work and
+    // master sinks each re-derive the Q1 dedupe and the Q-chain from the
+    // cached flatten, and under AQE each of their query stages is its own
+    // job, so those two dominate the batch. Persisting `work` to share it
+    // between them was measured and gives nothing: it serializes the
+    // batch behind the work job. Output and report do not depend on the
+    // overlap.
     sink(events, "events_info_temp")
     runConcurrently(Seq(
       () => graft.sinks.TableSink.writeDayPartitioned(
@@ -175,16 +173,15 @@ object Main {
         s"${prefix}_master", "delivery_order_id", buckets)
     }
 
-    // Report counts come from the PARQUET JUST WRITTEN (footer metadata,
-    // no recompute) — counting the lineage frames would re-run the dedupe
-    // shuffle and all four explodes a second time purely for the sidecar.
-    // `orders` is DAY-scoped like the reference's per-day sidecar
-    // (app.py:166-171): the work table has exactly one row per today's
-    // order, whereas the merged master includes all of history.
-    def written(name: String): Long = spark.read.parquet(s"$outDir/$name").count()
-    val report = RunReport(written("delivery_order_work"), bad.count(),
-      written("events_info_temp"), written("schedule_events_info_temp"),
-      written("reschedule_events_info_temp"), written("packages_temp"))
+    // Report counts come from the sink Observations above, complete once
+    // the writes have returned. `orders` is DAY-scoped like the
+    // reference's per-day sidecar (app.py:166-171): the work table has
+    // exactly one row per today's order, whereas the merged master
+    // includes all of history.
+    def rows(name: String): Long = landed(name).get("rows").asInstanceOf[Long]
+    val report = RunReport(rows("delivery_order_work"), bad.count(),
+      rows("events_info_temp"), rows("schedule_events_info_temp"),
+      rows("reschedule_events_info_temp"), rows("packages_temp"))
     // release the run's caches (raw parse + flatten + events explode);
     // unpersist is a harmless no-op under mode=reliable where hot()
     // returned a checkpoint instead of a cache

@@ -58,8 +58,11 @@ object Persist {
     * property that keeps iterative loops' plans from nesting), but
     * materialized by the CALLER'S FIRST ACTION instead of an extra
     * eager job here. For loop bodies where a known small action (e.g. a
-    * convergence aggregate) immediately follows the cut: one driver job
-    * per round instead of two. Callers MUST run an action on the frame
+    * convergence aggregate) immediately follows the cut: in the default
+    * and disk modes, one driver job per round instead of two. In reliable
+    * mode Spark writes the checkpoint files in a separate job after the
+    * caller's action, which recomputes the unpersisted lineage, so the
+    * round still costs two jobs. Callers MUST run an action on the frame
     * before depending on cut-at-a-point-in-time semantics — unlike
     * [[cut]], nothing is materialized on return. */
   def cutLazy(df: DataFrame): DataFrame = mode(df) match {

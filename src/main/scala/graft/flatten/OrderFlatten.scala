@@ -89,11 +89,11 @@ object OrderFlatten {
 
   /** T6 (P1:59-66): serialize the 8 nested-array fields to JSON strings —
     * the master table's on-disk parity shape. Null arrays stay null
-    * (`json.dumps` is only applied when the value is present). */
+    * (`json.dumps` is only applied when the value is present). One
+    * projection for all eight; each column keeps its position. */
   def toMasterSink(flat: DataFrame): DataFrame =
-    Schemas.jsonStringFields.foldLeft(flat) { (df, f) =>
-      df.withColumn(f, when(col(f).isNotNull, to_json(col(f))))
-    }
+    flat.withColumns(Schemas.jsonStringFields.map(f =>
+      f -> when(col(f).isNotNull, to_json(col(f)))).toMap)
 
   /** One polygon-lab resolution: (structureId, polygon) => segmentation,
     * None when the service has no answer. Mirrors the reference's per-order

@@ -26,18 +26,31 @@ import org.apache.spark.sql.types._
   *
   * Determinism: the result is a pure function of the group's value SET
   * (order-free), so partitioning cannot move it — the property that lets
-  * the SQL oracle replay sketches built on scan partitions. */
-case class MinKDistinct(child: Expression, k: Int,
+  * the SQL oracle replay sketches built on scan partitions.
+  *
+  * `kExpr` is any constant INT or BIGINT expression in [1, [[MinKDistinct
+  * .maxK]]]; anything else fails analysis with a type-check message. */
+case class MinKDistinct(child: Expression, kExpr: Expression,
                         mutableAggBufferOffset: Int = 0,
                         inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
 
-  require(k >= 1, s"graft_min_k needs k >= 1, got $k")
+  private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_min_k expects BIGINT, got $t")
+  override def checkInputDataTypes(): TypeCheckResult = {
+    import TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
+    if (child.dataType != LongType)
+      TypeCheckFailure(s"graft_min_k expects BIGINT, got ${child.dataType}")
+    else if (!kExpr.foldable)
+      TypeCheckFailure(s"graft_min_k: k must be a constant, got ${kExpr.sql}")
+    else kExpr.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => kExpr.eval() match {
+        case v: Number if v.longValue >= 1 && v.longValue <= MinKDistinct.maxK => TypeCheckSuccess
+        case v => TypeCheckFailure(
+          s"graft_min_k: k must be in [1, ${MinKDistinct.maxK}], got $v")
+      }
+      case t => TypeCheckFailure(s"graft_min_k: k must be INT or BIGINT, got ${t.sql}")
+    }
   }
 
   override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
@@ -88,7 +101,7 @@ case class MinKDistinct(child: Expression, k: Int,
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = Seq(child, kExpr)
   override def prettyName: String = "graft_min_k"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): MinKDistinct =
@@ -97,5 +110,10 @@ case class MinKDistinct(child: Expression, k: Int,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MinKDistinct =
-    copy(child = newChildren.head)
+    copy(child = newChildren(0), kExpr = newChildren(1))
+}
+
+object MinKDistinct {
+  /** Largest k whose serialized buffer (4 + 8k bytes) fits one array. */
+  val maxK: Long = (Int.MaxValue - 4) / 8
 }

@@ -485,10 +485,11 @@ object ExtensionQueries {
     * Exercises for real: Q1 dedupe, Q3 seed, Q4 status, Q5 macro, Q6 lob,
     * Q7 packages rollup, Q8 structure, Q9 type-route, Q10 broadcast dim,
     * Q11 tlmk, Q12 array-HOF total, Q13 portability, Q14+Q15 fused
-    * visits, Q16 scheduled, Q18 finalize — the exact composition
-    * `Main.run` executes, minus the raw-JSON source. One deviation:
-    * `Main.run` persists the events frame (Persist.hot) so its ~6
-    * consumers share one scan; a contract query must stay a pure plan,
+    * visits, Q16 scheduled, Q18 finalize — [[graft.transform.WorkGraph
+    * .buildWork]], the composition `Main.run` executes, minus the raw-JSON
+    * source. One deviation: `Main.run` persists the events frame
+    * (Persist.hot) so its consumers share one explode; a contract query
+    * must stay a pure plan,
     * so here each consumer re-reads the narrow fixture scan — fine at
     * verify scale, and the plan is otherwise the production one (every
     * joinUpdate broadcasts, zero sort-merge joins). */
@@ -528,20 +529,8 @@ object ExtensionQueries {
       uid.cast("string").as("delivery_order_id"), col("ts").as("timestamp"))
 
     val master = WorkGraph.deleteDuplicates(tempMaster)                 // Q1 (Q2 vs empty history)
-    var work = WorkGraph.insertWorkTemp(master)                         // Q3
-    work = WorkGraph.updateWorkStatus(work, events)                     // Q4
-    work = WorkGraph.updateWorkMacroStatus(work)                        // Q5
-    work = WorkGraph.updateWorkLob(work, events)                        // Q6
-    work = WorkGraph.updateWorkPackages(work, packages)                 // Q7
-    work = WorkGraph.updateWorkStructure(work)                          // Q8
-    work = WorkGraph.updateWorkTypeRoute(work)                          // Q9
-    work = WorkGraph.updateWorkRouteName(work, graft.Main.defaultRouteDim(s)) // Q10
-    work = WorkGraph.updateWorkStatusTlmk(work, events)                 // Q11
-    work = WorkGraph.updateWorkTotal(work, master)                      // Q12
-    work = WorkGraph.updateWorkPortability(work)                        // Q13
-    work = WorkGraph.updateWorkVisits(work, events, Seq(1, 2, 3, 0))    // Q14+Q15 fused
-    work = WorkGraph.updateWorkScheduled(work, schedules)               // Q16
-    WorkGraph.finalizeWork(work).orderBy("delivery_order_id")           // Q18
+    WorkGraph.buildWork(master, events, packages, schedules,
+      graft.Main.defaultRouteDim(s)).orderBy("delivery_order_id")       // Q3-Q16, Q18
   }
 
   /** Data-mixing rebalance for x27: halve English, keep a fifth of

@@ -15,9 +15,14 @@ import graft.operators.Relational
   * *(inferred)* from its name and arguments — SURVEY §2.0 documents the
   * inference per proc. What matters architecturally: the reference runs 29
   * sequential full-table UPDATE/DELETE passes; here every "UPDATE" is a
-  * narrow join-rebuild on the work frame, so Catalyst's CollapseProject
-  * fuses the whole chain into a handful of stages (SURVEY §4.2 #5) and the
-  * only shuffles left are the genuine aggregations/windows.
+  * narrow join-rebuild on the work frame, and [[buildWork]] reads the
+  * `events` frame once for all of Q4/Q6/Q11/Q14/Q15 ([[eventRollup]]), so
+  * the only shuffles left are the genuine aggregations/windows (SURVEY
+  * §4.2 #5). A PipelineFixture day upserted into a 3-day history
+  * through `Main.run` on `local[4]` runs 30 Spark jobs, sinks and report
+  * included (JobCountSpec pins a ceiling); with one shuffle and one join
+  * per events-derived update, and the report re-reading its sinks, it
+  * ran 58.
   *
   * At 100 TB the work/master frames live bucketed by delivery_order_id
   * ([[graft.sinks.TableSink.writeBucketed]]) so every joinUpdate
@@ -31,14 +36,16 @@ object WorkGraph {
     * Derived columns replace same-named work columns (non-matching rows
     * keep NULL, like a SQL UPDATE that only touches matched rows would
     * leave pre-seeded NULLs). Derived side is renamed first so repeated
-    * application over shared lineage stays unambiguous. */
+    * application over shared lineage stays unambiguous. One projection
+    * per side: a per-column drop/rename fold would re-analyze the whole
+    * growing plan once per column. */
   private[transform] def joinUpdate(work: DataFrame, derived: DataFrame, key: String): DataFrame = {
     val dcols = derived.columns.filterNot(_ == key).toSeq
     val renamed = derived.select(
       (derived(key).as("__jk") +: dcols.map(c => derived(c).as(s"__d_$c"))): _*)
-    val base = dcols.foldLeft(work)((df, c) => df.drop(c))
-    val out = base.join(renamed, base(key) === col("__jk"), "left_outer").drop("__jk")
-    dcols.foldLeft(out)((df, c) => df.withColumnRenamed(s"__d_$c", c))
+    val base = work.drop(dcols: _*)
+    base.join(renamed, base(key) === col("__jk"), "left_outer")
+      .select(base.columns.toSeq.map(col) ++ dcols.map(c => col(s"__d_$c").as(c)): _*)
   }
 
   private val oid = "delivery_order_id"
@@ -59,11 +66,12 @@ object WorkGraph {
   /** Q3 INSERT_DELIVERY_ORDER_WORK_TEMP (DAG:106-112): seed the work frame
     * from master — scalar columns only, the arrays stay in master. */
   def insertWorkTemp(master: DataFrame): DataFrame =
-    master.select(
-      col(oid), col("code"), col("recycling"), col("assigned_courier"),
-      col("size_box"), col("cross_docking_location_code"), col("delivery_attemps"),
-      col("promised_date"), col("created_date"),
-      col("destination_structure_id"), col("destination_polygon"))
+    master.select(seedColumns.map(col): _*)
+
+  private val seedColumns = Seq(
+    oid, "code", "recycling", "assigned_courier", "size_box",
+    "cross_docking_location_code", "delivery_attemps", "promised_date",
+    "created_date", "destination_structure_id", "destination_polygon")
 
   /** Q4 update_..._status (DAG:114-120): status + last event ts from the
     * LATEST event per order. */
@@ -138,12 +146,12 @@ object WorkGraph {
 
   /** Q12 update_..._total (DAG:177-183) *(inferred)*: per-order item total
     * from the master's items array — narrow HOF sum, no shuffle. */
-  def updateWorkTotal(work: DataFrame, master: DataFrame): DataFrame = {
-    val totals = master.select(col(oid),
-      coalesce(aggregate(col("items_json"), lit(0L), (acc, it) => acc + coalesce(it.getField("qty"), lit(0L))), lit(0L))
-        .as("total_items"))
-    joinUpdate(work, totals, oid)
-  }
+  def updateWorkTotal(work: DataFrame, master: DataFrame): DataFrame =
+    joinUpdate(work, master.select(col(oid), totalItems.as("total_items")), oid)
+
+  private def totalItems: Column =
+    coalesce(aggregate(col("items_json"), lit(0L),
+      (acc, it) => acc + coalesce(it.getField("qty"), lit(0L))), lit(0L))
 
   /** Q13 update_..._portability (DAG:185-191) *(inferred)*. */
   def updateWorkPortability(work: DataFrame): DataFrame =
@@ -187,21 +195,65 @@ object WorkGraph {
     * nodes and ONE joinUpdate in the plan instead of 4 + 4. Output is
     * identical to the fold, column order included. */
   def updateWorkVisits(work: DataFrame, events: DataFrame, ns: Seq[Int]): DataFrame = {
+    val aggs = visitAggs(ns)
+    joinUpdate(work, rankVisits(events).groupBy(col(oid)).agg(aggs.head, aggs.tail: _*), oid)
+  }
+
+  /** `events` with the two visit ranks [[updateWorkVisits]] reads. */
+  private def rankVisits(events: DataFrame): DataFrame = {
     val asc = Window.partitionBy(col(oid)).orderBy(col("timestamp").asc_nulls_last, col("status"))
     val desc = Window.partitionBy(col(oid)).orderBy(col("timestamp").desc_nulls_last, col("status"))
-    val ranked = events
+    events
       .withColumn("__rn_asc", row_number().over(asc))
       .withColumn("__rn_desc", row_number().over(desc))
-    val aggs = ns.flatMap { n =>
-      val tag = if (n == 0) "last" else n.toString
-      val cond = if (n == 0) col("__rn_desc") === 1 else col("__rn_asc") === n
-      Seq(max(when(cond, col("timestamp"))).as(s"visit${tag}_ts"),
-          max(when(cond, col("status"))).as(s"visit${tag}_status"),
-          max(when(cond, col("info_user_name"))).as(s"visit${tag}_user"))
-    }
-    val visits = ranked.groupBy(col(oid)).agg(aggs.head, aggs.tail: _*)
-    joinUpdate(work, visits, oid)
   }
+
+  private def visitAggs(ns: Seq[Int]): Seq[Column] = ns.flatMap { n =>
+    val tag = if (n == 0) "last" else n.toString
+    val cond = if (n == 0) col("__rn_desc") === 1 else col("__rn_asc") === n
+    Seq(max(when(cond, col("timestamp"))).as(s"visit${tag}_ts"),
+        max(when(cond, col("status"))).as(s"visit${tag}_status"),
+        max(when(cond, col("info_user_name"))).as(s"visit${tag}_user"))
+  }
+
+  /** Q4 + Q6 + Q11 + Q14/Q15 as ONE per-order rollup of `events`: one
+    * shuffle on the order id, the two visit windows over it, and one
+    * aggregation. Output columns, in the order the fold
+    * [[updateWorkStatus]] → [[updateWorkLob]] → [[updateWorkStatusTlmk]]
+    * → [[updateWorkVisits]]`(1, 2, 3, 0)` appends them: status,
+    * last_event_ts, lob, status_tlmk, then the visit columns.
+    *
+    * "Latest" keeps the per-step tie rule exactly: Q4's row is the first
+    * in (timestamp, status) DESC NULLS LAST, Q6's in (timestamp, lob)
+    * DESC NULLS LAST over non-null lobs. Struct comparison orders fields
+    * left to right with NULL below any value, so `max(struct(ts, v))`
+    * picks that same row, and the struct carries both of its values.
+    * Events with a null order id form their own group, which the work
+    * join never matches — as the per-step joins never did. */
+  def eventRollup(events: DataFrame): DataFrame = {
+    val aggs = Seq(
+      max(struct(col("timestamp"), col("status"))).as("__latest"),
+      max(when(col("lob").isNotNull, struct(col("timestamp"), col("lob")))).as("__latest_lob"),
+      max(when(lower(col("info_user_name")).startsWith("tlmk"), lit("TLMK"))).as("status_tlmk")
+    ) ++ visitAggs(visitRanks)
+    rankVisits(events).groupBy(col(oid)).agg(aggs.head, aggs.tail: _*)
+      .select(Seq(col(oid), col("__latest.status").as("status"),
+        col("__latest.timestamp").as("last_event_ts"), col("__latest_lob.lob").as("lob"),
+        col("status_tlmk")) ++ visitColumns.map(col): _*)
+  }
+
+  /** The fold [[updateWorkStatus]] → [[updateWorkLob]] →
+    * [[updateWorkStatusTlmk]] → [[updateWorkVisits]]`(1, 2, 3, 0)` as one
+    * join of [[eventRollup]]: same rows, same columns, same order. */
+  def updateWorkEvents(work: DataFrame, events: DataFrame): DataFrame =
+    joinUpdate(work, eventRollup(events), oid)
+
+  /** The visit ranks the reference stages (DAG:193-246). */
+  private val visitRanks = Seq(1, 2, 3, 0)
+  private val visitColumns = for {
+    tag <- visitRanks.map(n => if (n == 0) "last" else n.toString)
+    f <- Seq("ts", "status", "user")
+  } yield s"visit${tag}_$f"
 
   /** Q16 update_..._scheduled (DAG:248-254): first scheduled ts per order. */
   def updateWorkScheduled(work: DataFrame, scheduleEvents: DataFrame): DataFrame = {
@@ -222,6 +274,39 @@ object WorkGraph {
   /** Q18 insert_delivery_order_work (DAG:264-270): finalize — the work
     * frame is already the final shape; materialization happens at the sink. */
   def finalizeWork(work: DataFrame): DataFrame = work
+
+  /** Q3-Q16 + Q18: the work frame from the deduplicated day `master` and
+    * its child tables — the chain `Main.run` and the `w04_sp_chain`
+    * contract query both run. Equal to the per-step fold (Q3, Q4, …, Q16
+    * in DAG call order, Q14+Q15 fused), rows and column order, but:
+    *  - Q4/Q6/Q11/Q14/Q15 are one [[updateWorkEvents]] join instead of
+    *    four shuffles and four joins;
+    *  - Q12's total is a per-row expression on `master`, so it is part of
+    *    the Q3 seed instead of a self-join (a null order id keeps a NULL
+    *    total, as the join never matched it). `master` must hold one row
+    *    per order id, which Q1 guarantees;
+    *  - one final `select` restores the fold's column order. */
+  def buildWork(master: DataFrame, events: DataFrame, packages: DataFrame,
+                schedules: DataFrame, routeDim: DataFrame): DataFrame = {
+    val seeded = master.select(seedColumns.map(col) :+
+      when(col(oid).isNotNull, totalItems).as("total_items"): _*)
+    var work = updateWorkEvents(seeded, events)                // Q4 Q6 Q11 Q14+Q15
+    work = updateWorkMacroStatus(work)                         // Q5
+    work = updateWorkPackages(work, packages)                  // Q7
+    work = updateWorkStructure(work)                           // Q8
+    work = updateWorkTypeRoute(work)                           // Q9
+    work = updateWorkRouteName(work, routeDim)                 // Q10
+    work = updateWorkPortability(work)                         // Q13
+    work = updateWorkScheduled(work, schedules)                // Q16
+    finalizeWork(work.select(workColumns.map(col): _*))        // Q18
+  }
+
+  /** Work-table column order: the order the per-step fold appends them. */
+  private val workColumns = seedColumns ++ Seq("status", "last_event_ts",
+    "macro_status", "lob", "n_packages", "any_dc_bulk", "any_ser_bulk",
+    "structure_type", "type_route", "route_name", "status_tlmk",
+    "total_items", "portability") ++ visitColumns ++
+    Seq("scheduled_first_ts", "scheduled_last_ts")
 
   /** Q19 update_delivery_order_master_visit (DAG:272-278): backfill
     * visit-derived columns onto master. */

@@ -1183,6 +1183,33 @@ class PipelineSpec extends SparkSpec {
     assert(master.schema("events_info_json").dataType.typeName == "string")
   }
 
+  test("O1 report: RunReport equals the counts re-read from the landed parquet") {
+    // the report's counts come from Observations on the sink writes; they
+    // must equal what a reader of the landed files sees — on the corrupt-
+    // file fixture, and on a day upserted into history with corrupt files
+    def reread(out: String, r: Main.RunReport): Unit = {
+      def n(t: String) = spark.read.parquet(s"$out/$t").count()
+      assert(r == Main.RunReport(n("delivery_order_work"), r.corruptFiles,
+        n("events_info_temp"), n("schedule_events_info_temp"),
+        n("reschedule_events_info_temp"), n("packages_temp")))
+      val meta = Files.readString(Paths.get(s"$out/_run_metadata.json"))
+      assert(meta == s"""{"total_ordenes":${r.orders},"fallos":${r.corruptFiles},""" +
+        s""""events":${r.events},"schedules":${r.schedules},""" +
+        s""""reschedules":${r.reschedules},"packages":${r.packages}}""")
+    }
+    val out = Files.createTempDirectory("graft_report").toString
+    val r = Main.run(spark, fixtures, out)
+    assert(r.corruptFiles == 1)
+    reread(out, r)
+
+    val root = Files.createTempDirectory("graft_report_hist")
+    val (dayIn, history) = HistoryDay.land(spark, root, historyOrders = 300,
+      historyDays = 2, orders = 100, badFiles = 3, seed = 21L)
+    val r2 = Main.run(spark, dayIn, s"$root/day_out", Some(history))
+    assert(r2.orders == 100 && r2.corruptFiles == 3)
+    reread(s"$root/day_out", r2)
+  }
+
   test("O2 e2e: authenticated trigger → paged extract → full pipeline (DAG:25-32 → :323-362)") {
     import com.sun.net.httpserver.HttpServer
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -23,3 +23,26 @@ object SparkSpec {
     s
   }
 }
+
+/** A landed day upserted into history, the `etl_day` shape: `historyDays`
+  * days of PipelineFixture orders run through `Main.run` under
+  * `root/history_out`, then one day under `root/day_in` whose last ids
+  * re-deliver history orders, with `badFiles` corrupt day-files beside it.
+  * Returns the day's input dir and the history master to merge into. */
+object HistoryDay {
+  def land(spark: SparkSession, root: java.nio.file.Path, historyOrders: Int,
+           historyDays: Int, orders: Int, badFiles: Int, seed: Long): (String, String) = {
+    import java.nio.file.Files
+    val day = java.time.LocalDate.of(2024, 1, 15)
+    PipelineFixture.write(root.resolve("history_in"), historyOrders, historyDays,
+      seed = seed, startDay = day.minusDays(historyDays.toLong))
+    val dayIn = root.resolve("day_in")
+    PipelineFixture.write(dayIn, orders, 1, seed = seed + 1,
+      idBase = historyOrders - orders / 5, startDay = day)
+    for (k <- 0 until badFiles)
+      Files.writeString(dayIn.resolve(day.toString).resolve(s"broken_$k.json"),
+        s"""[{"delivery_order_id": "BAD-$k", "code": trunc""")
+    Main.run(spark, root.resolve("history_in").toString, s"$root/history_out")
+    (dayIn.toString, s"$root/history_out/delivery_order_master")
+  }
+}

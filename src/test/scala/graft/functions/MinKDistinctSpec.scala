@@ -47,6 +47,29 @@ class MinKDistinctSpec extends SparkSpec {
     assert(got === Map("a" -> Seq(1L, 2L, 3L)))
   }
 
+  test("SQL k: INT, BIGINT and constant expressions accepted; anything else fails analysis") {
+    graft.GraftFunctions.register(spark)
+    Seq(("a", 5L), ("a", 1L), ("a", 3L), ("b", 2L)).toDF("g", "v")
+      .createOrReplaceTempView("min_k_args")
+    def mins(k: String) = spark.sql(
+      s"SELECT g, graft_min_k(v, $k) AS m FROM min_k_args GROUP BY g ORDER BY g")
+      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toSeq
+    val want = Seq("a" -> Seq(1L, 3L), "b" -> Seq(2L))
+    for (k <- Seq("2", "2L", "CAST(2 AS BIGINT)", "1 + 1", "CAST(2 AS TINYINT)"))
+      assert(mins(k) == want, s"k = $k")
+    for ((k, msg) <- Seq(
+        "0" -> "k must be in [1, ",
+        "-3L" -> "k must be in [1, ",
+        "4294967296L" -> "k must be in [1, ",
+        "CAST(NULL AS INT)" -> "k must be in [1, ",
+        "2.0D" -> "k must be INT or BIGINT",
+        "'2'" -> "k must be INT or BIGINT",
+        "v" -> "k must be a constant")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](mins(k))
+      assert(e.getMessage.contains(msg), s"k = $k: ${e.getMessage}")
+    }
+  }
+
   test("kmvSketch via graft_min_k equals the collect_set reference at small k") {
     val docs = graft.sources.Tables(spark, sf(), "documents")
       .select(col("doc_id"), col("text"), col("lang"))

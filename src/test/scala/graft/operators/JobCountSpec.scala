@@ -105,6 +105,21 @@ class JobCountSpec extends SparkSpec {
     assert(two <= 6 * 2 + 6, s"2 rounds cost $two jobs")
   }
 
+  test("Main.run with history: a landed day costs a bounded number of jobs") {
+    // 3 history days, then one day re-delivering some history ids plus
+    // two corrupt files: every layer runs, the Q2 upsert included. The
+    // fused event rollup, Observation-backed report counts and one
+    // projection per update land this near 30 jobs; one shuffle and
+    // join per events-derived update and re-reading five sinks for the
+    // report cost 58. Slack for AQE stage splits.
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs")
+    val (dayIn, history) = graft.HistoryDay.land(spark, root, historyOrders = 600,
+      historyDays = 3, orders = 200, badFiles = 2, seed = 11L)
+    val jobs = countJobs(graft.Main.run(spark, dayIn, s"$root/day_out", Some(history)))
+    info(s"Main.run day with history: $jobs jobs")
+    assert(jobs <= 35, s"Main.run cost $jobs jobs")
+  }
+
   private def randomEmb(n: Int, seed: Int) = {
     val rnd = new scala.util.Random(seed)
     (0L until n).map(i => (i, Seq.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))

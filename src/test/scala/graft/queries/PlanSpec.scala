@@ -97,6 +97,25 @@ class PlanSpec extends SparkSpec {
     assert(windows <= 2, s"visit chain planned $windows Window nodes:\n$p")
   }
 
+  test("Q4/Q6/Q11/Q14/Q15 event rollup: ONE exchange on events, at most 2 Window nodes") {
+    import org.apache.spark.sql.functions._
+    val e = graft.sources.Tables(spark, sf(), "events").select(
+      col("user_id").cast("string").as("delivery_order_id"),
+      col("ts").as("timestamp"), col("event_id").as("status"),
+      col("event_type").as("info_user_name"),
+      when(col("event_id") % 3 === 0, col("event_id") % 5).as("lob"))
+    val rollup = graft.transform.WorkGraph.eventRollup(e)
+    rollup.collect()
+    val p = rollup.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    // status, lob, tlmk and all four visits share one shuffle on the
+    // order id: the two visit windows and the aggregation all ride it
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(exchanges == 1, s"event rollup planned $exchanges exchanges:\n$p")
+    val windows = "Window \\[".r.findAllIn(p).size
+    assert(windows <= 2, s"event rollup planned $windows Window nodes:\n$p")
+  }
+
   test("x22/x24: repetition ratio and PII redaction plan ZERO exchanges") {
     import graft.sources.Tables
     import graft.operators.TextAnalysis
