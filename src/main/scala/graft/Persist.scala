@@ -53,21 +53,24 @@ object Persist {
     case _          => df.localCheckpoint()
   }
 
-  /** LAZY lineage cut: same plan truncation as [[cut]] (downstream
-    * consumers see a checkpoint scan, not the upstream lineage — the
-    * property that keeps iterative loops' plans from nesting), but
-    * materialized by the CALLER'S FIRST ACTION instead of an extra
-    * eager job here. For loop bodies where a known small action (e.g. a
-    * convergence aggregate) immediately follows the cut: in the default
-    * and disk modes, one driver job per round instead of two. In reliable
-    * mode Spark writes the checkpoint files in a separate job after the
-    * caller's action, which recomputes the unpersisted lineage, so the
-    * round still costs two jobs. Callers MUST run an action on the frame
-    * before depending on cut-at-a-point-in-time semantics — unlike
-    * [[cut]], nothing is materialized on return. */
+  /** LAZY lineage cut in the default and disk modes: same plan
+    * truncation as [[cut]] (downstream consumers see a checkpoint scan,
+    * not the upstream lineage — the property that keeps iterative loops'
+    * plans from nesting), but materialized by the CALLER'S FIRST ACTION
+    * instead of an extra eager job here. For loop bodies where a known
+    * small action (e.g. a convergence aggregate) immediately follows the
+    * cut: one driver job per round instead of two. Callers MUST run an
+    * action on the frame before depending on cut-at-a-point-in-time
+    * semantics — nothing is materialized on return.
+    *
+    * In reliable mode this is the eager [[cut]]: a lazy reliable
+    * checkpoint is written by a separate job after the caller's action,
+    * which recomputes the unpersisted lineage (two jobs per round
+    * anyway) and, for a nondeterministic upstream, could checkpoint rows
+    * other than the ones the action saw. */
   def cutLazy(df: DataFrame): DataFrame = mode(df) match {
     case "disk"     => df.localCheckpoint(false, StorageLevel.DISK_ONLY)
-    case "reliable" => df.checkpoint(false)
+    case "reliable" => cut(df)
     case _          => df.localCheckpoint(false)
   }
 }

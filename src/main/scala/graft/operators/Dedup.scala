@@ -1072,7 +1072,8 @@ object Dedup {
     // truncation as the eager cut — each round's plan stays three joins
     // over a checkpoint scan, and callers see a flat plan — but the
     // convergence-sum action below is what materializes the frame, so
-    // every loop round costs ONE driver job instead of two (a plain
+    // every loop round costs ONE driver job instead of two in the
+    // default and disk persist modes (a plain
     // cache was measured WORSE here: it kept the full candidate-chain
     // lineage in every caller's logical plan and the planning cost ate
     // the saved job). Superseded rounds are reclaimed by the
@@ -1923,16 +1924,12 @@ object Dedup {
     // second chain's stages back-fill cores the first one's task tails
     // leave idle (guide §2.6 overlap-independent-jobs) — neither chain
     // alone saturates the box between its shuffle barriers
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val lshF = Future(graft.Persist.cut(
-      lshCandidatePairs(docs).select(col("a_id"), col("b_id"))))
-    val simF = Future(graft.Persist.cut(
-      simhashNearDupPairs(docs, bits, maxHamming)
-        .select(col("a_id"), col("b_id"))))
-    val lsh = Await.result(lshF, Duration.Inf)
-    val sim = Await.result(simF, Duration.Inf)
+    val Seq(lsh, sim) = graft.Concurrent.all(docs.sparkSession)(Seq(
+      () => graft.Persist.cut(
+        lshCandidatePairs(docs).select(col("a_id"), col("b_id"))),
+      () => graft.Persist.cut(
+        simhashNearDupPairs(docs, bits, maxHamming)
+          .select(col("a_id"), col("b_id")))))
     val nl = lsh.agg(count(lit(1)).as("lsh_pairs"))
     val ns = sim.agg(count(lit(1)).as("simhash_pairs"))
     val nb = lsh.join(sim, Seq("a_id", "b_id"), "left_semi")

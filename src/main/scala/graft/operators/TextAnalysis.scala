@@ -1299,8 +1299,9 @@ object TextAnalysis {
 
   /** [[sourceDivergence]]'s math from a PRE-AGGREGATED (stratum, term,
     * c_st) count frame — the shared core that lets the incremental
-    * runner ([[graft.Main.runIncrementalSourceKl]]) merge per-batch count
-    * partials and publish the same KL the batch pass computes: counts
+    * runner ([[graft.streaming.Incremental.runIncrementalSourceKl]])
+    * merge per-batch count partials and publish the same KL the batch
+    * pass computes: counts
     * are additive, so summed partials feed this identically to one
     * corpus pass. */
   def divergenceFromCounts(counts: DataFrame): DataFrame = {

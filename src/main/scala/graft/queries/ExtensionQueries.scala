@@ -275,7 +275,8 @@ object ExtensionQueries {
     * handling is spec-pinned in EventStreamSpec.)
     *
     * Scale: the memory sink is the ORACLE surface (verify-scale only; the
-    * production path is the parquet/AvailableNow runners in Main). State
+    * production path is the parquet/AvailableNow runners in
+    * [[graft.streaming.Incremental]]). State
     * is watermark-bounded, counts-only rows. */
   def w05(s: SparkSession, dir: String): DataFrame = {
     val e = Tables(s, dir, "events").select("event_id", "ts", "event_type", "value")
@@ -290,7 +291,7 @@ object ExtensionQueries {
     // them concurrently so the later jobs back-fill the earlier ones'
     // task tails (guide §2.6 overlap-independent-jobs) — mtimes are
     // pinned AFTER each write, so landing order is irrelevant
-    landConcurrently(Seq(
+    graft.Concurrent.all(s)(Seq(
       () => land(e.filter(col("event_id") % 10 >= 2), "00_ontime.parquet", 1000000L),
       () => land(e.filter(col("event_id") % 10 === 1), "01_advance.parquet", 2000000L),
       () => land(e.filter(col("event_id") % 10 === 0), "02_replay.parquet", 3000000L)))
@@ -332,16 +333,6 @@ object ExtensionQueries {
     val prev = s.conf.get(key)
     s.conf.set(key, s.conf.get("spark.graft.stream.statePartitions", "8"))
     try f finally s.conf.set(key, prev)
-  }
-
-  /** Submit independent fixture-landing writes concurrently (each is a
-    * one-task write job; the scheduler back-fills idle cores with the
-    * next job's tasks — guide §2.6). Exceptions propagate. */
-  private def landConcurrently(lands: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.sequence(lands.map(l => Future(l()))), Duration.Inf)
   }
 
   /** Land `df` as ONE parquet file named `name` under `streamDir` with a
@@ -438,7 +429,7 @@ object ExtensionQueries {
       .select(col("event_id"), (col("ts") + expr("INTERVAL 3 HOURS")).as("ts"))
     // independent landing jobs, submitted concurrently (guide §2.6); the
     // advancer's max-ts aggregate rides its own broadcast subquery
-    landConcurrently(Seq(
+    graft.Concurrent.all(s)(Seq(
       () => land(e, "00_base.parquet", 1000000L),
       () => land(e.join(broadcast(mx), col("ts") === col("mxts"))
         .select("event_id", "ts"), "01_advance.parquet", 2000000L),

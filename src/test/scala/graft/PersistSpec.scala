@@ -70,6 +70,22 @@ class PersistSpec extends SparkSpec {
     }
   }
 
+  test("reliable mode: cutLazy is the eager cut, checkpoint files exist on return") {
+    // a lazy reliable checkpoint would be written by a separate job AFTER
+    // the caller's action, recomputing the lineage; the eager cut writes
+    // it here, once
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_lazy")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    val c = withMode("reliable") { Persist.cutLazy(spark.range(50).toDF("x")) }
+    import scala.jdk.CollectionConverters._
+    val parts = java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).size
+    assert(parts > 0, "no checkpoint files written by cutLazy")
+    assert(c.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
+      "cutLazy did not truncate lineage")
+    assert(c.agg(sum("x")).collect().head.getLong(0) == 1225L)
+  }
+
   test("reliable mode: a cut frame survives loss of its source (resume-after-failure)") {
     // The production property the knob exists for: once cut() returns, the
     // stage is materialized to reliable storage, so a failure that costs

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.explode.ChildTables
 import graft.flatten.OrderFlatten
 import graft.sources.RawReader
+import graft.streaming.Incremental
 import graft.transform.WorkGraph
 
 /** End-to-end tests of the reference-core slice over the JSON fixtures,
@@ -326,7 +327,7 @@ class PipelineSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft_stream_in").toString
     Tables(spark, sf(), "events").write.mode("overwrite").parquet(src)
     val out = Files.createTempDirectory("graft_stream_out").toString
-    Main.runStreamingHourly(spark, src, out)
+    Incremental.runStreamingHourly(spark, src, out)
     val streamed = spark.read.parquet(s"$out/hourly_counts").collect()
       .map(r => (r.getTimestamp(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     val batch = Tables(spark, sf(), "events")
@@ -350,7 +351,7 @@ class PipelineSpec extends SparkSpec {
     val once = Tables(spark, sf(), "events")
     once.unionByName(once).write.mode("overwrite").parquet(src) // double delivery
     val out = Files.createTempDirectory("graft_dedup_out").toString
-    Main.runStreamingDedup(spark, src, out)
+    Incremental.runStreamingDedup(spark, src, out)
     val landed = spark.read.parquet(s"$out/events_deduped")
     assert(landed.count() == once.select("event_id").distinct().count())
     assert(landed.select("event_id").distinct().count() == landed.count())
@@ -361,7 +362,7 @@ class PipelineSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft_sess_in").toString
     Tables(spark, sf(), "events").write.mode("overwrite").parquet(src)
     val out = Files.createTempDirectory("graft_sess_out").toString
-    Main.runStreamingSessions(spark, src, out)
+    Incremental.runStreamingSessions(spark, src, out)
     val sessions = spark.read.parquet(s"$out/sessions")
     assert(sessions.count() > 0, "no finalized sessions landed")
     val bad = sessions.filter(col("session_end") < col("session_start")).count()
@@ -391,14 +392,14 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     // pass 1: even events only
     ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
+    Incremental.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
     val side1 = SnapshotStore.currentSide(spark, root)
     assert(side1.nonEmpty)
     assert(snap() == latest(ev.filter(col("event_id") % 2 === 0)))
     // pass 2: the odd events arrive (some older than already-merged rows —
     // a straggler batch must not regress any key)
     ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
+    Incremental.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
     assert(snap() == latest(ev), "converged master != batch latest-per-key over the whole lake")
     // the rewrite landed on the OTHER side: the read snapshot was never
     // the write target
@@ -407,7 +408,7 @@ class PipelineSpec extends SparkSpec {
     // re-invocation with NOTHING new to process is a no-op: the checkpoint
     // admits no batch, so the snapshot (and its side) must not move —
     // the at-least-once retry story depends on this
-    Main.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
+    Incremental.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
     assert(SnapshotStore.currentSide(spark, root) == side2)
     assert(snap() == latest(ev))
   }
@@ -426,7 +427,7 @@ class PipelineSpec extends SparkSpec {
     // wave 1: even event_ids — splits most (user, day) buckets, so wave 2
     // must merge ADDITIVELY into existing buckets, not just append new ones
     ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runStreamingAnomaly(spark, src, root, window = 4, k = 3)
+    Incremental.runStreamingAnomaly(spark, src, root, window = 4, k = 3)
     val batchWave1 = graft.operators.Relational.rollingZscore(
       graft.operators.Relational.resampleCounts(
         ev.filter(col("event_id") % 2 === 0).select("user_id", "ts"), "user_id", "ts", "day"),
@@ -439,7 +440,7 @@ class PipelineSpec extends SparkSpec {
     // batch chain over the WHOLE lake (bucket totals re-summed from
     // batch-keyed partials, spine + z-scores recomputed)
     ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runStreamingAnomaly(spark, src, root, window = 4, k = 3)
+    Incremental.runStreamingAnomaly(spark, src, root, window = 4, k = 3)
     val batchAll = graft.operators.Relational.rollingZscore(
       graft.operators.Relational.resampleCounts(
         ev.select("user_id", "ts"), "user_id", "ts", "day"),
@@ -459,15 +460,15 @@ class PipelineSpec extends SparkSpec {
     def counts() = graft.sinks.SnapshotStore.read(spark, s"$root/counts").get
       .groupBy("user_id", "bucket").agg(sum("n_events").as("n")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).toString, r.getLong(2))).sorted.toSeq
-    Main.mergeAnomalyBatch(ev, batchId = 0L, root, "day", 7, 3)
+    Incremental.mergeAnomalyBatch(ev, batchId = 0L, root, "day", 7, 3)
     val once = counts()
     // an at-least-once retry re-delivers the SAME batch under the SAME id:
     // an additive merge would double every count; the batch-id-keyed
     // dedupe must make this a no-op
-    Main.mergeAnomalyBatch(ev, batchId = 0L, root, "day", 7, 3)
+    Incremental.mergeAnomalyBatch(ev, batchId = 0L, root, "day", 7, 3)
     assert(counts() == once, "retried batch double-counted")
     // a genuinely NEW batch with the same rows (different id) DOES add
-    Main.mergeAnomalyBatch(ev, batchId = 1L, root, "day", 7, 3)
+    Incremental.mergeAnomalyBatch(ev, batchId = 1L, root, "day", 7, 3)
     assert(counts().map(_._3).sum == 2 * once.map(_._3).sum)
   }
 
@@ -482,15 +483,15 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     // two arrival waves; the codebook stays FIXED across both
     emb.filter(col("vec_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runStreamingIndexAssign(spark, src, root, codebook)
+    Incremental.runStreamingIndexAssign(spark, src, root, codebook)
     emb.filter(col("vec_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runStreamingIndexAssign(spark, src, root, codebook)
+    Incremental.runStreamingIndexAssign(spark, src, root, codebook)
     val batch = graft.operators.Similarity.ivfAssignTo(emb, codebook)
       .select("vec_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(landed() == batch, "incremental index diverged from batch assignment")
     // nothing new: a third pass admits no batch and the index is unchanged
-    Main.runStreamingIndexAssign(spark, src, root, codebook)
+    Incremental.runStreamingIndexAssign(spark, src, root, codebook)
     assert(landed() == batch)
   }
 
@@ -631,7 +632,7 @@ class PipelineSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft_cbidx_in").toString
     val root = Files.createTempDirectory("graft_cbidx_out").toString
     emb.write.mode("append").parquet(src)
-    Main.runStreamingIndexAssignFromStore(spark, src, root, cbRoot)
+    Incremental.runStreamingIndexAssignFromStore(spark, src, root, cbRoot)
     val landed = pairs(spark.read.parquet(s"$root/index"))
     assert(landed == inlineAssign, "store-backed streaming index diverged")
     // a codebook REFRESH rotates sides; the reader follows the pointer
@@ -647,7 +648,7 @@ class PipelineSpec extends SparkSpec {
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
     val out = Files.createTempDirectory("graft_cur_out").toString
-    Main.runStreamingCuration(spark, src, out)
+    Incremental.runStreamingCuration(spark, src, out)
     val streamed = spark.read.parquet(s"$out/curated")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val batch = graft.operators.TextAnalysis.curationScores(docs)
@@ -667,9 +668,9 @@ class PipelineSpec extends SparkSpec {
     val w2 = Seq(doc(3L, "a b c d"), doc(4L, "x y z"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     w1.write.mode("append").parquet(src)
-    Main.runIncrementalNovelty(spark, src, root, n = 3)
+    Incremental.runIncrementalNovelty(spark, src, root, n = 3)
     w2.write.mode("append").parquet(src)
-    Main.runIncrementalNovelty(spark, src, root, n = 3)
+    Incremental.runIncrementalNovelty(spark, src, root, n = 3)
     val got = spark.read.parquet(s"$root/novelty")
       .select("doc_id", "novelty").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -683,7 +684,7 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(twin == Map(3L -> 0.0, 4L -> 1.0))
     // a RETRY of batch 1 (its spans already landed) must not see itself
-    Main.mergeNoveltyBatch(w2, 1L, root, 3)
+    Incremental.mergeNoveltyBatch(w2, 1L, root, 3)
     val retried = spark.read.parquet(s"$root/novelty")
       .select("doc_id", "novelty").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -700,9 +701,9 @@ class PipelineSpec extends SparkSpec {
     val w2 = Seq(doc(10L, "c x y d"), doc(11L, "p q"), doc(12L, "p q e"), doc(13L, "f p q"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     w1.write.mode("append").parquet(src)
-    Main.runIncrementalBoilerplate(spark, src, root, n = 2, maxDf = 2)
+    Incremental.runIncrementalBoilerplate(spark, src, root, n = 2, maxDf = 2)
     w2.write.mode("append").parquet(src)
-    Main.runIncrementalBoilerplate(spark, src, root, n = 2, maxDf = 2)
+    Incremental.runIncrementalBoilerplate(spark, src, root, n = 2, maxDf = 2)
     val got = spark.read.parquet(s"$root/clean")
       .select("doc_id", "clean_text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -718,7 +719,7 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(twin == Map(10L -> "c d", 11L -> "", 12L -> "e", 13L -> "f"))
     // a RETRY of batch 1 (its counts already landed) must not see itself
-    Main.mergeBoilerplateBatch(w2, 1L, root, 2, 2)
+    Incremental.mergeBoilerplateBatch(w2, 1L, root, 2, 2)
     val retried = spark.read.parquet(s"$root/clean")
       .select("doc_id", "clean_text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -736,9 +737,9 @@ class PipelineSpec extends SparkSpec {
     val w2 = Seq(doc(3L, "a b c d e f g h", "en"), doc(4L, "c", "de"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     w1.write.mode("append").parquet(src)
-    Main.runIncrementalQualityModel(spark, src, root, iters = 2)
+    Incremental.runIncrementalQualityModel(spark, src, root, iters = 2)
     w2.write.mode("append").parquet(src)
-    Main.runIncrementalQualityModel(spark, src, root, iters = 2)
+    Incremental.runIncrementalQualityModel(spark, src, root, iters = 2)
     def weights(df: org.apache.spark.sql.DataFrame) = df
       .select("w0", "w1", "w2", "w3").collect().map(r =>
         (0 to 3).map(j => r.getDecimal(j)).toSeq).toSeq
@@ -752,7 +753,7 @@ class PipelineSpec extends SparkSpec {
     val cold = graft.operators.TextAnalysis.logisticQualityModel(w2, 2)
     assert(weights(latest) != weights(cold), "wave-2 model ignored wave 1")
     // a RETRY of batch 1 must re-derive the same model (not see itself)
-    Main.mergeQualityModelBatch(w2, 1L, root, 2)
+    Incremental.mergeQualityModelBatch(w2, 1L, root, 2)
     val retried = spark.read.parquet(s"$root/model")
       .filter(col("batch") === 1).drop("batch")
     assert(weights(retried) == weights(twin), "retry diverged")
@@ -768,9 +769,9 @@ class PipelineSpec extends SparkSpec {
     val w2 = (21L to 30L).map(i => doc(i, ("t " * 25).trim))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     w1.write.mode("append").parquet(src)
-    Main.runIncrementalPsi(spark, src, root, buckets = 4)
+    Incremental.runIncrementalPsi(spark, src, root, buckets = 4)
     w2.write.mode("append").parquet(src)
-    Main.runIncrementalPsi(spark, src, root, buckets = 4)
+    Incremental.runIncrementalPsi(spark, src, root, buckets = 4)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("bucket", "p_old", "p_new", "psi_term").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
@@ -784,10 +785,10 @@ class PipelineSpec extends SparkSpec {
     // w2 is all long docs: the top bucket over-represents
     assert(got.last._3 > got.last._2)
     // a RETRY of the drift batch reproduces itself
-    Main.mergePsiBatch(w2, 1L, root, 4)
+    Incremental.mergePsiBatch(w2, 1L, root, 4)
     assert(rows(spark.read.parquet(s"$root/drift")) == twin, "retry diverged")
     // a RETRY of the BASELINE batch must re-establish, not self-drift
-    Main.mergePsiBatch(w1, 0L, root, 4)
+    Incremental.mergePsiBatch(w1, 0L, root, 4)
     val base = spark.read.parquet(s"$root/psi_baseline")
     assert(base.count() == 4, "baseline retry corrupted the artifact")
   }
@@ -799,9 +800,9 @@ class PipelineSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_kmv_out").toString
     val docs = Tables(spark, sf("sf0.01"), "documents")
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalKmv(spark, src, root, n = 3, k = 32)
+    Incremental.runIncrementalKmv(spark, src, root, n = 3, k = 32)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalKmv(spark, src, root, n = 3, k = 32)
+    Incremental.runIncrementalKmv(spark, src, root, n = 3, k = 32)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val streamed = rows(spark.read.parquet(s"$root/estimates"))
@@ -809,7 +810,7 @@ class PipelineSpec extends SparkSpec {
     val batch = rows(graft.operators.Dedup.kmvEstimates(docs, col("source"), 3, 32))
     assert(streamed == batch, "incremental KMV diverged from the full-corpus sketch")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeKmvBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 3, 32)
+    Incremental.mergeKmvBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 3, 32)
     assert(rows(spark.read.parquet(s"$root/estimates")) == streamed,
       "retry changed the published estimates")
   }
@@ -824,9 +825,9 @@ class PipelineSpec extends SparkSpec {
     val cut = events.agg(expr("percentile(unix_micros(ts), 0.5)"))
       .collect().head.getDouble(0).toLong
     events.filter(unix_micros(col("ts")) <= cut).write.mode("append").parquet(src)
-    Main.runIncrementalTransitions(spark, src, root)
+    Incremental.runIncrementalTransitions(spark, src, root)
     events.filter(unix_micros(col("ts")) > cut).write.mode("append").parquet(src)
-    Main.runIncrementalTransitions(spark, src, root)
+    Incremental.runIncrementalTransitions(spark, src, root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val streamed = rows(spark.read.parquet(s"$root/transitions"))
@@ -834,7 +835,7 @@ class PipelineSpec extends SparkSpec {
       col("user_id"), Seq(col("ts"), col("event_id")), col("event_type")))
     assert(streamed == batch, "incremental transitions diverged from the batch pass")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeTransitionsBatch(events.filter(unix_micros(col("ts")) > cut), 1L, root)
+    Incremental.mergeTransitionsBatch(events.filter(unix_micros(col("ts")) > cut), 1L, root)
     assert(rows(spark.read.parquet(s"$root/transitions")) == streamed,
       "retry changed the published transitions")
   }
@@ -850,9 +851,9 @@ class PipelineSpec extends SparkSpec {
     base.write.mode("overwrite").parquet(baseDir)
     // two waves; digests are additive so any split works
     batchAll.filter(col("vec_id") < 250).write.mode("append").parquet(src)
-    Main.runIncrementalCentroidDrift(spark, src, root, baseDir)
+    Incremental.runIncrementalCentroidDrift(spark, src, root, baseDir)
     batchAll.filter(col("vec_id") >= 250).write.mode("append").parquet(src)
-    Main.runIncrementalCentroidDrift(spark, src, root, baseDir)
+    Incremental.runIncrementalCentroidDrift(spark, src, root, baseDir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       r.getLong(0) -> ((r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
@@ -865,7 +866,7 @@ class PipelineSpec extends SparkSpec {
       graft.operators.Similarity.centroidsOf(base, col("vec_id") < 32)))
     assert(streamed == batch, "incremental centroid drift diverged from the batch monitor")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeCentroidDriftBatch(batchAll.filter(col("vec_id") >= 250), 1L, root, baseDir, 32)
+    Incremental.mergeCentroidDriftBatch(batchAll.filter(col("vec_id") >= 250), 1L, root, baseDir, 32)
     assert(rows(spark.read.parquet(s"$root/drift")) == streamed,
       "retry changed the published drift")
   }
@@ -879,9 +880,9 @@ class PipelineSpec extends SparkSpec {
     // counts are additive, so a parity split folds exactly; the fit must
     // re-derive from the FOLDED counts (ranks shift between waves)
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalZipf(spark, src, root, topV = 50)
+    Incremental.runIncrementalZipf(spark, src, root, topV = 50)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalZipf(spark, src, root, topV = 50)
+    Incremental.runIncrementalZipf(spark, src, root, topV = 50)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))
     }.toMap
@@ -889,7 +890,7 @@ class PipelineSpec extends SparkSpec {
     val batch = rows(graft.operators.TextAnalysis.zipfSlope(docs, topV = 50))
     assert(streamed == batch, "incremental Zipf fit diverged from the batch fit")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeZipfBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 50)
+    Incremental.mergeZipfBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 50)
     assert(rows(spark.read.parquet(s"$root/zipf")) == streamed,
       "retry changed the published fit")
   }
@@ -902,9 +903,9 @@ class PipelineSpec extends SparkSpec {
     val events = Tables(spark, sf("sf0.01"), "events")
     // (user, type) counts are additive: any split folds exactly
     events.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalUserEntropy(spark, src, root)
+    Incremental.runIncrementalUserEntropy(spark, src, root)
     events.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalUserEntropy(spark, src, root)
+    Incremental.runIncrementalUserEntropy(spark, src, root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))
     }.toMap
@@ -913,7 +914,7 @@ class PipelineSpec extends SparkSpec {
       events.filter(col("user_id").isNotNull), col("user_id"), col("event_type")))
     assert(streamed == batch, "incremental user entropy diverged from the batch report")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeUserEntropyBatch(events.filter(col("event_id") % 2 === 1), 1L, root)
+    Incremental.mergeUserEntropyBatch(events.filter(col("event_id") % 2 === 1), 1L, root)
     assert(rows(spark.read.parquet(s"$root/user_entropy")) == streamed,
       "retry changed the published report")
   }
@@ -926,9 +927,9 @@ class PipelineSpec extends SparkSpec {
     // hash digests are additive: a parity split works, and exact-dup
     // pairs the split separates must still be flagged in the fold
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalSourceHealth(spark, src, root)
+    Incremental.runIncrementalSourceHealth(spark, src, root)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalSourceHealth(spark, src, root)
+    Incremental.runIncrementalSourceHealth(spark, src, root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4), r.getDouble(5), r.getDouble(6)))
@@ -937,7 +938,7 @@ class PipelineSpec extends SparkSpec {
     val batch = rows(graft.operators.TextAnalysis.sourceHealth(docs))
     assert(streamed == batch, "incremental source health diverged from the batch scorecard")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeSourceHealthBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root)
+    Incremental.mergeSourceHealthBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root)
     assert(rows(spark.read.parquet(s"$root/source_health")) == streamed,
       "retry changed the published scorecard")
   }
@@ -952,9 +953,9 @@ class PipelineSpec extends SparkSpec {
     val cut = events.agg(expr("percentile(unix_micros(ts), 0.5)"))
       .collect().head.getDouble(0).toLong
     events.filter(unix_micros(col("ts")) <= cut).write.mode("append").parquet(src)
-    Main.runIncrementalInterArrival(spark, src, root, burst)
+    Incremental.runIncrementalInterArrival(spark, src, root, burst)
     events.filter(unix_micros(col("ts")) > cut).write.mode("append").parquet(src)
-    Main.runIncrementalInterArrival(spark, src, root, burst)
+    Incremental.runIncrementalInterArrival(spark, src, root, burst)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       r.getLong(0) -> ((r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
@@ -971,7 +972,7 @@ class PipelineSpec extends SparkSpec {
       .select("key", "n_events", "min_gap_us", "max_gap_us", "mean_gap_us", "bursts"))
     assert(streamed == batch, "incremental inter-arrival diverged from the batch profile")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeInterArrivalBatch(events.filter(unix_micros(col("ts")) > cut), 1L, root, burst)
+    Incremental.mergeInterArrivalBatch(events.filter(unix_micros(col("ts")) > cut), 1L, root, burst)
     assert(rows(spark.read.parquet(s"$root/interarrival")
         .select("key", "n_events", "min_gap_us", "max_gap_us", "mean_gap_us", "bursts")) == streamed,
       "retry changed the published profile")
@@ -985,9 +986,9 @@ class PipelineSpec extends SparkSpec {
     // chunk-hash partials are additive: any split works, and a mirror in
     // a LATER wave must still collide with wave-1 chunk hashes
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalCdcIndex(spark, src, root, window = 8, mask = 64, maxChunk = 256)
+    Incremental.runIncrementalCdcIndex(spark, src, root, window = 8, mask = 64, maxChunk = 256)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalCdcIndex(spark, src, root, window = 8, mask = 64, maxChunk = 256)
+    Incremental.runIncrementalCdcIndex(spark, src, root, window = 8, mask = 64, maxChunk = 256)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     val streamed = rows(spark.read.parquet(s"$root/dup_stats"))
@@ -996,7 +997,7 @@ class PipelineSpec extends SparkSpec {
       window = 8, mask = 64, maxChunk = 256))
     assert(streamed == batch, "incremental CDC index diverged from the batch report")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeCdcIndexBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 8, 64, 256)
+    Incremental.mergeCdcIndexBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 8, 64, 256)
     assert(rows(spark.read.parquet(s"$root/dup_stats")) == streamed,
       "retry changed the published report")
   }
@@ -1008,9 +1009,9 @@ class PipelineSpec extends SparkSpec {
     val events = Tables(spark, sf("sf0.01"), "events")
     // count partials are additive, so ANY split works (no time contract)
     events.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalHeavyKeys(spark, src, root, k = 10)
+    Incremental.runIncrementalHeavyKeys(spark, src, root, k = 10)
     events.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalHeavyKeys(spark, src, root, k = 10)
+    Incremental.runIncrementalHeavyKeys(spark, src, root, k = 10)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (if (r.isNullAt(0)) -1L else r.getLong(0)) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
@@ -1019,7 +1020,7 @@ class PipelineSpec extends SparkSpec {
       events, col("user_id"), k = 10))
     assert(streamed == batch, "incremental heavy keys diverged from the batch report")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeHeavyKeysBatch(events.filter(col("event_id") % 2 === 1), 1L, root, 10)
+    Incremental.mergeHeavyKeysBatch(events.filter(col("event_id") % 2 === 1), 1L, root, 10)
     assert(rows(spark.read.parquet(s"$root/heavy_keys")) == streamed,
       "retry changed the published report")
   }
@@ -1031,9 +1032,9 @@ class PipelineSpec extends SparkSpec {
     val events = Tables(spark, sf("sf0.1"), "events")
     // counts are additive, so a split straddling users is fine
     events.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalProfileTwins(spark, src, root)
+    Incremental.runIncrementalProfileTwins(spark, src, root)
     events.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalProfileTwins(spark, src, root)
+    Incremental.runIncrementalProfileTwins(spark, src, root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
@@ -1044,7 +1045,7 @@ class PipelineSpec extends SparkSpec {
     assert(batch.nonEmpty, "sf0.1 fixture must produce twin groups")
     assert(streamed == batch, "incremental profile twins diverged from the batch report")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeProfileTwinsBatch(events.filter(col("event_id") % 2 === 1), 1L, root)
+    Incremental.mergeProfileTwinsBatch(events.filter(col("event_id") % 2 === 1), 1L, root)
     assert(rows(spark.read.parquet(s"$root/profile_twins")) == streamed,
       "retry changed the published report")
   }
@@ -1055,9 +1056,9 @@ class PipelineSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_hp_out").toString
     val events = Tables(spark, sf("sf0.01"), "events")
     events.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalHourProfile(spark, src, root)
+    Incremental.runIncrementalHourProfile(spark, src, root)
     events.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalHourProfile(spark, src, root)
+    Incremental.runIncrementalHourProfile(spark, src, root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5))))
@@ -1067,7 +1068,7 @@ class PipelineSpec extends SparkSpec {
       events, col("event_type"), col("ts")))
     assert(batch.nonEmpty && streamed == batch,
       "incremental hour profile diverged from the batch report")
-    Main.mergeHourProfileBatch(events.filter(col("event_id") % 2 === 1), 1L, root)
+    Incremental.mergeHourProfileBatch(events.filter(col("event_id") % 2 === 1), 1L, root)
     assert(rows(spark.read.parquet(s"$root/hour_profile")) == streamed,
       "retry changed the published report")
   }
@@ -1078,22 +1079,22 @@ class PipelineSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_hu_out").toString
     val docs = Tables(spark, sf("sf0.01"), "documents")
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalHashUniformity(spark, src, root, buckets = 16)
+    Incremental.runIncrementalHashUniformity(spark, src, root, buckets = 16)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalHashUniformity(spark, src, root, buckets = 16)
+    Incremental.runIncrementalHashUniformity(spark, src, root, buckets = 16)
     def row(df: org.apache.spark.sql.DataFrame) = df.collect()(0).toSeq
     val streamed = row(spark.read.parquet(s"$root/hash_uniformity"))
     val batch = row(graft.operators.Relational.hashUniformity(
       docs, col("doc_id"), buckets = 16))
     assert(streamed == batch, "incremental hash uniformity diverged from batch")
-    Main.mergeHashUniformityBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 16)
+    Incremental.mergeHashUniformityBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root, 16)
     assert(row(spark.read.parquet(s"$root/hash_uniformity")) == streamed,
       "retry changed the published report")
     // ROUND 9: buckets parameterizes the partials' SHAPE, so partials
     // live under counts_b<buckets>/ — a rerun with different buckets
     // must fold only its own partials, not mix b16 occupancies into a
     // silently wrong chi²
-    Main.mergeHashUniformityBatch(docs, 2L, root, 8)
+    Incremental.mergeHashUniformityBatch(docs, 2L, root, 8)
     assert(row(spark.read.parquet(s"$root/hash_uniformity")) ==
       row(graft.operators.Relational.hashUniformity(docs, col("doc_id"), buckets = 8)),
       "a buckets=8 rerun folded the buckets=16 partials")
@@ -1105,9 +1106,9 @@ class PipelineSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_fd_out").toString
     val docs = Tables(spark, sf("sf0.01"), "documents")
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalFdAudit(spark, src, root)
+    Incremental.runIncrementalFdAudit(spark, src, root)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalFdAudit(spark, src, root)
+    Incremental.runIncrementalFdAudit(spark, src, root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4), r.getBoolean(5))))
@@ -1117,7 +1118,7 @@ class PipelineSpec extends SparkSpec {
       docs, col("source"), col("lang")))
     assert(batch.nonEmpty && streamed == batch,
       "incremental FD audit diverged from the batch audit")
-    Main.mergeFdAuditBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root)
+    Incremental.mergeFdAuditBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root)
     assert(rows(spark.read.parquet(s"$root/fd_audit")) == streamed,
       "retry changed the published report")
   }
@@ -1128,9 +1129,9 @@ class PipelineSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_kl_out").toString
     val docs = Tables(spark, sf("sf0.01"), "documents")
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    Main.runIncrementalSourceKl(spark, src, root)
+    Incremental.runIncrementalSourceKl(spark, src, root)
     docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    Main.runIncrementalSourceKl(spark, src, root)
+    Incremental.runIncrementalSourceKl(spark, src, root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     val streamed = rows(spark.read.parquet(s"$root/kl"))
@@ -1138,7 +1139,7 @@ class PipelineSpec extends SparkSpec {
     val batch = rows(graft.operators.TextAnalysis.sourceDivergence(docs))
     assert(streamed == batch, "incremental KL diverged from the batch pass")
     // a RETRY of the last batch (same id, same data) must change nothing
-    Main.mergeSourceKlBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root)
+    Incremental.mergeSourceKlBatch(docs.filter(col("doc_id") % 2 === 1), 1L, root)
     assert(rows(spark.read.parquet(s"$root/kl")) == streamed,
       "retry changed the published divergences")
   }
@@ -1152,10 +1153,10 @@ class PipelineSpec extends SparkSpec {
     def labels() = graft.sinks.SnapshotStore.read(spark, s"$root/labels").get
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     w1.write.mode("append").parquet(src)
-    Main.runIncrementalCC(spark, src, root)
+    Incremental.runIncrementalCC(spark, src, root)
     assert(labels() == Map(2L -> 2L, 3L -> 2L, 5L -> 5L, 6L -> 5L))
     w2.write.mode("append").parquet(src)
-    Main.runIncrementalCC(spark, src, root)
+    Incremental.runIncrementalCC(spark, src, root)
     val merged = labels()
     val none = Seq.empty[(Long, Long)].toDF("id", "lbl")
     val full = graft.operators.Dedup
@@ -1163,7 +1164,7 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(merged == full, "incremental labels diverged from the full graph")
     // a RETRY (re-merging already-contracted pairs) is a no-op
-    Main.mergeCcBatch(w2, root, maxIters = 10)
+    Incremental.mergeCcBatch(w2, root, maxIters = 10)
     assert(labels() == merged, "retry changed the labels")
   }
 
