@@ -6,13 +6,11 @@ import java.nio.file.Files
   * shape costs as history accumulates: a ~150-day window of daily runs
   * merged into a growing master (alas_dataflow_1 DOC:6, APP:142-143).
   * `PipelineSpec` proves the 2-day upsert is CORRECT; this main measures
-  * whether day N is ACCIDENTALLY O(history): it loops [[Main.run]] (or
-  * the [[Main.runDailySnapshot]] A/B-snapshot variant) over `days`
-  * generated days at the typical 6k-order volume and logs per-day wall
-  * seconds plus the master row count — a flat curve means per-day cost
-  * is delta-driven; growth must be explainable by the one full-outer
-  * history shuffle Q2 deliberately pays on a plain-parquet layout (the
-  * S9 bucketed layout is the documented fix at production scale).
+  * whether day N is ACCIDENTALLY O(history): it loops a daily shape
+  * over `days` generated days at the typical 6k-order volume and logs
+  * per-day wall seconds plus the master row count — a flat curve means
+  * per-day cost is delta-driven; growth must be explainable by the one
+  * full-outer history shuffle the chained shape deliberately pays.
   *
   * Day d re-delivers the last 20% of day d-1's order ids (overlapping
   * id ranges via [[PipelineFixture.write]]'s `idBase`), so Q2 exercises
@@ -26,22 +24,18 @@ import java.nio.file.Files
   * later merges — and diffs the replay against the day-N master exactly.
   *
   * Usage: runMain graft.BackfillBench [days=30] [ordersPerDay=6000]
-  *            [mode=run|snapshot|delta|delta_store|bucketed] [outRoot=tmp]
-  * `delta` loops [[Main.runDailyDelta]]: the partition-level merge into
-  * `outRoot/master_delta` (only today's affected partitions rewrite) —
-  * the write-shape that removes the `run` mode's measured
-  * 22.5 µs/history-row/day; verify with
-  * `check_backfill.py <outRoot> <outRoot>/master_delta`.
-  * `delta_store` loops [[Main.runDailyDeltaStore]]: the SAME delta
-  * write volume but transactional (PartitionStore per-partition A/B +
-  * one atomic manifest commit per day); the final store is exported to
+  *            [mode=run|delta_store] [outRoot=tmp]
+  * `run` loops [[Main.run]] with the previous day's master as history
+  * (the chained full-history merge, which re-writes all of history
+  * daily: the measured 22.5 µs/history-row/day); verify with
+  * `check_backfill.py <outRoot>`. `delta_store` loops
+  * [[Main.runDailyDeltaStore]]: the day upserts into the
+  * [[graft.sinks.PartitionStore]] under `outRoot/master_store`, so only
+  * today's affected partitions rewrite, with one atomic manifest commit
+  * per day; the final store is exported to
   * `outRoot/master_store_export` (day-partitioned parquet) so the same
-  * DuckDB replay verifies it. `bucketed` loops
-  * [[Main.runDailyDeltaBucketed]] into the `graft_backfill_master`
-  * catalog table (day-partitioned + key-bucketed, warehouse under
-  * outRoot): the mode that measures whether the probe's key-range
-  * pregate keeps per-day cost flat as history grows; verify with
-  * `check_backfill.py <outRoot> <outRoot>/warehouse/graft_backfill_master`.
+  * DuckDB replay verifies it:
+  * `check_backfill.py <outRoot> <outRoot>/master_store_export`.
   * One JSON line per day on stdout (env header first, summary last) —
   * the same artifact discipline as [[Bench]]. Not part of the graded
   * contract; artifacts land in logs/.
@@ -54,16 +48,13 @@ object BackfillBench {
     val outRoot = if (args.length > 3) args(3)
                   else Files.createTempDirectory("graft_backfill").toString
     require(days > 0 && orders > 0, "days and orders must be positive")
-    require(Set("run", "snapshot", "delta", "delta_store", "bucketed",
-      "bucketed_store").contains(mode), s"bad mode: $mode")
+    require(Set("run", "delta_store").contains(mode), s"bad mode: $mode")
     val overlap = orders / 5
     val newPerDay = orders - overlap
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus)
       .config(graft.sources.Tables.nanosAsLongKey, "true")
-      // bucketed mode's catalog table lands under outRoot, not the cwd
-      .config("spark.sql.warehouse.dir", s"$outRoot/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.wireCheckpointDir(spark)
@@ -81,7 +72,7 @@ object BackfillBench {
     }
 
     val start = java.time.LocalDate.of(2024, 1, 15)
-    val masterRoot = s"$outRoot/master_snapshot"
+    val storeRoot = s"$outRoot/master_store"
     var prevMaster: Option[String] = None
     var total = 0.0
     val daySecs = new scala.collection.mutable.ArrayBuffer[Double](days)
@@ -92,33 +83,18 @@ object BackfillBench {
         idBase = d * newPerDay, startDay = day)
       val outDir = f"$outRoot/day_$d%02d"
       val t0 = System.nanoTime()
-      val report = mode match {
-        case "snapshot" => Main.runDailySnapshot(spark, inDir.toString, outDir, masterRoot)
-        case "delta" => Main.runDailyDelta(spark, inDir.toString, outDir,
-          s"$outRoot/master_delta")
-        case "delta_store" => Main.runDailyDeltaStore(spark, inDir.toString,
-          outDir, s"$outRoot/master_store")
-        case "bucketed" => Main.runDailyDeltaBucketed(spark, inDir.toString,
-          outDir, "graft_backfill_master")
-        case "bucketed_store" => Main.runDailyDeltaBucketedStore(spark,
-          inDir.toString, outDir, s"$outRoot/master_bstore",
-          "graft_backfill_bstore")
-        case _ => Main.run(spark, inDir.toString, outDir, masterHistoryDir = prevMaster)
-      }
+      val report =
+        if (mode == "delta_store")
+          Main.runDailyDeltaStore(spark, inDir.toString, outDir, storeRoot)
+        else Main.run(spark, inDir.toString, outDir, masterHistoryDir = prevMaster)
       val secs = (System.nanoTime() - t0) / 1e9
       // row count from the parquet just written — footer metadata, no
-      // recompute; in the delta modes the merged master lives in ONE
+      // recompute; in delta_store the merged master lives in ONE
       // persistent place (the per-day outDir master is the day's own rows)
-      val masterRows = mode match {
-        case "delta" => spark.read.parquet(s"$outRoot/master_delta").count()
-        case "delta_store" => graft.sinks.PartitionStore
-          .read(spark, s"$outRoot/master_store").map(_.count()).getOrElse(0L)
-        case "bucketed" => spark.table("graft_backfill_master").count()
-        case "bucketed_store" => graft.sinks.BucketedStore.read(spark,
-          s"$outRoot/master_bstore", "graft_backfill_bstore")
-          .map(_.count()).getOrElse(0L)
-        case _ => spark.read.parquet(s"$outDir/delivery_order_master").count()
-      }
+      val masterRows =
+        if (mode == "delta_store") graft.sinks.PartitionStore
+          .read(spark, storeRoot).map(_.count()).getOrElse(0L)
+        else spark.read.parquet(s"$outDir/delivery_order_master").count()
       println(s"""{"metric":"backfill_day","day":$d,"date":"$day",""" +
         s""""orders":${report.orders},"master_rows":$masterRows,"secs":$secs}""")
       prevMaster = Some(s"$outDir/delivery_order_master")
@@ -141,14 +117,9 @@ object BackfillBench {
     // export the store's live side as plain day-partitioned parquet so
     // tools/check_backfill.py replays it like any other final master
     if (mode == "delta_store")
-      graft.sinks.PartitionStore.read(spark, s"$outRoot/master_store")
+      graft.sinks.PartitionStore.read(spark, storeRoot)
         .foreach(df => graft.sinks.TableSink.writeDayPartitioned(
           df, "ingest_date", s"$outRoot/master_store_export"))
-    if (mode == "bucketed_store")
-      graft.sinks.BucketedStore.read(spark, s"$outRoot/master_bstore",
-          "graft_backfill_bstore")
-        .foreach(df => graft.sinks.TableSink.writeDayPartitioned(
-          df, "ingest_date", s"$outRoot/master_bstore_export"))
     spark.stop()
   }
 }

@@ -96,15 +96,16 @@ object Main {
     // date-filtered scans prune at the directory level
     val sinkDay = OrderFlatten.toMasterSink(masterFinal).withColumn("ingest_date",
       graft.sinks.TableSink.santiagoDate(col("created_date").cast("timestamp")))
-    // Q2 against real history: one full-outer shuffle on the order id (at
-    // production scale the history side is bucketed on the key, S9, so
-    // only the daily delta shuffles). History is MATERIALIZED before the
-    // write: the sink below overwrites the master path, and a lazy read of
-    // the same path would either error ("cannot overwrite a path that is
-    // also being read from") or lose months of history. Plain parquet has
-    // no transactional overwrite, so production alternates A/B master dirs
-    // (or uses a transactional table format) — a mid-write crash must
-    // never be able to destroy the only copy.
+    // Q2 against real history: one full-outer shuffle on the order id
+    // that re-reads and re-writes the whole history every day. History is
+    // MATERIALIZED before the write: the sink below overwrites the master
+    // path, and a lazy read of the same path would either error ("cannot
+    // overwrite a path that is also being read from") or lose months of
+    // history. Plain parquet has no transactional overwrite, so a
+    // mid-write crash here can destroy the only copy; the persistent
+    // master belongs in [[runDailyDeltaStore]]'s PartitionStore, which
+    // rewrites only the touched day partitions and commits atomically.
+    // This chained shape is the full-history reference it is pinned to.
     val history = masterHistoryDir.map(h => Persist.cut(spark.read.parquet(h)))
     val sinkAll = history match {
       case Some(hdf) => graft.operators.Relational.upsert(hdf, sinkDay, "delivery_order_id")
@@ -139,28 +140,6 @@ object Main {
       () => sink(packages, "packages_temp"),
       () => sink(work, "delivery_order_work"),
       () => sink(visits, "delivery_order_visit_order")))
-
-    // S9 production layout, behind a flag (default off — the oracle
-    // contract and the sidecar read the parquet sinks above): ALSO land
-    // work + merged master as delivery_order_id-bucketed catalog tables
-    // (TableSink.writeBucketed), so the NEXT day's Q-chain joins and
-    // keyed aggregates over them run exchange-free — the "only the daily
-    // delta shuffles" claim, wired end-to-end instead of only plan-pinned
-    // (PlanSpec). The frames are RE-READ from the parquet just written,
-    // not re-derived: one scan + the one-time bucket shuffle, never a
-    // second Q-chain/merge recompute. Bucket count must stay FIXED across
-    // days (co-location requires equal bucket counts); size it once for
-    // the mature master, not today's delta.
-    if (spark.conf.get("spark.graft.sink.bucketed", "false").toBoolean) {
-      val buckets = spark.conf.get("spark.graft.sink.bucketed.buckets", "32").toInt
-      val prefix = spark.conf.get("spark.graft.sink.bucketed.prefix", "graft_daily")
-      graft.sinks.TableSink.writeBucketed(
-        spark.read.parquet(s"$outDir/delivery_order_work"),
-        s"${prefix}_work", "delivery_order_id", buckets)
-      graft.sinks.TableSink.writeBucketed(
-        spark.read.parquet(s"$outDir/delivery_order_master"),
-        s"${prefix}_master", "delivery_order_id", buckets)
-    }
 
     // Report counts come from the sink Observations above, complete once
     // the writes have returned. `orders` is DAY-scoped like the
@@ -205,98 +184,22 @@ object Main {
     run(spark, rawDir, outDir, masterHistoryDir)
   }
 
-  /** The delta-only daily shape: run the day pipeline with NO history
-    * (its master sink is then exactly the day's own rows), and merge
-    * that day-only master into a PERSISTENT day-partitioned master via
-    * [[graft.sinks.TableSink.upsertDayPartitions]] — only the
-    * partitions today touches are rewritten, vs [[run]]'s
-    * `masterHistoryDir` chain which re-shuffles and re-writes the FULL
-    * history every day (the measured 22.5 µs/history-row/day of
-    * `logs/backfill_r12_90day.jsonl`). Same upsert law, spec-pinned
-    * equal to the chained full merge; measured flat by BackfillBench's
-    * `delta` mode. */
-  def runDailyDelta(spark: SparkSession, inDir: String, outDir: String,
-                    masterDir: String): RunReport = {
-    val report = run(spark, inDir, outDir, masterHistoryDir = None)
-    graft.sinks.TableSink.upsertDayPartitions(
-      spark.read.parquet(s"$outDir/delivery_order_master"), masterDir,
-      key = "delivery_order_id", dateCol = "ingest_date")
-    report
-  }
-
-  /** [[runDailyDelta]] over the S9 bucketed layout: the persistent
-    * master is a day-partitioned, delivery_order_id-bucketed catalog
-    * TABLE, so the delta's affected-dates probe and keep-side anti-join
-    * run exchange-free (PlanSpec pin) and the probe's read is pruned by
-    * the day-key range against the in-bucket sort order — the
-    * composition of [[graft.sinks.TableSink.writeBucketed]] with the
-    * partition-level delta that the round-12 verdict called for.
-    * Bucket count must stay FIXED across days (co-location requires
-    * equal counts). */
-  def runDailyDeltaBucketed(spark: SparkSession, inDir: String, outDir: String,
-                            table: String, buckets: Int = 8): RunReport = {
-    val report = run(spark, inDir, outDir, masterHistoryDir = None)
-    graft.sinks.TableSink.upsertDayPartitionsBucketed(
-      spark.read.parquet(s"$outDir/delivery_order_master"), table,
-      key = "delivery_order_id", dateCol = "ingest_date", buckets = buckets)
-    report
-  }
-
-  /** [[runDailyDelta]] made TRANSACTIONAL: the persistent master lives
-    * in a [[graft.sinks.PartitionStore]] (per-partition A/B rotation,
-    * one atomic manifest commit), so a crash at ANY point in the day's
-    * merge leaves readers on the previous complete master — closing the
-    * plain layout's documented overwrite-then-delete window while
-    * keeping the delta-only write volume (untouched partitions: zero
-    * I/O). Spec-pinned equal to the chained full-history merge
-    * (PipelineSpec); measured by BackfillBench's `delta_store` mode. */
+  /** The daily merge into the persistent master (Q2 at scale, SURVEY
+    * §7.4 "MERGE without Delta"): run the day pipeline with NO history
+    * (its master sink is then exactly the day's own rows) and upsert
+    * that into a [[graft.sinks.PartitionStore]] — only the day
+    * partitions today touches are rewritten (untouched partitions: zero
+    * I/O), onto idle sides committed by one atomic manifest rename, so a
+    * crash at ANY point in the merge leaves readers on the previous
+    * complete master. Spec-pinned equal to [[run]]'s chained
+    * full-history merge (PipelineSpec); measured by BackfillBench's
+    * `delta_store` mode. */
   def runDailyDeltaStore(spark: SparkSession, inDir: String, outDir: String,
                          masterRoot: String): RunReport = {
     val report = run(spark, inDir, outDir, masterHistoryDir = None)
     graft.sinks.PartitionStore.upsert(
       spark.read.parquet(s"$outDir/delivery_order_master"), masterRoot,
       key = "delivery_order_id", dateCol = "ingest_date")
-    report
-  }
-
-  /** The composition of [[runDailyDeltaBucketed]] and
-    * [[runDailyDeltaStore]]: the persistent master is a
-    * [[graft.sinks.BucketedStore]] — exchange-free probe/anti-join on
-    * the bucketed layout AND one atomic manifest commit per day, so a
-    * crash anywhere in the merge leaves readers on the previous
-    * complete master (the round-13 verdict's "one path with both"
-    * task). Measured by BackfillBench's `bucketed_store` mode. */
-  def runDailyDeltaBucketedStore(spark: SparkSession, inDir: String,
-                                 outDir: String, masterRoot: String,
-                                 table: String, buckets: Int = 8): RunReport = {
-    val report = run(spark, inDir, outDir, masterHistoryDir = None)
-    graft.sinks.BucketedStore.upsert(
-      spark.read.parquet(s"$outDir/delivery_order_master"), masterRoot, table,
-      key = "delivery_order_id", dateCol = "ingest_date", buckets = buckets)
-    report
-  }
-
-  /** The crash-safe daily loop: [[run]] with the master history held in a
-    * [[graft.sinks.SnapshotStore]] A/B rotation instead of a
-    * caller-managed directory. Each day reads history from the CURRENT
-    * snapshot side, merges (Q2), writes the day's deliverables under
-    * `outDir` as usual, then promotes the merged master onto the OTHER
-    * side and atomically flips the pointer — so the history being read is
-    * never the path being rewritten, and a crash at ANY point leaves a
-    * complete, pointed-to master (the property the in-place layout only
-    * achieves under eager-materialization discipline; here it holds
-    * structurally). The promotion re-writes the merged master once more
-    * (sequential parquet I/O); a production deployment on a
-    * transactional table format would replace the whole rotation with
-    * MERGE, as documented at the history write in [[run]]. */
-  def runDailySnapshot(spark: SparkSession, inDir: String, outDir: String,
-                       masterRoot: String): RunReport = {
-    val history = graft.sinks.SnapshotStore.currentSide(spark, masterRoot)
-      .map(s => s"$masterRoot/$s")
-    val report = run(spark, inDir, outDir, masterHistoryDir = history)
-    graft.sinks.SnapshotStore.swapWrite(
-      spark.read.parquet(s"$outDir/delivery_order_master"), masterRoot,
-      partitionBy = Seq("ingest_date"))
     report
   }
 

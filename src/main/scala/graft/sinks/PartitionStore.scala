@@ -4,15 +4,15 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Partition-level A/B rotation with ONE atomic manifest commit — the
-  * transactional twin of [[TableSink.upsertDayPartitions]]. That
-  * function's header documents its gap: a plain dynamic-partition
-  * overwrite is a non-transactional swap, so a crash between the
-  * overwrite and the emptied-partition delete leaves stale partitions
-  * readable. [[SnapshotStore]] already solves atomicity for a WHOLE
-  * table (write idle side, flip `_current`), but paying a full-snapshot
-  * rewrite per day is exactly the O(history) write volume the delta
-  * upsert exists to avoid. This store composes the two ideas:
+/** The persistent day-partitioned master (Q2 at scale, SURVEY §7.4
+  * "MERGE without Delta"): partition-level A/B rotation with ONE atomic
+  * manifest commit. A plain dynamic-partition overwrite is a
+  * non-transactional swap — a crash between the overwrite and the
+  * emptied-partition delete leaves stale partitions readable.
+  * [[SnapshotStore]] solves atomicity for a WHOLE table (write idle
+  * side, flip `_current`), but paying a full-snapshot rewrite per day
+  * is exactly the O(history) write volume a delta upsert exists to
+  * avoid. This store composes the two ideas:
   *
   *   - every day-partition gets its OWN A/B pair
   *     (`root/<date>/A`, `root/<date>/B`),
@@ -40,27 +40,26 @@ import org.apache.spark.sql.functions._
   *
   * Manifest format v2 (v1 = bare `dir\tside` lines, still read):
   * {{{
-  *   #graft⇥v=2⇥epoch=12⇥sides=3[⇥dateCol=d⇥key=id⇥buckets=8]
+  *   #graft⇥v=2⇥epoch=12⇥sides=3
   *   <partition-dir>⇥<side>          (one per live partition)
   *   #tomb⇥<partition-dir>⇥<epoch>   (one per emptied-not-yet-vacuumed)
   * }}}
   * The header makes the store SELF-DESCRIBING: `sides` is the layout's
   * own retention setting (round-14 advice — a later caller defaulting
   * to 2 on a sides=3 store would silently shorten the rotation cycle
-  * and break the reader window), `epoch` counts commits (the tombstone
-  * clock), and [[BucketedStore]] adds its layout params. Resolution
+  * and break the reader window) and `epoch` counts commits (the
+  * tombstone clock); unknown header keys are carried through. Resolution
   * precedence everywhere: explicit arg > persisted manifest value >
   * session conf ([[sidesKey]]) > default 2 — the conf seeds NEW stores;
   * changing an EXISTING store's cycle requires the explicit arg (a
   * deliberate grow/shrink, persisted on that commit).
   *
-  * The upsert law is identical to [[graft.operators.Relational.upsert]]
-  * / [[TableSink.upsertDayPartitions]]: update rows win wholesale,
-  * unmatched history survives (spec-pinned equal to the chained
-  * full-history merge). NULL `dateCol` values are first-class: they
-  * live under the `__HIVE_DEFAULT_PARTITION__` directory name (the
-  * same sentinel Spark's partitioned writes use) and obey the law like
-  * any other partition.
+  * The upsert law is identical to [[graft.operators.Relational.upsert]]:
+  * update rows win wholesale, unmatched history survives (spec-pinned
+  * equal to the chained full-history merge). NULL `dateCol` values are
+  * first-class: they live under the `__HIVE_DEFAULT_PARTITION__`
+  * directory name (the same sentinel Spark's partitioned writes use)
+  * and obey the law like any other partition.
   *
   * Reader contract (same as [[SnapshotStore]]): a reader holds the
   * manifest current when it planned, so with the default `sides = 2`
@@ -95,16 +94,16 @@ object PartitionStore {
     * keep side, and let a stale row survive as a duplicate key — the
     * round-13 advice finding. (Escaping also means an entry line can
     * never begin with the `#` that marks v2 metadata lines.) */
-  def dirName(v: Any): String =
+  private def dirName(v: Any): String =
     if (v == null) "__HIVE_DEFAULT_PARTITION__"
     else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .escapePathName(v.toString)
 
   /** Side names in rotation order: A, B, C, … (`sides ≤ 26` is plenty —
     * each extra side is a full extra copy of every partition's data). */
-  def sideName(i: Int): String = ('A' + i).toChar.toString
-  private[sinks] def resolveSides(spark: SparkSession, sides: Int,
-                                  persisted: Option[Int]): Int = {
+  private def sideName(i: Int): String = ('A' + i).toChar.toString
+  private def resolveSides(spark: SparkSession, sides: Int,
+                           persisted: Option[Int]): Int = {
     val n = if (sides > 0) sides
             else persisted.getOrElse(spark.conf.get(sidesKey, "2").toInt)
     require(n >= 2 && n <= 26, s"sides must be in [2, 26]: $n")
@@ -132,7 +131,7 @@ object PartitionStore {
       * one (v2). */
     def sides: Option[Int] = meta.get("sides").map(_.toInt)
   }
-  private[sinks] val emptyState =
+  private val emptyState =
     ManifestState(Map.empty, Map.empty, Map.empty)
 
   private def parseManifest(text: String): ManifestState = {
@@ -261,10 +260,8 @@ object PartitionStore {
     * KEY-SORTED, row-group min/max stats satisfy the pushed range
     * filter and the probe READS only the key range today touches —
     * the store's only O(history) access, made ~flat under a
-    * rolling-window key pattern (the same trick, same plan pin
-    * discipline as [[TableSink.bucketedDeltaPlan]], here on the
-    * transactional layout). Exposed for the PlanSpec-style pushdown
-    * pin in PartitionStoreSpec. */
+    * rolling-window key pattern. Exposed for the pushdown pin in
+    * PartitionStoreSpec. */
   def affectedDatesProbe(hist: DataFrame, day: DataFrame,
                          key: String, dateCol: String): DataFrame = {
     val ids = day.select(col(key)).distinct()
@@ -277,11 +274,6 @@ object PartitionStore {
       .join(broadcast(ids), Seq(key)).select(col(dateCol))
   }
 
-  /** Stage a day's partition-level delta upsert (see object doc for the
-    * law). All Spark jobs — the affected-dates probe and the staged
-    * write — run here, reading only LIVE sides and writing only the
-    * stage directory and idle sides; the returned [[Staged.commit]] is
-    * pure metadata. */
   /** The deployment-level retention knob: sides per partition (2 = A/B,
     * the default; N lets a reader survive N-1 concurrent rotations).
     * Seeds NEW stores and v1-era stores only — a v2 store persists its
@@ -291,8 +283,12 @@ object PartitionStore {
     * grow/shrink an existing store. */
   val sidesKey = "spark.graft.store.sides"
 
-  /** `sides = 0` (the default) resolves the persisted manifest setting,
-    * then the session conf [[sidesKey]]. */
+  /** Stage a day's partition-level delta upsert (see object doc for the
+    * law). All Spark jobs — the affected-dates probe and the staged
+    * write — run here, reading only LIVE sides and writing only the
+    * stage directory and idle sides; the returned [[Staged.commit]] is
+    * pure metadata. `sides = 0` (the default) resolves the persisted
+    * manifest setting, then the session conf [[sidesKey]]. */
   def stageUpsert(dayRows: DataFrame, root: String,
                   key: String, dateCol: String, sides: Int = 0): Staged = {
     val spark = dayRows.sparkSession

@@ -18,8 +18,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and local FS). A crash mid-write leaves the pointer on the old, intact
   * snapshot; a crash between write and flip loses only the flip (the new
   * snapshot is orphaned until the next write overwrites that side). At no
-  * point can the ONLY copy be mid-rewrite — the invariant the daily
-  * master merge and the streaming merge sink both need.
+  * point can the ONLY copy be mid-rewrite — the invariant the streaming
+  * merge sinks and the persisted similarity codebook need. (The daily
+  * master is day-partitioned and lives in [[PartitionStore]], which
+  * rotates per partition instead of rewriting the whole table.)
   *
   * Reader contract: a reader holds the side that was current when it
   * planned its scan, so it survives ONE concurrent swapWrite (which
@@ -51,9 +53,9 @@ object SnapshotStore {
 
   /** Compact the live snapshot into ~`targetBytes` parquet files — the
     * small-files answer for a store that incremental runners append to
-    * in per-batch dribs (every AvailableNow pass, every daily merge adds
-    * a file set; a year of 100 MB days is 10⁵+ files whose footer reads
-    * and task-per-file scheduling dominate scan cost long before data
+    * in per-batch dribs (every AvailableNow pass adds a file set; a
+    * year of 100 MB days is 10⁵+ files whose footer reads and
+    * task-per-file scheduling dominate scan cost long before data
     * volume does). The rewrite rides the SAME A/B rotation as any other
     * write: read the current side, coalesce to ceil(bytes/target) files,
     * [[swapWrite]] the other side and flip — readers planned against the

@@ -36,189 +36,6 @@ object TableSink {
       .format(format)
       .save(path)
 
-  /** Partition-level delta upsert into a day-partitioned master — the
-    * delta-only write path the 90-day backfill audit showed plain
-    * parquet needs: the chained full-history merge rewrites EVERY
-    * partition every day (measured 22.5 µs per history row per day),
-    * while a day's upsert only ever CHANGES the partitions holding
-    * today's rows and the old rows today re-delivers. This rewrites
-    * exactly those:
-    *
-    *   1. affected dates = `day`'s own dates ∪ the dates of history
-    *      rows whose key today updates (one column-pruned (key, date)
-    *      scan of the master + a broadcast join against today's keys —
-    *      the only O(history) READ left, and it reads two columns, not
-    *      rows; a key-bucketed layout or table-format index removes
-    *      even that);
-    *   2. keep = affected partitions' rows minus updated keys
-    *      (partition-pruned scan — `PartitionFilters`, not a full pass);
-    *   3. dynamic-partition-overwrite of keep ∪ day — untouched
-    *      partitions' files are never rewritten;
-    *   4. affected partitions that end up EMPTY (every row they held
-    *      was re-delivered under a new date) are deleted explicitly —
-    *      dynamic overwrite only replaces partitions present in the
-    *      output, so without this step their stale files would survive.
-    *
-    * Upsert law is identical to [[graft.operators.Relational.upsert]]:
-    * update rows win wholesale, unmatched history survives
-    * (spec-pinned equal to the chained full merge, PipelineSpec).
-    * Like every plain-parquet overwrite here, the swap is NOT
-    * transactional — production wants the SnapshotStore A/B rotation or
-    * a transactional table format around it; this is the WRITE-VOLUME
-    * shape, measured by BackfillBench's delta mode. */
-  def upsertDayPartitions(dayRows: DataFrame, masterDir: String,
-                          key: String, dateCol: String): Unit = {
-    val spark = dayRows.sparkSession
-    // materialized: the write below overwrites partitions the plan reads
-    val day = graft.Persist.cut(dayRows)
-    val masterPath = new org.apache.hadoop.fs.Path(masterDir)
-    val fs = masterPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // first day: no master yet (missing dir, or an existing-but-empty one)
-    if (!fs.exists(masterPath) || fs.listStatus(masterPath).isEmpty) {
-      day.write.mode(SaveMode.Overwrite).partitionBy(dateCol).parquet(masterDir)
-      return
-    }
-    val hist = spark.read.parquet(masterDir)
-    val ids = day.select(col(key)).distinct()
-    val affRaw = hist.join(broadcast(ids), key).select(col(dateCol))
-      .unionByName(day.select(col(dateCol)))
-      .distinct().collect().map(_.get(0)) // bounded: one row per affected DAY
-    // NULL dates are first-class: isin(null) never matches (three-valued
-    // logic), so a null-date partition would silently escape the rewrite
-    // and a re-delivered key's old row would survive as a duplicate (the
-    // round-12 advice finding). Spark's partitioned writes spell the null
-    // partition __HIVE_DEFAULT_PARTITION__; step 4 must too.
-    val affNonNull = affRaw.filter(_ != null)
-    def inAffected(c: org.apache.spark.sql.Column) = {
-      val base = if (affNonNull.nonEmpty) c.isin(affNonNull: _*) else lit(false)
-      if (affNonNull.length != affRaw.length) base || c.isNull else base
-    }
-    val keep = hist.filter(inAffected(col(dateCol)))
-      .join(broadcast(ids), Seq(key), "left_anti")
-    // Persist.cut because the write below overwrites partitions the plan
-    // reads. CLUSTER CAVEAT: the default cut is localCheckpoint, whose
-    // blocks are non-reliable — losing an executor mid-overwrite
-    // recomputes from lineage, which now reads the half-overwritten
-    // master (invisible on local[n]). Production runs set
-    // spark.graft.persist.mode=reliable (df.checkpoint to the wired
-    // checkpoint dir) or use [[PartitionStore]], whose staged sides
-    // never overlap what the plan reads.
-    val out = graft.Persist.cut(keep.unionByName(day))
-    out.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(dateCol).parquet(masterDir)
-    // step 4: drop affected partitions the output no longer carries —
-    // dir names spelled exactly as Spark's partitioned write escapes them
-    val outDates = out.select(col(dateCol)).distinct().collect()
-      .map(_.get(0)).toSet
-    affRaw.filterNot(outDates).foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$masterDir/$dateCol=${PartitionStore.dirName(d)}"), true)
-    }
-  }
-
-  /** [[upsertDayPartitions]] over the S9 BUCKETED layout — the
-    * composition the round-12 verdict called for: the master lives as a
-    * day-partitioned, `key`-bucketed+sorted catalog table
-    * ([[writeBucketed]]'s layout plus day partitions) and the day's
-    * rows land first in a small bucketed staging table
-    * (`<table>__day`), so the two O(history)-side joins of the delta —
-    * the affected-dates probe and the keep-side anti-join — are
-    * sort-merge joins with ZERO exchange (plan-pinned by PlanSpec with
-    * the broadcast escape hatch closed: the shape a 100 TB master
-    * forces). The probe additionally carries a day-key RANGE pregate
-    * (min/max of today's keys — a correct superset of the equi-join's
-    * match set in the same ordering): with in-bucket `sortBy(key)`
-    * files, parquet row-group min/max stats prune the probe's READ to
-    * the key range today actually touches, so under a rolling-window
-    * key pattern the probe cost stays ~flat as history grows
-    * (BackfillBench `bucketed` mode) where the plain variant's probe
-    * scans every history (key, date) daily.
-    *
-    * Affected partitions swap via a dynamic-partition-overwrite INSERT
-    * (only partitions present in the output rewrite — the session conf
-    * is set/restored here because `insertInto` ignores the writer-level
-    * option); emptied partitions drop via ALTER TABLE DROP PARTITION
-    * (metadata + data, managed table). Upsert law identical to the
-    * plain variant; same non-transactional caveat — [[PartitionStore]]
-    * is the transactional answer. `dateCol` must be NON-NULL
-    * throughout: checked on the day frame (typed DDL partition values
-    * have no null spelling), inductive for the table; the plain and
-    * [[PartitionStore]] variants handle null dates first-class. */
-  def upsertDayPartitionsBucketed(dayRows: DataFrame, table: String,
-                                  key: String, dateCol: String,
-                                  buckets: Int): Unit = {
-    val spark = dayRows.sparkSession
-    val day = graft.Persist.cut(dayRows)
-    require(day.filter(col(dateCol).isNull).isEmpty,
-      s"$dateCol must be non-null for the bucketed delta (see scaladoc)")
-    if (!spark.catalog.tableExists(table)) {
-      day.write.mode(SaveMode.Overwrite)
-        .partitionBy(dateCol).bucketBy(buckets, key).sortBy(key)
-        .saveAsTable(table)
-      return
-    }
-    val dayTable = s"${table}__day"
-    day.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(dayTable)
-    val (probe, keepOf) = bucketedDeltaPlan(spark, table, dayTable, key, dateCol)
-    val dayT = spark.table(dayTable)
-    val affDates = probe.unionByName(dayT.select(col(dateCol)))
-      .distinct().collect().map(_.get(0)) // bounded: one row per affected DAY
-    val keep = keepOf(col(dateCol).isin(affDates: _*))
-    val histCols = spark.table(table).columns.map(col)
-    // materialized: the insert below overwrites partitions the plan
-    // reads. Same cluster caveat as the plain variant: the default cut
-    // is a non-reliable localCheckpoint, so an executor lost mid-insert
-    // recomputes from lineage over the half-overwritten table — set
-    // spark.graft.persist.mode=reliable on a real cluster, or use
-    // [[BucketedStore]], which stages onto sides the plan never reads.
-    val out = graft.Persist.cut(
-      keep.select(histCols: _*).unionByName(dayT.select(histCols: _*)))
-    val owmKey = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(owmKey)
-    spark.conf.set(owmKey, "dynamic")
-    try out.write.mode(SaveMode.Overwrite).insertInto(table)
-    finally prior match {
-      case Some(v) => spark.conf.set(owmKey, v)
-      case None => spark.conf.unset(owmKey)
-    }
-    val outDates = out.select(col(dateCol)).distinct().collect()
-      .map(_.get(0)).toSet
-    // partition value quoted as a SQL string literal (backslash +
-    // single-quote escaped): the signature accepts any dateCol type, and
-    // an unescaped quote in a string-typed value would break the DDL —
-    // the round-13 advice finding
-    def sqlLit(d: Any) =
-      "'" + d.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    affDates.filterNot(outDates).foreach { d =>
-      spark.sql(
-        s"ALTER TABLE $table DROP IF EXISTS PARTITION ($dateCol=${sqlLit(d)})")
-    }
-  }
-
-  /** The bucketed delta's two O(history)-side frames — the
-    * affected-dates probe (day-key range pregate + bucketed equi-join,
-    * column-pruned to (key, dateCol)) and the keep-side anti-join
-    * builder — factored out so [[upsertDayPartitionsBucketed]] and
-    * PlanSpec's exchange-free pin run the SAME plans. */
-  def bucketedDeltaPlan(spark: org.apache.spark.sql.SparkSession,
-                        table: String, dayTable: String,
-                        key: String, dateCol: String)
-      : (DataFrame, org.apache.spark.sql.Column => DataFrame) = {
-    val hist = spark.table(table)
-    val ids = spark.table(dayTable).select(col(key)).distinct()
-    val mm = spark.table(dayTable).agg(min(col(key)), max(col(key))).head()
-    val pregate =
-      if (mm.isNullAt(0)) lit(false) // empty day: probe matches nothing
-      else col(key).between(lit(mm.get(0)), lit(mm.get(1)))
-    val probe = hist.select(col(key), col(dateCol)).filter(pregate)
-      .join(ids, Seq(key)).select(col(dateCol))
-    val keepOf = (inAffected: org.apache.spark.sql.Column) =>
-      hist.filter(inAffected).join(ids, Seq(key), "left_anti")
-    (probe, keepOf)
-  }
-
   /** Derive the Santiago-zone ingest date from a timestamp column —
     * the reference's day bucketing (app.py:125,138; SURVEY §7.4). */
   def santiagoDate(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -304,10 +121,11 @@ object TableSink {
     * re-run [[writeSorted]]/[[writeZOrder]], which subsume compaction.
     * The swap (write tmp → delete → rename) is the LOCAL/HDFS analogue
     * of a transactional replace; under concurrent readers use
-    * [[SnapshotStore.compact]] (A/B rotation — readers
-    * never see a half-swapped directory) or a manifest-tracking table
-    * format's rewrite-files commit — the compaction plan itself is
-    * identical. Returns the output file count. */
+    * [[SnapshotStore.compact]] (A/B rotation — readers never see a
+    * half-swapped directory), [[PartitionStore.compact]] for the daily
+    * master, or a manifest-tracking table format's rewrite-files
+    * commit — the compaction plan itself is identical. Returns the
+    * output file count. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")

@@ -24,11 +24,12 @@ import graft.operators.Relational
   * per events-derived update, and the report re-reading its sinks, it
   * ran 58.
   *
-  * At 100 TB the work/master frames live bucketed by delivery_order_id
-  * ([[graft.sinks.TableSink.writeBucketed]]) so every joinUpdate
-  * co-locates — PlanSpec pins the exchange-free physical plan over
-  * bucketed tables with broadcast disabled; at fixture scale AQE
-  * handles it.
+  * At 100 TB the work/master frames would live bucketed by
+  * delivery_order_id ([[graft.sinks.TableSink.writeBucketed]]) so every
+  * joinUpdate co-locates — PlanSpec pins the exchange-free physical plan
+  * over bucketed tables with broadcast disabled. The daily pipeline
+  * lands plain parquet: at the reference's volume (about 6 k orders a
+  * day, 20 k at peak) AQE handles the joins.
   */
 object WorkGraph {
 

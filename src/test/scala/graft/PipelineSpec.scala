@@ -178,58 +178,6 @@ class PipelineSpec extends SparkSpec {
     assert(by("ORD-4").getAs[String]("code") == "C-404")    // insert branch
   }
 
-  test("S9 bucketed flag: the daily pipeline lands work/master bucketed; next-day Q-chain replay is exchange-free") {
-    // the production-layout switch wired end-to-end: with
-    // spark.graft.sink.bucketed=true the pipeline ALSO persists work +
-    // merged master via TableSink.writeBucketed (default off — the
-    // oracle surface is the parquet sinks, asserted identical here), and
-    // tomorrow's Q-chain reads them shuffle-free even with the broadcast
-    // hatch closed — PlanSpec's synthetic pin, now on the REAL pipeline
-    // outputs
-    val out = Files.createTempDirectory("graft_bkt_out").toString
-    spark.conf.set("spark.graft.sink.bucketed", "true")
-    spark.conf.set("spark.graft.sink.bucketed.buckets", "4")
-    spark.conf.set("spark.graft.sink.bucketed.prefix", "e2e_bkt")
-    try Main.run(spark, fixtures, out)
-    finally {
-      spark.conf.unset("spark.graft.sink.bucketed")
-      spark.conf.unset("spark.graft.sink.bucketed.buckets")
-      spark.conf.unset("spark.graft.sink.bucketed.prefix")
-    }
-    try {
-      val workT = spark.table("e2e_bkt_work")
-      val masterT = spark.table("e2e_bkt_master")
-      // parity with the oracle-surface parquet sinks (same rows, same ids)
-      val pq = spark.read.parquet(s"$out/delivery_order_work")
-      assert(workT.count() == pq.count() && workT.count() > 0)
-      assert(workT.select("delivery_order_id").collect().map(_.getString(0)).sorted
-        .sameElements(pq.select("delivery_order_id").collect().map(_.getString(0)).sorted))
-      assert(masterT.count() ==
-        spark.read.parquet(s"$out/delivery_order_master").count())
-      val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-      val prior = spark.conf.get(thresholdKey)
-      spark.conf.set(thresholdKey, "-1")
-      try {
-        // Q19's joinUpdate (master <- work backfill) over the layout
-        val backfill = WorkGraph.masterVisitBackfill(masterT, workT)
-        backfill.collect()
-        val p = backfill.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        assert(!p.contains("Exchange"), s"bucketed Q19 replay shuffled:\n$p")
-        assert(p.contains("SortMergeJoin"), p)
-        // and the Q7 rollup shape rides the same layout shuffle-free
-        val agg = masterT.groupBy("delivery_order_id").agg(count(lit(1)).as("n"))
-        agg.collect()
-        val pa = agg.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        assert(!pa.contains("Exchange"), s"bucketed aggregate shuffled:\n$pa")
-      } finally spark.conf.set(thresholdKey, prior)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS e2e_bkt_work")
-      spark.sql("DROP TABLE IF EXISTS e2e_bkt_master")
-    }
-  }
-
   test("Q2 in-place: disk-mode history snapshot survives overwriting its own path") {
     // day 1 lands the master in `out`; day 2 merges INTO THE SAME PATH it
     // reads history from — the production in-place daily run. Under
@@ -256,35 +204,6 @@ class PipelineSpec extends SparkSpec {
     assert(by("ORD-1").getAs[String]("code") == "C-001") // unmatched history intact
     assert(by("ORD-3").getAs[String]("code") == "C-303") // day-2 update applied
     assert(by("ORD-4").getAs[String]("code") == "C-404") // day-2 insert applied
-  }
-
-  test("Q2 snapshot rotation: two daily runs merge through the store, pointer flips") {
-    import graft.sinks.SnapshotStore
-    val root = Files.createTempDirectory("graft_snaproot").toString
-    val out1 = Files.createTempDirectory("graft_snap_day1").toString
-    Main.runDailySnapshot(spark, fixtures, out1, root)
-    assert(SnapshotStore.currentSide(spark, root).contains("A"))
-    assert(SnapshotStore.read(spark, root).get.count() == 3) // day-1 orders
-    val in2 = Files.createTempDirectory("graft_snap_day2in")
-    val d = in2.resolve("2024-01-18")
-    Files.createDirectories(d)
-    Files.writeString(d.resolve("2024-01-18.json"),
-      """[{"delivery_order_id": "ORD-3", "code": "C-303", "recycling": false,
-        |  "created_date": "2024-01-18T10:00:00.000000"},
-        | {"delivery_order_id": "ORD-4", "code": "C-404",
-        |  "created_date": "2024-01-18T11:00:00.000000"}]""".stripMargin)
-    val out2 = Files.createTempDirectory("graft_snap_day2").toString
-    Main.runDailySnapshot(spark, in2.toString, out2, root)
-    // history read from side A, merged master promoted onto side B
-    assert(SnapshotStore.currentSide(spark, root).contains("B"))
-    val m = SnapshotStore.read(spark, root).get
-    assert(m.count() == 4)
-    val by = m.collect().map(r => r.getAs[String]("delivery_order_id") -> r).toMap
-    assert(by("ORD-1").getAs[String]("code") == "C-001") // history intact
-    assert(by("ORD-3").getAs[String]("code") == "C-303") // update won
-    assert(by("ORD-4").getAs[String]("code") == "C-404") // insert landed
-    // the day layout survives the rotation (partitioned promotion)
-    assert(m.schema.fieldNames.contains("ingest_date"))
   }
 
   test("O1 scale: sink actions reuse the cached flatten/explode (no re-derivation)") {
@@ -528,83 +447,30 @@ class PipelineSpec extends SparkSpec {
     assert(rows(fin, 1, 240) == rows(master(0), 1, 240))
   }
 
-  test("runDailyDelta: the partition-level delta master equals the chained full-history merge") {
-    // same 3 overlapping fixture days through BOTH write shapes: the
-    // O(history)-rewrite chain (run + masterHistoryDir) and the
-    // delta-only partition merge (runDailyDelta) — identical final
-    // masters, row for row
-    val start = java.time.LocalDate.of(2024, 5, 6)
-    val orders = 200; val newPerDay = orders - orders / 5
-    val rootA = Files.createTempDirectory("graft_dchain").toString
-    val rootB = Files.createTempDirectory("graft_ddelta").toString
-    val deltaDir = s"$rootB/master_delta"
-    var prev: Option[String] = None
-    for (d <- 0 until 3) {
-      val in = Files.createTempDirectory(s"graft_ddelta_in_$d")
-      PipelineFixture.write(in, orders, days = 1, seed = 542L + d,
-        idBase = d * newPerDay, startDay = start.plusDays(d.toLong))
-      Main.run(spark, in.toString, s"$rootA/day_$d", masterHistoryDir = prev)
-      prev = Some(s"$rootA/day_$d/delivery_order_master")
-      Main.runDailyDelta(spark, in.toString, s"$rootB/day_$d", deltaDir)
-    }
-    def rows(p: String) = {
-      val df = spark.read.parquet(p)
-      df.select(df.columns.sorted.map(col): _*).collect()
-        .map(_.toString).sorted.toSeq
-    }
-    assert(rows(deltaDir) == rows(s"$rootA/day_2/delivery_order_master"))
-  }
-
-  test("runDailyDeltaStore + runDailyDeltaBucketed + runDailyDeltaBucketedStore equal the chained full-history merge") {
-    // the r13/r14 daily shapes — the transactional PartitionStore delta,
-    // the bucketed-catalog delta, and their r14 composition (the
-    // transactional BucketedStore) — through the same 3 overlapping
-    // fixture days as the chained O(history) merge: identical final
-    // masters, row for row
+  test("runDailyDeltaStore: the PartitionStore master equals the chained merge") {
+    // the daily delta shape — the transactional PartitionStore merge —
+    // through the same 3 overlapping fixture days as the chained
+    // O(history) merge: identical final masters, row for row
     val start = java.time.LocalDate.of(2024, 7, 1)
     val orders = 200; val newPerDay = orders - orders / 5
     val rootA = Files.createTempDirectory("graft_d3chain").toString
     val rootB = Files.createTempDirectory("graft_d3store").toString
-    val rootC = Files.createTempDirectory("graft_d3bkt").toString
-    val rootD = Files.createTempDirectory("graft_d3bstore").toString
     val storeRoot = s"$rootB/master_store"
-    val bstoreRoot = s"$rootD/master_bstore"
-    val table = "graft_pipe_bkt_master"
-    val btable = "graft_pipe_bstore_master"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}__day")
-    Seq("__a", "__b", "__day").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS $btable$x"))
-    try {
-      var prev: Option[String] = None
-      for (d <- 0 until 3) {
-        val in = Files.createTempDirectory(s"graft_d3_in_$d")
-        PipelineFixture.write(in, orders, days = 1, seed = 713L + d,
-          idBase = d * newPerDay, startDay = start.plusDays(d.toLong))
-        Main.run(spark, in.toString, s"$rootA/day_$d", masterHistoryDir = prev)
-        prev = Some(s"$rootA/day_$d/delivery_order_master")
-        Main.runDailyDeltaStore(spark, in.toString, s"$rootB/day_$d", storeRoot)
-        Main.runDailyDeltaBucketed(spark, in.toString, s"$rootC/day_$d", table, 4)
-        Main.runDailyDeltaBucketedStore(spark, in.toString, s"$rootD/day_$d",
-          bstoreRoot, btable, 4)
-      }
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select(df.columns.sorted.map(col): _*).collect()
-          .map(_.toString).sorted.toSeq
-      val chained = rows(spark.read.parquet(s"$rootA/day_2/delivery_order_master"))
-      assert(rows(graft.sinks.PartitionStore.read(spark, storeRoot).get) == chained,
-        "PartitionStore delta diverged from the chained merge")
-      assert(rows(spark.table(table)) == chained,
-        "bucketed-catalog delta diverged from the chained merge")
-      assert(rows(graft.sinks.BucketedStore.read(spark, bstoreRoot, btable).get)
-        == chained,
-        "transactional BucketedStore diverged from the chained merge")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__day")
-      Seq("__a", "__b", "__day").foreach(x =>
-        spark.sql(s"DROP TABLE IF EXISTS $btable$x"))
+    var prev: Option[String] = None
+    for (d <- 0 until 3) {
+      val in = Files.createTempDirectory(s"graft_d3_in_$d")
+      PipelineFixture.write(in, orders, days = 1, seed = 713L + d,
+        idBase = d * newPerDay, startDay = start.plusDays(d.toLong))
+      Main.run(spark, in.toString, s"$rootA/day_$d", masterHistoryDir = prev)
+      prev = Some(s"$rootA/day_$d/delivery_order_master")
+      Main.runDailyDeltaStore(spark, in.toString, s"$rootB/day_$d", storeRoot)
     }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(col): _*).collect()
+        .map(_.toString).sorted.toSeq
+    val chained = rows(spark.read.parquet(s"$rootA/day_2/delivery_order_master"))
+    assert(rows(graft.sinks.PartitionStore.read(spark, storeRoot).get) == chained,
+      "PartitionStore delta diverged from the chained merge")
   }
 
   test("persisted codebook: store-backed assign + search are identical to the inline derivation") {

@@ -795,123 +795,4 @@ class PlanSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS bkt_work")
     }
   }
-
-  test("Bucketed-master delta: the affected-dates probe and keep-side anti-join are EXCHANGE-FREE with the broadcast hatch closed") {
-    import org.apache.spark.sql.functions._
-    // the r12-verdict composition pin: upsertDayPartitionsBucketed's two
-    // O(history)-side joins must co-locate on the bucketed layout — at
-    // 100 TB neither side of the probe can shuffle (the master is the
-    // whole lake) nor broadcast (the day's keys frame is small, but the
-    // hatch is closed to prove the layout carries the plan on its own)
-    val n = 2000L
-    val master = spark.range(n).select(
-      concat(lit("ORD-"), format_string("%07d", col("id"))).as("delivery_order_id"),
-      (col("id") % 7).as("status"),
-      when(col("id") % 2 === 0, lit("2024-01-01"))
-        .otherwise(lit("2024-01-02")).as("ingest_date"))
-    val day = spark.range(1800, 2200).select(
-      concat(lit("ORD-"), format_string("%07d", col("id"))).as("delivery_order_id"),
-      (col("id") % 7).as("status"),
-      lit("2024-01-03").as("ingest_date"))
-    spark.sql("DROP TABLE IF EXISTS bkt_dmaster")
-    spark.sql("DROP TABLE IF EXISTS bkt_dmaster__day")
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prior = spark.conf.get(thresholdKey)
-    spark.conf.set(thresholdKey, "-1")
-    try {
-      // first call creates the table; second exercises the delta path
-      // end-to-end (leaving bkt_dmaster__day behind for the plan pin)
-      graft.sinks.TableSink.upsertDayPartitionsBucketed(
-        master, "bkt_dmaster", "delivery_order_id", "ingest_date", buckets = 4)
-      graft.sinks.TableSink.upsertDayPartitionsBucketed(
-        day, "bkt_dmaster", "delivery_order_id", "ingest_date", buckets = 4)
-      // law smoke over the plan pin's fixture: updates won, history survived
-      assert(spark.table("bkt_dmaster").count() == 2200)
-      val (probe, keepOf) = graft.sinks.TableSink.bucketedDeltaPlan(
-        spark, "bkt_dmaster", "bkt_dmaster__day",
-        "delivery_order_id", "ingest_date")
-      probe.collect()
-      val pp = probe.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(!pp.contains("Exchange"), s"bucketed delta probe shuffled:\n$pp")
-      assert(pp.contains("SortMergeJoin"), pp)
-      // the probe's scan is column-pruned to (key, dateCol) and carries
-      // the day-key range pregate down to the parquet reader — the
-      // row-group pruning that keeps probe cost flat as history grows
-      assert(pp.contains("ReadSchema: struct<delivery_order_id:string"), pp)
-      assert(pp.contains("GreaterThanOrEqual(delivery_order_id") &&
-        pp.contains("LessThanOrEqual(delivery_order_id"),
-        s"day-key range pregate not pushed to the scan:\n$pp")
-      val keep = keepOf(col("ingest_date").isin("2024-01-01", "2024-01-02", "2024-01-03"))
-      keep.collect()
-      val kp = keep.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(!kp.contains("Exchange"), s"bucketed delta keep-side shuffled:\n$kp")
-      assert(kp.contains("SortMergeJoin"), kp)
-    } finally {
-      spark.conf.set(thresholdKey, prior)
-      spark.sql("DROP TABLE IF EXISTS bkt_dmaster")
-      spark.sql("DROP TABLE IF EXISTS bkt_dmaster__day")
-    }
-  }
-
-  test("BucketedStore: transactional layout keeps the exchange-free probe/anti-join AND the pushed day-key range — on its own sidePlans") {
-    import org.apache.spark.sql.functions._
-    // the r13-verdict composition pin: ONE path with both the atomic
-    // manifest commit (BucketedStoreSpec's crash window) and the
-    // bucketed exchange-free plans — asserted here on the very frames
-    // stageUpsert runs, broadcast hatch closed
-    val n = 2000L
-    val master = spark.range(n).select(
-      concat(lit("ORD-"), format_string("%07d", col("id"))).as("delivery_order_id"),
-      (col("id") % 7).as("status"),
-      when(col("id") % 2 === 0, lit("2024-01-01"))
-        .otherwise(lit("2024-01-02")).as("ingest_date"))
-    val day = spark.range(1800, 2200).select(
-      concat(lit("ORD-"), format_string("%07d", col("id"))).as("delivery_order_id"),
-      (col("id") % 7).as("status"),
-      lit("2024-01-03").as("ingest_date"))
-    val root = java.nio.file.Files.createTempDirectory("graft_bstore_plan").toString
-    Seq("__a", "__b", "__day").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS bkt_smaster$s"))
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prior = spark.conf.get(thresholdKey)
-    spark.conf.set(thresholdKey, "-1")
-    try {
-      graft.sinks.BucketedStore.upsert(
-        master, root, "bkt_smaster", "delivery_order_id", "ingest_date", buckets = 4)
-      graft.sinks.BucketedStore.upsert(
-        day, root, "bkt_smaster", "delivery_order_id", "ingest_date", buckets = 4)
-      // law smoke over the plan pin's fixture: updates won, history survived
-      assert(graft.sinks.BucketedStore.read(spark, root, "bkt_smaster")
-        .get.count() == 2200)
-      val live = graft.sinks.PartitionStore.manifest(spark, root).get
-        .groupBy(_._2).map { case (s, es) => s -> es.keys.toSeq.map(lit(_): org.apache.spark.sql.Column) }
-      val plans = graft.sinks.BucketedStore.sidePlans(
-        spark, "bkt_smaster", "delivery_order_id", "ingest_date", live)
-      assert(plans.nonEmpty)
-      plans.foreach { case (side, probe, keepOf) =>
-        probe.collect()
-        val pp = probe.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        assert(!pp.contains("Exchange"), s"store probe (side $side) shuffled:\n$pp")
-        assert(pp.contains("SortMergeJoin"), pp)
-        assert(pp.contains("ReadSchema: struct<delivery_order_id:string"), pp)
-        assert(pp.contains("GreaterThanOrEqual(delivery_order_id") &&
-          pp.contains("LessThanOrEqual(delivery_order_id"),
-          s"day-key range pregate not pushed to the scan (side $side):\n$pp")
-        val keep = keepOf(col("ingest_date")
-          .isin("2024-01-01", "2024-01-02", "2024-01-03"))
-        keep.collect()
-        val kp = keep.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        assert(!kp.contains("Exchange"), s"store keep-side (side $side) shuffled:\n$kp")
-        assert(kp.contains("SortMergeJoin"), kp)
-      }
-    } finally {
-      spark.conf.set(thresholdKey, prior)
-      Seq("__a", "__b", "__day").foreach(s =>
-        spark.sql(s"DROP TABLE IF EXISTS bkt_smaster$s"))
-    }
-  }
 }

@@ -106,8 +106,7 @@ class PartitionStoreSpec extends SparkSpec {
     // the probe reads TWO columns and carries the day-key range down to
     // the parquet reader — with the store's key-sorted partition files,
     // row-group stats satisfy the range and the read skips history
-    // outside today's key window (the transactional twin of
-    // TableSink.bucketedDeltaPlan's pin)
+    // outside today's key window
     assert(plan.contains("ReadSchema: struct<id:bigint,d:date>"), plan)
     assert(plan.contains("GreaterThanOrEqual(id,150)") &&
       plan.contains("LessThanOrEqual(id,259)"),
@@ -125,6 +124,20 @@ class PartitionStoreSpec extends SparkSpec {
     val s2 = side()
     assert(s1 != s2, "rewrite landed on the live side")
     assert(content(root) == Seq((1L, "a2", "2024-01-01")))
+  }
+
+  test("an EMPTY day is a committed no-op: same manifest, same content") {
+    val root = Files.createTempDirectory("graft_pstore_empty").toString
+    PartitionStore.upsert(
+      Seq((1L, "a", dt("2024-06-01")), (2L, "b", null: java.sql.Date))
+        .toDF("id", "v", "d"), root, "id", "d")
+    val m1 = PartitionStore.manifest(spark, root).get
+    val before = content(root)
+    PartitionStore.upsert(
+      Seq.empty[(Long, String, java.sql.Date)].toDF("id", "v", "d"),
+      root, "id", "d")
+    assert(PartitionStore.manifest(spark, root).get == m1)
+    assert(content(root) == before)
   }
 
   test("partition values needing path-escaping round-trip the law (manifest keys match Spark's escaped dir names)") {

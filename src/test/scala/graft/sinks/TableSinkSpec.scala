@@ -61,105 +61,6 @@ class TableSinkSpec extends SparkSpec {
       assert(got(ts) == want, s"$ts UTC should bucket to Santiago day $want")
   }
 
-  test("upsertDayPartitions: untouched partitions keep their files; emptied partitions are deleted") {
-    import spark.implicits._
-    def dt(s: String) = java.sql.Date.valueOf(s)
-    val root = Files.createTempDirectory("graft_delta").toString
-    TableSink.upsertDayPartitions(
-      Seq((1L, "a", dt("2024-01-01")), (2L, "b", dt("2024-01-01"))).toDF("id", "v", "d"),
-      root, "id", "d")
-    TableSink.upsertDayPartitions(
-      Seq((3L, "c", dt("2024-01-02"))).toDF("id", "v", "d"), root, "id", "d")
-    val p1 = new java.io.File(s"$root/d=2024-01-01")
-    val before = p1.listFiles.map(f => f.getName -> f.lastModified).toMap
-    // day 3: re-delivers id 3 under a new date (its old partition
-    // empties) + a new id 4; partition 2024-01-01 is NOT affected
-    TableSink.upsertDayPartitions(
-      Seq((3L, "c2", dt("2024-01-03")), (4L, "e", dt("2024-01-03"))).toDF("id", "v", "d"),
-      root, "id", "d")
-    val got = spark.read.parquet(root).collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("v"),
-        r.getAs[java.sql.Date]("d").toString)).sorted.toSeq
-    assert(got == Seq((1L, "a", "2024-01-01"), (2L, "b", "2024-01-01"),
-      (3L, "c2", "2024-01-03"), (4L, "e", "2024-01-03")))
-    // the emptied partition's stale files must be GONE (dynamic
-    // overwrite alone would have left them)
-    assert(!new java.io.File(s"$root/d=2024-01-02").exists())
-    // the untouched partition's files were never rewritten
-    val after = p1.listFiles.map(f => f.getName -> f.lastModified).toMap
-    assert(after == before, "unaffected partition was rewritten")
-  }
-
-  test("upsertDayPartitions: NULL dateCol rows obey the upsert law (the isin(null) hazard)") {
-    def dt(s: String) = java.sql.Date.valueOf(s)
-    val root = Files.createTempDirectory("graft_delta_null").toString
-    // day 1: key 1 lands in the NULL-date partition, key 2 in a real one
-    TableSink.upsertDayPartitions(
-      Seq((1L, "a", null: java.sql.Date), (2L, "b", dt("2024-01-01")))
-        .toDF("id", "v", "d"), root, "id", "d")
-    assert(new java.io.File(s"$root/d=__HIVE_DEFAULT_PARTITION__").exists())
-    // day 2 re-delivers key 1 under a real date: its old null-partition
-    // row must be REPLACED (isin(null) never matches — without the
-    // null-safe membership the stale row would survive as a duplicate),
-    // and the emptied null partition's directory must be deleted under
-    // its __HIVE_DEFAULT_PARTITION__ spelling
-    TableSink.upsertDayPartitions(
-      Seq((1L, "a2", dt("2024-01-02"))).toDF("id", "v", "d"), root, "id", "d")
-    val got = spark.read.parquet(root).collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("v"),
-        Option(r.getAs[java.sql.Date]("d")).map(_.toString).orNull))
-      .sortBy(_._1).toSeq
-    assert(got == Seq((1L, "a2", "2024-01-02"), (2L, "b", "2024-01-01")))
-    assert(!new java.io.File(s"$root/d=__HIVE_DEFAULT_PARTITION__").exists(),
-      "emptied null partition's stale files survived")
-  }
-
-  test("upsertDayPartitionsBucketed: partition-level law on the bucketed catalog layout; emptied partitions dropped; untouched files kept") {
-    def dt(s: String) = java.sql.Date.valueOf(s)
-    val t = "graft_bkt_delta"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${t}__day")
-    try {
-      TableSink.upsertDayPartitionsBucketed(
-        Seq((1L, "a", dt("2024-01-01")), (2L, "b", dt("2024-01-01")))
-          .toDF("id", "v", "d"), t, "id", "d", buckets = 4)
-      TableSink.upsertDayPartitionsBucketed(
-        Seq((3L, "c", dt("2024-01-02"))).toDF("id", "v", "d"), t, "id", "d", 4)
-      val loc = new java.io.File(new java.net.URI(
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)).location.toString))
-      val p1 = new java.io.File(loc, "d=2024-01-01")
-      val before = p1.listFiles.map(f => f.getName -> f.lastModified).toMap
-      // day 3: re-delivers id 3 under a new date (its old partition
-      // empties) + a new id 4; partition 2024-01-01 is NOT affected
-      TableSink.upsertDayPartitionsBucketed(
-        Seq((3L, "c2", dt("2024-01-03")), (4L, "e", dt("2024-01-03")))
-          .toDF("id", "v", "d"), t, "id", "d", 4)
-      val got = spark.table(t).collect()
-        .map(r => (r.getAs[Long]("id"), r.getAs[String]("v"),
-          r.getAs[java.sql.Date]("d").toString)).sorted.toSeq
-      assert(got == Seq((1L, "a", "2024-01-01"), (2L, "b", "2024-01-01"),
-        (3L, "c2", "2024-01-03"), (4L, "e", "2024-01-03")))
-      // emptied partition dropped from catalog AND disk
-      assert(!new java.io.File(loc, "d=2024-01-02").exists(),
-        "emptied partition's files survived the ALTER TABLE DROP")
-      assert(spark.sql(s"SHOW PARTITIONS $t").collect().map(_.getString(0)).sorted
-        .toSeq == Seq("d=2024-01-01", "d=2024-01-03"))
-      // the untouched partition's bucket files were never rewritten
-      val after = p1.listFiles.map(f => f.getName -> f.lastModified).toMap
-      assert(after == before, "unaffected partition was rewritten")
-      // a null-date day is rejected loudly (typed DDL partitions have no
-      // null spelling; PartitionStore is the null-capable variant)
-      intercept[IllegalArgumentException] {
-        TableSink.upsertDayPartitionsBucketed(
-          Seq((9L, "z", null: java.sql.Date)).toDF("id", "v", "d"), t, "id", "d", 4)
-      }
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}__day")
-    }
-  }
-
   test("writeSorted: per-file key ranges are disjoint (stats can prune)") {
     val out = Files.createTempDirectory("graft_sorted").toString
     // a deterministic permutation of 0..999 — maximally interleaved input,

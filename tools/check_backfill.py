@@ -13,9 +13,10 @@ master exactly, all columns.
 
 Usage: check_backfill.py <outRoot> [finalMasterDir]
 `finalMasterDir` points at an explicit merged master (BackfillBench's
-delta mode keeps it in <outRoot>/master_delta; the per-day masters are
-then day-only, which the replay law handles identically). Default:
-the last day_NN's delivery_order_master (run/snapshot modes).
+delta_store mode exports its PartitionStore to
+<outRoot>/master_store_export; the per-day masters are then day-only,
+which the replay law handles identically). Default: the last day_NN's
+delivery_order_master (run mode).
 Exits 0 on an exact match, 1 otherwise.
 """
 import glob
@@ -48,13 +49,13 @@ cols = [r[0] for r in con.execute(
     "SELECT column_name FROM (DESCRIBE masters) WHERE column_name NOT IN ('__day','filename')"
 ).fetchall()]
 collist = ", ".join(f'"{c}"' for c in cols)
-if len(sys.argv) > 2:  # explicit merged master (delta mode)
+if len(sys.argv) > 2:  # explicit merged master (delta_store mode)
     con.execute(f"""
       CREATE VIEW finalm AS
       SELECT {collist}
       FROM read_parquet('{sys.argv[2]}/*/*.parquet', hive_partitioning=1)
     """)
-else:  # run/snapshot modes: the last day's master IS the merged master
+else:  # run mode: the last day's master IS the merged master
     con.execute(f"""
       CREATE VIEW finalm AS
       SELECT {collist} FROM masters
