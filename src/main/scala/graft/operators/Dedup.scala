@@ -93,10 +93,12 @@ object Dedup {
   /** Distinct word-n-gram shingles: (doc_id, shingle). Docs with fewer than
     * n tokens produce no shingles (and thus never appear in candidates). */
   def shingleSet(docs: DataFrame, n: Int = 3): DataFrame =
-    docs
-      .select(col("doc_id"), rawTokens(col("text")).as("ts"))
-      .select(col("doc_id"), explode(shinglesOrEmpty(col("ts"), n)).as("s"))
-      .distinct()
+    shingleRows(docs, n).distinct()
+
+  /** Every word n-gram occurrence (doc_id, s), NOT distinct — the one
+    * tokenize+explode the shingle consumers start from. */
+  private def shingleRows(docs: DataFrame, n: Int): DataFrame =
+    tokenized(docs).select(col("doc_id"), explode(shinglesOrEmpty(col("ts"), n)).as("s"))
 
   /** [[shingleSet]] keyed by span HASH: md5 applied BELOW the distinct,
     * so the dedup exchange ships (doc_id, 32-byte hash) instead of
@@ -106,11 +108,7 @@ object Dedup {
     * one — the same 2⁻¹²⁸ equivalence the whole span family already
     * accepts by aggregating on h. */
   private def spanHashSet(docs: DataFrame, n: Int): DataFrame =
-    docs
-      .select(col("doc_id"), rawTokens(col("text")).as("ts"))
-      .select(col("doc_id"), explode(shinglesOrEmpty(col("ts"), n)).as("s"))
-      .select(col("doc_id"), md5(col("s")).as("h"))
-      .distinct()
+    shingleRows(docs, n).select(col("doc_id"), md5(col("s")).as("h")).distinct()
 
   /** Universal-hash family parameters for MinHash: h_i(x) = (a_i·x + b_i)
     * mod P over x = md5-derived base hash reduced mod P. One md5 per
@@ -139,11 +137,7 @@ object Dedup {
     * shuffling the tokenized corpus once and shuffling k·8 bytes per
     * (doc, partition). */
   def minhashSignatures(docs: DataFrame, n: Int = 3, k: Int = 12): DataFrame =
-    minhashSignaturesFromShingles(
-      docs
-        .select(col("doc_id"), rawTokens(col("text")).as("ts"))
-        .select(col("doc_id"), explode(shinglesOrEmpty(col("ts"), n)).as("s")),
-      k)
+    minhashSignaturesFromShingles(shingleRows(docs, n), k)
 
   /** Signature build over ANY (doc_id, s) shingle-row frame (distinct or
     * not — min doesn't care): lets composites that already hold a
@@ -380,22 +374,33 @@ object Dedup {
     * identical hashing.
     * Output: doc_id, dup_spans, total_spans, dup_ratio (docs with < n
     * tokens have no spans and are absent). */
-  def duplicatedSpans(docs: DataFrame, n: Int = 15, minDf: Int = 2): DataFrame = {
-    val sh = graft.Persist.cut(spanHashSet(docs, n))
-    // join postings ONLY against spans that cleared the df floor: in any
-    // real corpus the overwhelming majority of 15-token spans are unique,
-    // so the postings⋈df join that used to carry EVERY span now carries
-    // only the duplicated minority (the total count needs no join at all)
-    val dup = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+  def duplicatedSpans(docs: DataFrame, n: Int = 15, minDf: Int = 2): DataFrame =
+    duplicateShare(graft.Persist.cut(spanHashSet(docs, n)), "spans", minDf)
+
+  /** The duplicate-share fold of [[duplicatedSpans]] and
+    * [[Multimodal.duplicateChunks]] / [[Multimodal.cdcDuplicateStats]]
+    * over a MATERIALIZED (doc_id, h) unit frame: a hash held by >= minDf
+    * rows is duplicated; per doc, how many of its rows carry one, out of
+    * how many, and the ratio. What a row counts is the caller's choice:
+    * a distinct frame counts each span once per doc (df = holders), a
+    * raw one counts every chunk instance (df = occurrences).
+    * Output: doc_id, dup_<unit>, total_<unit>, dup_ratio (round 4). */
+  private[operators] def duplicateShare(units: DataFrame, unit: String,
+                                        minDf: Int): DataFrame = {
+    val (dupC, totC) = (s"dup_$unit", s"total_$unit")
+    // join postings ONLY against hashes that cleared the df floor: in any
+    // real corpus the overwhelming majority of spans/windows are unique,
+    // so the postings⋈df join carries only the duplicated minority (the
+    // total count needs no join at all)
+    val dup = units.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf).select(col("h"))
-    val dupPerDoc = sh.join(dup, "h")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("dup_spans"))
-    sh.groupBy(col("doc_id")).agg(count(lit(1)).as("total_spans"))
+    val dupPerDoc = units.join(dup, "h")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as(dupC))
+    units.groupBy(col("doc_id")).agg(count(lit(1)).as(totC))
       .join(dupPerDoc, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("dup_spans"), lit(0L)).as("dup_spans"),
-        col("total_spans"),
-        detRound(coalesce(col("dup_spans"), lit(0L)).cast("double") /
-          col("total_spans"), 4).as("dup_ratio"))
+      .select(col("doc_id"), coalesce(col(dupC), lit(0L)).as(dupC), col(totC),
+        detRound(coalesce(col(dupC), lit(0L)).cast("double") / col(totC), 4)
+          .as("dup_ratio"))
   }
 
   /** First-holder novelty score — [[duplicatedSpans]]' complement: the
@@ -533,11 +538,16 @@ object Dedup {
   private def tokenized(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), rawTokens(col("text")).as("ts"))
 
+  /** Every n-shingle occurrence of a [[tokenized]] frame with its 0-based
+    * position: (doc_id, pos, col), NOT distinct — the one positional frame
+    * the span strip, the pair diff and the two run detectors read. */
+  private def positionalShingles(toks: DataFrame, n: Int): DataFrame =
+    toks.select(col("doc_id"), posexplode(shinglesOrEmpty(col("ts"), n)))
+
   /** Every span occurrence with its 1-based start: (doc_id, i, h). NOT
     * distinct — within-doc repeats each cover their own positions. */
   private def spanOccurrences(toks: DataFrame, n: Int): DataFrame =
-    toks
-      .select(col("doc_id"), posexplode(shinglesOrEmpty(col("ts"), n)))
+    positionalShingles(toks, n)
       .select(col("doc_id"), (col("pos") + 1).as("i"), md5(col("col")).as("h"))
 
   /** Shared strip-and-reassemble core: drop every token position covered
@@ -1359,11 +1369,10 @@ object Dedup {
     * subsumed by another" (truncations beyond [[prefixDuplicates]]' exact
     * prefix shape, excerpt farms, quote-heavy aggregators).
     *
-    * Same blocking + exactness discipline as [[ngramJaccardPairs]]
-    * (including the corpus-relative `maxDfFraction` form of the cap):
-    * candidates must share a RARE (df <= maxDf) shingle; the blocking
-    * join yields the shared-rare count per pair; per-doc stats arrive in
-    * one aggregate; and the hot-shingle correction makes the final
+    * Same blocking + exactness core as [[ngramJaccardPairs]]
+    * ([[rareOverlapPairs]], including the corpus-relative `maxDfFraction`
+    * form of the cap): candidates must share a RARE (df <= maxDf)
+    * shingle, and the hot-shingle correction makes the final
     * intersection EXACT. The pre-prune keeps a pair only while
     * iMax / min(|A|,|B|) >= threshold — an upper bound on the LARGER of
     * the two directed containments, so no qualifying direction is lost
@@ -1374,43 +1383,15 @@ object Dedup {
   def containmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
                        maxDf: Int = 1000,
                        maxDfFraction: Option[Double] = None): DataFrame = {
-    val sh = graft.Persist.cut(shingleSet(docs, n))
-    val cap = resolveDfCap(sh, maxDf, maxDfFraction)
-    val dfc = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val tagged = sh.join(dfc, "s")
-    val rare = tagged.filter(col("df") <= cap).select(col("doc_id"), col("s"))
-    val iRare = rare.as("a")
-      .join(rare.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .agg(count(lit(1)).as("i_rare"))
-    val docStats = tagged.groupBy(col("doc_id")).agg(
-      count(lit(1)).as("c"),
-      count(when(col("df") > cap, 1)).as("hc"),
-      collect_set(when(col("df") > cap, col("s"))).as("hset"))
-    // same broadcast knob as the Jaccard verify stage (one row per doc)
-    val bcast = docs.sparkSession.conf
-      .get("spark.graft.jaccard.broadcastStats", "true").toBoolean
-    def stats(alias: String): DataFrame =
-      if (bcast) broadcast(docStats.as(alias)) else docStats.as(alias)
     // BOTH direction branches of the union below consume `scored`:
     // materialize it once (bounded: pairs surviving the i_max pregate) —
     // without the cut, the df count, the rare blocking join AND the
     // doc-stats aggregate all execute twice, once per union branch
     // (observed as the 58-Exchange x67 plan)
-    val scored = graft.Persist.cut(iRare
-      .join(stats("da"), col("a_id") === col("da.doc_id"))
-      .join(stats("db"), col("b_id") === col("db.doc_id"))
-      .select(col("a_id"), col("b_id"), col("i_rare"),
-        col("da.c").as("na"), col("db.c").as("nb"),
-        (col("i_rare") + least(col("da.hc"), col("db.hc")))
-          .cast("double").as("i_max"),
-        col("da.hset").as("ha"), col("db.hset").as("hb"))
-      .filter(col("i_max") / least(col("na"), col("nb")) >= threshold)
-      .select(col("a_id"), col("b_id"),
-        (col("i_rare") + when(size(col("ha")) > 0 && size(col("hb")) > 0,
-          size(array_intersect(col("ha"), col("hb")))).otherwise(0))
-          .cast("double").as("i"),
-        col("na"), col("nb")))
+    val scored = graft.Persist.cut(
+      rareOverlapPairs(graft.Persist.cut(shingleSet(docs, n)), maxDf, maxDfFraction) {
+        (na, nb, iMax) => Seq(iMax / least(na, nb) >= threshold)
+      })
     scored.select(col("a_id").as("src_id"), col("b_id").as("dst_id"),
         detRound(col("i") / col("na"), 4).as("containment"))
       .unionByName(scored.select(col("b_id").as("src_id"), col("a_id").as("dst_id"),
@@ -1508,14 +1489,44 @@ object Dedup {
       graft.Persist.cut(sets.select(col("doc_id"), col("s"))),
       threshold, maxDf, maxDfFraction)
 
-  /** [[jaccardPairsFromSets]]' core over an ALREADY-MATERIALIZED distinct
+  /** [[jaccardPairsFromSets]] over an ALREADY-MATERIALIZED distinct
     * element-set frame — callers that hold a cut shingle frame feeding
     * several consumers ([[jaccardEstimateError]]) skip the second
-    * materialization job. */
+    * materialization job. The prunes handed to [[rareOverlapPairs]] are
+    * EXACT upper bounds, implications of set algebra, so no qualifying
+    * pair is lost and the hot-set intersection runs only on survivors:
+    *   J <= min(|A|,|B|) / max(|A|,|B|)                (size ratio)
+    *   i <= i_rare + min(hotA, hotB)  =>  J <= iMax/(|A|+|B|-iMax) */
   private def jaccardPairsFromCutSets(sh: DataFrame, threshold: Double,
                                       maxDf: Int,
                                       maxDfFraction: Option[Double],
                                       restrictTo: Option[DataFrame] = None): DataFrame = {
+    val pairs = rareOverlapPairs(sh, maxDf, maxDfFraction, restrictTo) { (na, nb, iMax) =>
+      Seq(least(na, nb).cast("double") / greatest(na, nb) >= threshold,
+        iMax / (na + nb - iMax) >= threshold)
+    }
+    pairs.select(col("a_id"), col("b_id"),
+        detRound(col("i") / (col("na") + col("nb") - col("i")), 3).as("j"))
+      .filter(col("j") >= threshold)
+  }
+
+  /** THE rare-element overlap core of the set-similarity family —
+    * [[ngramJaccardPairs]] (via [[jaccardPairsFromCutSets]]) and
+    * [[containmentPairs]] — over a MATERIALIZED distinct (doc_id, s)
+    * frame: the df cap, the rare-postings self-join that yields each
+    * candidate's shared-rare count `i_rare`, one-row-per-doc stats, the
+    * caller's prunes `bounds(na, nb, iMax)` over the set sizes and the
+    * i_max upper bound of the intersection, and the exact hot-set
+    * correction on survivors. The callers differ only in those bounds
+    * and the final score. Each bound is its own filter, applied in order
+    * (the planner pushes them into the stats join one at a time, so
+    * `Seq(a, b)` and `a && b` plan differently).
+    * Output: (a_id, b_id, i, na, nb), a_id < b_id, `i` the EXACT
+    * intersection size (double), na/nb the two set sizes. */
+  private def rareOverlapPairs(sh: DataFrame, maxDf: Int,
+                               maxDfFraction: Option[Double],
+                               restrictTo: Option[DataFrame] = None)(
+                               bounds: (Column, Column, Column) => Seq[Column]): DataFrame = {
     val cap = resolveDfCap(sh, maxDf, maxDfFraction)
     // df is GLOBAL by definition — always aggregated over the full frame,
     // even when the pair enumeration below is restricted
@@ -1552,16 +1563,12 @@ object Dedup {
       count(lit(1)).as("c"),
       count(when(col("df") > cap, 1)).as("hc"),
       collect_set(when(col("df") > cap, col("s"))).as("hset"))
-    // EXACT upper-bound pruning before computing the hot-set intersection:
-    //   J <= min(|A|,|B|) / max(|A|,|B|)          (size-ratio bound)
-    //   i <= i_rare + min(hotA, hotB)  =>  J <= iMax/(|A|+|B|-iMax)
-    // Both are implications of set algebra, so no qualifying pair is lost —
-    // the array intersection runs only on survivors. docStats is one row
-    // per document: broadcasting it keeps the candidate pairs from being
-    // sort-merge-shuffled twice, which wins as long as the doc count fits
-    // a broadcast table — at corpus scales where it doesn't (billions of
-    // docs), disable via spark.graft.jaccard.broadcastStats=false and let
-    // the planner shuffle-join.
+    // docStats is one row per document: broadcasting it keeps the
+    // candidate pairs from being sort-merge-shuffled twice, which wins as
+    // long as the doc count fits a broadcast table — at corpus scales
+    // where it doesn't (billions of docs), disable via
+    // spark.graft.jaccard.broadcastStats=false and let the planner
+    // shuffle-join.
     val bcast = sh.sparkSession.conf
       .get("spark.graft.jaccard.broadcastStats", "true").toBoolean
     def stats(alias: String): DataFrame =
@@ -1574,18 +1581,12 @@ object Dedup {
         (col("i_rare") + least(col("da.hc"), col("db.hc")))
           .cast("double").as("i_max"),
         col("da.hset").as("ha"), col("db.hset").as("hb"))
-      .filter(least(col("na"), col("nb")).cast("double") /
-        greatest(col("na"), col("nb")) >= threshold)
-      .filter(col("i_max") / (col("na") + col("nb") - col("i_max")) >= threshold)
-    withStats
+    bounds(col("na"), col("nb"), col("i_max")).foldLeft(withStats)(_.filter(_))
       .select(col("a_id"), col("b_id"),
         (col("i_rare") + when(size(col("ha")) > 0 && size(col("hb")) > 0,
           size(array_intersect(col("ha"), col("hb")))).otherwise(0))
           .cast("double").as("i"),
         col("na"), col("nb"))
-      .select(col("a_id"), col("b_id"),
-        detRound(col("i") / (col("na") + col("nb") - col("i")), 3).as("j"))
-      .filter(col("j") >= threshold)
   }
 
   /** Pair-recall of a candidate/result pair frame against a truth pair
@@ -1702,7 +1703,7 @@ object Dedup {
     // the report INNER-joins est ⋈ exact on the pair key, so exact-side
     // pairs with no banding candidate can never reach the output:
     // restrict the rare-blocking self-join + docStats to the docs the
-    // banding surfaced (df stays GLOBAL — jaccardPairsFromCutSets keeps
+    // banding surfaced (df stays GLOBAL — rareOverlapPairs keeps
     // the df aggregate over the full frame), which leaves every surviving
     // (pair, j) bit-identical while the quadratic exact stage runs on the
     // candidate minority instead of the corpus (guide §3.2). Measured at
@@ -1792,15 +1793,9 @@ object Dedup {
     * the verdict replays cross-engine). */
   def contaminationScores(docs: DataFrame, bench: DataFrame, n: Int = 3,
                           threshold: Double = 0.2): DataFrame = {
-    val bs = shingleSet(bench, n).select(col("s")).distinct()
-      .withColumn("__hit", lit(1L))
     val frac = detRound(col("matched").cast("double") /
       col("n_shingles").cast("double"), 6)
-    shingleSet(docs, n)
-      .join(broadcast(bs), Seq("s"), "left_outer")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shingles"),
-        coalesce(sum(col("__hit")), lit(0L)).as("matched"))
+    benchMatches(shingleSet(docs, n), bench, n)
       .select(col("doc_id"), col("n_shingles"), col("matched"),
         frac.as("overlap_frac"), (frac >= lit(threshold)).as("flagged"))
   }
@@ -1976,10 +1971,8 @@ object Dedup {
     val pairDocs = pairs
       .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .distinct()
-    val psh = graft.Persist.cut(docs
-      .join(broadcast(pairDocs), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), rawTokens(col("text")).as("__ts"))
-      .select(col("doc_id"), posexplode(shinglesOrEmpty(col("__ts"), n)))
+    val psh = graft.Persist.cut(positionalShingles(
+        tokenized(docs.join(broadcast(pairDocs), Seq("doc_id"), "left_semi")), n)
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         md5(col("col")).as("h")))
     val tot = psh.groupBy(col("doc_id")).agg(count(lit(1)).as("__tot"))
@@ -2043,23 +2036,38 @@ object Dedup {
     * longest_run_tokens, flagged. */
   def contaminationRuns(docs: DataFrame, bench: DataFrame, n: Int = 3,
                         minRunTokens: Int = 6): DataFrame = {
+    val pos = positionalShingles(tokenized(docs), n)
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("s"))
+    runSummary(benchMatches(pos, bench, n,
+        collect_list(when(col("__hit").isNotNull, col("pos"))).as("__mp")),
+      "matched", n, minRunTokens)
+  }
+
+  /** Per-doc bench matches of shingle rows (doc_id, s, …): the rows
+    * left-join the bench's DISTINCT shingle set, broadcast (a matched row
+    * carries `__hit` = 1), then fold to n_shingles, matched and any
+    * `extra` aggregates — the shared side of [[contaminationScores]] and
+    * [[contaminationRuns]]. */
+  private def benchMatches(rows: DataFrame, bench: DataFrame, n: Int,
+                           extra: Column*): DataFrame = {
     val bs = shingleSet(bench, n).select(col("s")).distinct()
       .withColumn("__hit", lit(1L))
-    val pos = docs
-      .select(col("doc_id"), rawTokens(col("text")).as("ts"))
-      .select(col("doc_id"), posexplode(shinglesOrEmpty(col("ts"), n)))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("col").as("s"))
-    val runState = longestConsecutiveRun(col("__mp"))
-    val runTokens = when(col("longest_run") > 0L,
-      col("longest_run") + lit(n - 1).cast("long")).otherwise(lit(0L))
-    pos.join(broadcast(bs), Seq("s"), "left_outer")
+    rows.join(broadcast(bs), Seq("s"), "left_outer")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
-        coalesce(sum(col("__hit")), lit(0L)).as("matched"),
-        collect_list(when(col("__hit").isNotNull, col("pos"))).as("__mp"))
-      .withColumn("longest_run", runState)
-      .select(col("doc_id"), col("n_shingles"), col("matched"),
+        coalesce(sum(col("__hit")), lit(0L)).as("matched") +: extra: _*)
+  }
+
+  /** The run detectors' shared tail over a per-doc frame holding
+    * n_shingles, the `counted` column and `__mp`, the run-eligible
+    * positions: the longest consecutive run r, the r + n − 1 source
+    * tokens it covers, and the verdict on that token length. */
+  private def runSummary(perDoc: DataFrame, counted: String, n: Int,
+                         minRunTokens: Int): DataFrame = {
+    val runTokens = when(col("longest_run") > 0L,
+      col("longest_run") + lit(n - 1).cast("long")).otherwise(lit(0L))
+    perDoc.withColumn("longest_run", longestConsecutiveRun(col("__mp")))
+      .select(col("doc_id"), col("n_shingles"), col(counted),
         col("longest_run"), runTokens.as("longest_run_tokens"),
         (runTokens >= lit(minRunTokens.toLong)).as("flagged"))
   }
@@ -2086,24 +2094,15 @@ object Dedup {
     * longest_run_tokens, flagged. */
   def selfRepeatRuns(docs: DataFrame, n: Int = 3,
                      minRunTokens: Int = 6): DataFrame = {
-    val pos = docs
-      .select(col("doc_id"), rawTokens(col("text")).as("__ts"))
-      .select(col("doc_id"), posexplode(shinglesOrEmpty(col("__ts"), n)))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        md5(col("col")).as("h"))
-    val runState = longestConsecutiveRun(col("__mp"))
-    val runTokens = when(col("longest_run") > 0L,
-      col("longest_run") + lit(n - 1).cast("long")).otherwise(lit(0L))
-    pos.groupBy(col("doc_id"), col("h"))
+    val perDoc = positionalShingles(tokenized(docs), n)
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), md5(col("col")).as("h"))
+      .groupBy(col("doc_id"), col("h"))
       .agg(count(lit(1)).as("__c"), collect_list(col("pos")).as("__ps"))
       .groupBy(col("doc_id"))
       .agg(sum(col("__c")).as("n_shingles"),
         sum(when(col("__c") >= 2L, col("__c")).otherwise(0L)).as("repeated"),
         flatten(collect_list(when(col("__c") >= 2L, col("__ps")))).as("__mp"))
-      .withColumn("longest_run", runState)
-      .select(col("doc_id"), col("n_shingles"), col("repeated"),
-        col("longest_run"), runTokens.as("longest_run_tokens"),
-        (runTokens >= lit(minRunTokens.toLong)).as("flagged"))
+    runSummary(perDoc, "repeated", n, minRunTokens)
   }
 
   /** Near-dup clusters ranked by WASTED token mass — the prioritization

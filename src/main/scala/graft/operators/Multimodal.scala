@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.functions.NumericFunctions.detRound
 
 /** Multimodal-column plumbing: image/audio/video payloads ride through the
   * engine as opaque BINARY columns plus a typed metadata struct, exactly as
@@ -101,26 +100,16 @@ object Multimodal {
     *
     * Scale: the df aggregate and the postings join ship 32-byte md5s of
     * window bytes, never the windows; the postings join carries only the
-    * duplicated minority (the x39 rewrite). No decode anywhere — byte
+    * duplicated minority ([[Dedup.duplicateShare]], the fold x39 runs on
+    * distinct spans). No decode anywhere — byte
     * equality is codec-independent by definition.
     * Output: doc_id, dup_chunks, total_chunks, dup_ratio (round 4). */
   def duplicateChunks(bin: DataFrame, windowBytes: Int, strideBytes: Int,
-                      minDf: Int = 2): DataFrame = {
-    val ch = graft.Persist.cut(
+                      minDf: Int = 2): DataFrame =
+    Dedup.duplicateShare(graft.Persist.cut(
       chunkBinary(bin, windowBytes, strideBytes)
         .filter(col("chunk_bytes") === windowBytes)
-        .select(col("doc_id"), md5(col("chunk")).as("h")))
-    val dup = ch.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf).select(col("h"))
-    val dupPerDoc = ch.join(dup, "h")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("dup_chunks"))
-    ch.groupBy(col("doc_id")).agg(count(lit(1)).as("total_chunks"))
-      .join(dupPerDoc, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("dup_chunks"), lit(0L)).as("dup_chunks"),
-        col("total_chunks"),
-        detRound(coalesce(col("dup_chunks"), lit(0L)).cast("double") /
-          col("total_chunks"), 4).as("dup_ratio"))
-  }
+        .select(col("doc_id"), md5(col("chunk")).as("h"))), "chunks", minDf)
 
   /** Block FINGERPRINTS — the perceptual-hash shape on raw bytes: the
     * payload is cut into `blocks` equal byte ranges, each contributes
@@ -238,18 +227,8 @@ object Multimodal {
     * the shared core that lets the incremental runner fold additive
     * per-batch chunk-hash partials (32-byte hashes, content chunked
     * exactly once ever) and publish the identical report shape. */
-  def cdcDuplicateStatsFromChunks(ch: DataFrame, minDf: Int = 2): DataFrame = {
-    val dup = ch.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf).select(col("h"))
-    val dupPerDoc = ch.join(dup, "h")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("dup_chunks"))
-    ch.groupBy(col("doc_id")).agg(count(lit(1)).as("total_chunks"))
-      .join(dupPerDoc, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("dup_chunks"), lit(0L)).as("dup_chunks"),
-        col("total_chunks"),
-        detRound(coalesce(col("dup_chunks"), lit(0L)).cast("double") /
-          col("total_chunks"), 4).as("dup_ratio"))
-  }
+  def cdcDuplicateStatsFromChunks(ch: DataFrame, minDf: Int = 2): DataFrame =
+    Dedup.duplicateShare(ch, "chunks", minDf)
 
   /** Output row of the partition-batched decoder. */
   final case class DecodedFeatures(doc_id: Long, n_bytes: Int, checksum: Long,

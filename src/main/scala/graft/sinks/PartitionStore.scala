@@ -407,8 +407,9 @@ object PartitionStore {
     * a crash mid-compaction leaves the old master intact. Row content
     * is unchanged (law-neutral); file count derives from the measured
     * on-disk footprint like [[TableSink.compact]].
-    * Measured by [[graft.StoreCompactBench]]: probe wall time degraded
-    * by scattered upserts, restored post-compaction. */
+    * Measured in `logs/store_compact_r14*.jsonl`: probe wall time
+    * degraded by scattered (key-permuted) daily upserts, restored after
+    * one compaction pass. */
   def compact(spark: SparkSession, root: String, key: String,
               dateCol: String, targetBytes: Long = 128L << 20,
               sides: Int = 0): Unit = {

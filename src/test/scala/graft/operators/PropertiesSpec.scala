@@ -290,6 +290,112 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` once per `spark.graft.jaccard.broadcastStats` setting
+    * (the doc-stats join of the set-overlap core, broadcast or shuffled). */
+  private def underBothStatsJoins(body: String => Unit): Unit =
+    Seq("true", "false").foreach { v =>
+      spark.conf.set("spark.graft.jaccard.broadcastStats", v)
+      try body(v) finally spark.conf.unset("spark.graft.jaccard.broadcastStats")
+    }
+
+  /** Small-vocabulary corpora (many shared bigrams) and their bigram sets. */
+  private def overlapCorpora: Seq[(Seq[(Long, String)], Map[Long, Set[String]])] = {
+    val word = Gen.oneOf("a", "b", "c", "d", "e")
+    val doc = Gen.chooseNum(3, 9).flatMap(n => Gen.listOfN(n, word))
+    cases(Gen.chooseNum(4, 8).flatMap(n => Gen.listOfN(n, doc))).map { ds =>
+      val rows = ds.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
+      rows -> rows.map { case (id, t) =>
+        id -> t.split(" ").sliding(2).map(_.mkString(" ")).toSet
+      }.toMap
+    }
+  }
+
+  private def detRounded(x: Double, scale: Int): Double = {
+    val p = math.pow(10.0, scale.toDouble)
+    math.floor(x * p + 0.5) / p
+  }
+
+  test("ngramJaccardPairs == brute force for arbitrary corpora") {
+    // maxDf at corpus size makes the blocking COMPLETE, so the size-ratio
+    // and i_max prunes must drop only pairs below the threshold
+    val thr = 0.3
+    underBothStatsJoins { bcast =>
+      overlapCorpora.foreach { case (rows, sets) =>
+        val df = rows.toDF("doc_id", "text")
+        val exact = (for {
+          (a, sa) <- sets; (b, sb) <- sets if a < b
+          i = (sa intersect sb).size
+        } yield (a, b) -> detRounded(i.toDouble / (sa.size + sb.size - i).toDouble, 3)).toMap
+        val got = Dedup.ngramJaccardPairs(df, n = 2, threshold = thr, maxDf = 1000)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        assert(got == exact.filter(_._2 >= thr), s"broadcastStats=$bcast corpus=$rows")
+        // an aggressive cap may lose all-hot pairs, never mis-score one:
+        // threshold 0 scores every blocked pair, hot overlap included
+        Dedup.ngramJaccardPairs(df, n = 2, threshold = 0.0, maxDf = 2)
+          .collect().foreach { r =>
+            val k = (r.getLong(0), r.getLong(1))
+            assert(exact(k) == r.getDouble(2),
+              s"broadcastStats=$bcast capped mis-scored $k: ${r.getDouble(2)} vs ${exact(k)}")
+          }
+      }
+    }
+  }
+
+  test("containmentPairs == brute force under both broadcastStats settings") {
+    val thr = 0.3
+    underBothStatsJoins { bcast =>
+      overlapCorpora.foreach { case (rows, sets) =>
+        val df = rows.toDF("doc_id", "text")
+        val want = (for {
+          (a, sa) <- sets; (b, sb) <- sets if a != b
+          c = detRounded((sa intersect sb).size.toDouble / sa.size, 4) if c >= thr
+        } yield (a, b) -> c).toMap
+        Seq(1000, 2).foreach { maxDf =>
+          val got = Dedup.containmentPairs(df, n = 2, threshold = thr, maxDf = maxDf)
+            .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+          if (maxDf == 1000) assert(got == want, s"broadcastStats=$bcast corpus=$rows")
+          else got.foreach { case (k, v) =>
+            assert(want.get(k).contains(v), s"broadcastStats=$bcast capped mis-scored $k")
+          }
+        }
+      }
+    }
+  }
+
+  test("duplicatedSpans and duplicateChunks == driver-side duplicate-share counts") {
+    // spans: the span SET of a doc counts, so df = holders and a span
+    // repeated inside one doc is one span; chunks: every full window
+    // instance counts, so a window looped inside one payload is duplicated
+    def share(units: Map[Long, Seq[String]]): Map[Long, (Long, Long, Double)] = {
+      val df = units.values.flatten.groupBy(identity).view.mapValues(_.size).toMap
+      units.collect { case (id, us) if us.nonEmpty =>
+        val dup = us.count(u => df(u) >= 2).toLong
+        id -> ((dup, us.size.toLong, detRounded(dup.toDouble / us.size, 4)))
+      }
+    }
+    def rowsOf(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+    overlapCorpora.foreach { case (rows, sets) =>
+      val got = rowsOf(Dedup.duplicatedSpans(rows.toDF("doc_id", "text"), n = 2, minDf = 2))
+      assert(got == share(sets.map { case (id, s) => id -> s.toSeq }), s"corpus=$rows")
+    }
+    val (window, stride) = (3, 2)
+    val payloads = Gen.listOfN(6, Gen.chooseNum(0, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf(0.toByte, 1.toByte, 0xff.toByte))))
+    cases(payloads).foreach { ps =>
+      val bytes = ps.zipWithIndex.map { case (p, i) => (i.toLong, p.toArray) }
+      val bin = bytes.toDF("doc_id", "content").select(col("doc_id"), col("content"),
+        struct(lit("application/octet-stream").as("mime"),
+          length(col("content")).cast("long").as("n_bytes")).as("meta"))
+      val windows = bytes.map { case (id, b) =>
+        id -> (0 until b.length by stride).filter(_ + window <= b.length)
+          .map(o => b.slice(o, o + window).mkString(","))
+      }.toMap
+      val got = rowsOf(Multimodal.duplicateChunks(bin, window, stride, minDf = 2))
+      assert(got == share(windows), s"payloads=${ps.map(_.mkString(","))}")
+    }
+  }
+
   test("every operator is total on the EMPTY corpus: empty output, no exceptions") {
     // regression class: aggregates over empty frames yield null (the CC
     // convergence NPE), sketches build over zero rows, sequences/windows
