@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, RowOrdering}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions.call_function
 
 import graft.functions.expr.{CdcCuts, CosineSimilarity, DotProduct, HexParityMask, MinKDistinct, RewriteDotProduct}
@@ -18,12 +19,7 @@ import graft.functions.expr.{CdcCuts, CosineSimilarity, DotProduct, HexParityMas
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineDescriptor)
-    ext.injectFunction(GraftFunctions.bloomContainsDescriptor)
-    ext.injectFunction(GraftFunctions.hexParityMaskDescriptor)
-    ext.injectFunction(GraftFunctions.dotDescriptor)
-    ext.injectFunction(GraftFunctions.cdcCutsDescriptor)
-    ext.injectFunction(GraftFunctions.minKDescriptor)
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
     // evaluation-mode upgrade for the idiomatic HOF dot-product pattern
     // (zip_with+aggregate cannot codegen) — see RewriteDotProduct
     ext.injectOptimizerRule(_ => RewriteDotProduct)
@@ -118,20 +114,49 @@ object GraftFunctions {
       MinKDistinct(children.head, children(1))
     })
 
+  /** Largest k `graft_top_k` accepts. Spark's `CollectTopK` buffer is a
+    * `BoundedPriorityQueue` whose `java.util.PriorityQueue` is pre-sized
+    * to k for EVERY group buffer, before a single row arrives — so k is
+    * capped well above any ranking cut (the largest in use is 100) and
+    * far below a size that would allocate per-group arrays for nothing. */
+  val maxTopK: Int = 65536
+
+  /** Bounded per-key top-k — Spark's own `CollectTopK` under a SQL name:
+    * `graft_top_k(x, k)` is the k smallest values of `x` in its natural
+    * ordering (structs field by field), as an ascending array; duplicates
+    * are kept and NULL values skipped, so it is value-identical to
+    * `slice(array_sort(collect_list(x)), 1, k)`. The bound holds while
+    * rows arrive: a value worse than the current k-th best is dropped on
+    * arrival, and each task's partial aggregate ships ≤ k values per
+    * group. `k` must be a constant INT or BIGINT in [1, [[maxTopK]]];
+    * anything else fails analysis with a `graft_top_k` message. */
+  val topKDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("graft_top_k"),
+    new ExpressionInfo(classOf[CollectTopK].getName, "graft_top_k"),
+    (children: Seq[Expression]) => {
+      require(children.size == 2, "graft_top_k(x, k) takes exactly 2 arguments")
+      val Seq(x, kExpr) = children
+      def fail(msg: String): Nothing = throw new AnalysisException(
+        "DATATYPE_MISMATCH.TYPE_CHECK_FAILURE_WITH_HINT",
+        Map("sqlExpr" -> s"\"graft_top_k(${x.sql}, ${kExpr.sql})\"", "msg" -> msg, "hint" -> ""))
+      MinKDistinct.kError("graft_top_k", kExpr, maxTopK).foreach(fail)
+      if (!RowOrdering.isOrderable(x.dataType))
+        fail(s"graft_top_k: x must be orderable, got ${x.dataType.sql}")
+      new CollectTopK(x, kExpr.eval().asInstanceOf[Number].intValue, true, 0, 0)
+    })
+
+  /** Every SQL function the engine registers, in one list for both entry
+    * points. */
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(cosineDescriptor, bloomContainsDescriptor, hexParityMaskDescriptor,
+      dotDescriptor, cdcCutsDescriptor, minKDescriptor, topKDescriptor)
+
   /** Idempotent imperative registration into `spark`'s function registry. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", es => cosineDescriptor._3(es), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", es => bloomContainsDescriptor._3(es), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hex_parity_mask", es => hexParityMaskDescriptor._3(es), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", es => dotDescriptor._3(es), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_cuts", es => cdcCutsDescriptor._3(es), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_min_k", es => minKDescriptor._3(es), "internal")
+    descriptors.foreach { case (id, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        id.funcName, build, "internal")
+    }
     // the imperative twin of injectOptimizerRule for sessions built
     // without the extension (idempotent like the registrations above)
     if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
@@ -187,5 +212,13 @@ object GraftFunctions {
   def minK(df: DataFrame, x: Column, k: Int): Column = {
     register(df.sparkSession)
     call_function("graft_min_k", x, org.apache.spark.sql.functions.lit(k))
+  }
+
+  /** Column-level bounded top-k (aggregate; use inside .agg): ascending
+    * array of the group's k smallest `x` — see [[topKDescriptor]]. Rank
+    * "best k by score DESC, id ASC" as `topK(df, struct(-score, id, …), k)`. */
+  def topK(df: DataFrame, x: Column, k: Int): Column = {
+    register(df.sparkSession)
+    call_function("graft_top_k", x, org.apache.spark.sql.functions.lit(k))
   }
 }

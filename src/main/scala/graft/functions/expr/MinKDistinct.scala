@@ -41,16 +41,8 @@ case class MinKDistinct(child: Expression, kExpr: Expression,
     import TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
     if (child.dataType != LongType)
       TypeCheckFailure(s"graft_min_k expects BIGINT, got ${child.dataType}")
-    else if (!kExpr.foldable)
-      TypeCheckFailure(s"graft_min_k: k must be a constant, got ${kExpr.sql}")
-    else kExpr.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => kExpr.eval() match {
-        case v: Number if v.longValue >= 1 && v.longValue <= MinKDistinct.maxK => TypeCheckSuccess
-        case v => TypeCheckFailure(
-          s"graft_min_k: k must be in [1, ${MinKDistinct.maxK}], got $v")
-      }
-      case t => TypeCheckFailure(s"graft_min_k: k must be INT or BIGINT, got ${t.sql}")
-    }
+    else MinKDistinct.kError("graft_min_k", kExpr, MinKDistinct.maxK)
+      .fold[TypeCheckResult](TypeCheckSuccess)(TypeCheckFailure)
   }
 
   override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
@@ -116,4 +108,17 @@ case class MinKDistinct(child: Expression, kExpr: Expression,
 object MinKDistinct {
   /** Largest k whose serialized buffer (4 + 8k bytes) fits one array. */
   val maxK: Long = (Int.MaxValue - 4) / 8
+
+  /** Why `kExpr`, the k argument of the bounded aggregate `fn`, is not a
+    * constant INT or BIGINT in [1, max] — None when it is. Shared by
+    * `graft_min_k` and `graft_top_k` so both reject a bad k alike. */
+  def kError(fn: String, kExpr: Expression, max: Long): Option[String] =
+    if (!kExpr.foldable) Some(s"$fn: k must be a constant, got ${kExpr.sql}")
+    else kExpr.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => kExpr.eval() match {
+        case v: Number if v.longValue >= 1 && v.longValue <= max => None
+        case v => Some(s"$fn: k must be in [1, $max], got $v")
+      }
+      case t => Some(s"$fn: k must be INT or BIGINT, got ${t.sql}")
+    }
 }

@@ -267,10 +267,9 @@ object Dedup {
     * [[estimatedJaccardPairs]] (each undirected candidate pair serves
     * both endpoints as a query) and keep each doc's best `topK` by
     * (j_est DESC, n_id ASC). Ranking uses [[Similarity.topKPerQuery]]'s
-    * two-phase partial top-k — local best-k per input partition, then a
-    * merge of ≤ k·partitions survivors — NEVER a per-doc window sort, so
-    * a boilerplate doc with 10⁶ candidates costs bounded per-group state,
-    * not one sorting task (the same skew discipline as the ANN family).
+    * bounded `graft_top_k` aggregate — NEVER a per-doc window sort, so a
+    * boilerplate doc with 10⁶ candidates costs O(k) per-group state, not
+    * one sorting task (the same skew discipline as the ANN family).
     * Ties are exact: j_est is an integer agreement count divided once,
     * so equal estimates are bit-equal and the n_id tiebreak is total.
     * Output: q_id, n_id, j_est — ≤ topK rows per q_id that has any
@@ -396,11 +395,20 @@ object Dedup {
       .filter(col("df") >= minDf).select(col("h"))
     val dupPerDoc = units.join(dup, "h")
       .groupBy(col("doc_id")).agg(count(lit(1)).as(dupC))
+    perDocShare(units, dupPerDoc, dupC, totC, "dup_ratio")
+  }
+
+  /** The per-doc ratio tail of [[duplicateShare]] and [[noveltyScores]]:
+    * each doc's unit count (`totC`) left-joined to a (doc_id, `partC`)
+    * numerator frame — a doc the numerator lacks counts 0 — and
+    * `ratioC` = partC / totC (round 4). */
+  private def perDocShare(units: DataFrame, part: DataFrame, partC: String,
+                          totC: String, ratioC: String): DataFrame = {
+    val n = coalesce(col(partC), lit(0L))
     units.groupBy(col("doc_id")).agg(count(lit(1)).as(totC))
-      .join(dupPerDoc, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col(dupC), lit(0L)).as(dupC), col(totC),
-        detRound(coalesce(col(dupC), lit(0L)).cast("double") / col(totC), 4)
-          .as("dup_ratio"))
+      .join(part, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), n.as(partC), col(totC),
+        detRound(n.cast("double") / col(totC), 4).as(ratioC))
   }
 
   /** First-holder novelty score — [[duplicatedSpans]]' complement: the
@@ -422,17 +430,11 @@ object Dedup {
     val sh = graft.Persist.cut(spanHashSet(docs, n))
     // the min-holder aggregate ALREADY attributes each span to exactly one
     // doc, so per-doc novel counts re-aggregate that span-keyed frame
-    // directly — no postings⋈holders join over |spans| rows (the shape
-    // this operator shipped with; the rewrite cut the |spans|-row join to
-    // two doc-sized frames and a doc-keyed join)
+    // directly — no postings⋈holders join over |spans| rows, only two
+    // doc-sized frames and a doc-keyed join
     val novel = sh.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("novel_spans"))
-    sh.groupBy(col("doc_id")).agg(count(lit(1)).as("total_spans"))
-      .join(novel, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("novel_spans"), lit(0L)).as("novel_spans"),
-        col("total_spans"),
-        detRound(coalesce(col("novel_spans"), lit(0L)).cast("double") /
-          col("total_spans"), 4).as("novelty"))
+    perDocShare(sh, novel, "novel_spans", "total_spans", "novelty")
   }
 
   /** The span index [[noveltyAgainst]] probes: distinct 32-byte span
@@ -596,12 +598,8 @@ object Dedup {
     * raw data — store (stratum, mins) and the daily merge is k values
     * per stratum per day.
     *
-    * Scale shape: one distinct over (stratum, shingle) — the only
-    * corpus-sized shuffle, shared discipline with [[shingleSet]] — then
-    * two-phase min-k (per-partition mins, then a merge of ≤ k·partitions
-    * values per stratum; the [[Similarity]] top-k pattern, no window).
-    * Phase-1 state is the partition's distinct hashes per stratum — the
-    * topKPerQuery trade, bounded by partition sizing not corpus size.
+    * Scale shape: see [[kmvSketch]] — one bounded `graft_min_k`
+    * aggregate per stratum, no window, O(k) per-group state.
     * Output: stratum, n_sketch, est_distinct (round 4). */
   def kmvEstimates(docs: DataFrame, stratum: Column, n: Int = 3,
                    k: Int = 64): DataFrame =
@@ -620,37 +618,20 @@ object Dedup {
                 k: Int = 64): DataFrame = {
     require(k >= 2, "KMV needs k >= 2 (the estimator divides by the k-th minimum)")
     // NO pre-aggregation `.distinct()` (the minhashSignatures discipline):
-    // `collect_set` dedups hash VALUES inside every phase-1 group and the
-    // phase-2 merge dedups across groups, so the sketch is bit-identical
-    // while the corpus-sized Exchange of (stratum, shingle TEXT) — the
-    // operator's one full-data shuffle — disappears outright (guide §2.4).
-    // Phase 1 now runs on SCAN partitions (min-k is associative, so the
-    // grouping is partitioning-independent) with the BOUNDED graft_min_k
-    // aggregate: the k-bound holds DURING accumulation, so per-group
-    // state is O(k) and the only rows that cross the network are ≤ k
-    // longs per (stratum, partition) — the bound the collect_set
-    // formulation only achieved after the merge (its partial buffers
-    // shipped each partition's full distinct-hash set, ADVICE r15). The
-    // md5 trade stands: one hash per shingle OCCURRENCE instead of per
-    // distinct (stratum, s) — pure codegen'd per-row work that scales
+    // graft_min_k dedups hash VALUES in its partial and final buffers, so
+    // no corpus-sized Exchange of (stratum, shingle TEXT) is needed
+    // (guide §2.4). Its k-bound holds DURING accumulation, so per-group
+    // state is O(k) and each task's partial aggregate ships ≤ k longs
+    // per stratum. The md5 trade: one hash per shingle OCCURRENCE instead of
+    // per distinct (stratum, s) — pure codegen'd per-row work that scales
     // out, vs a shuffle that scales with the corpus.
     val u = docs
       .select(stratum.as("stratum"), rawTokens(col("text")).as("ts"))
       .select(col("stratum"), explode(shinglesOrEmpty(col("ts"), n)).as("s"))
       .select(col("stratum"),
         conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("u"))
-    // graft_min_k maintains the k-bound DURING accumulation (O(k) buffer
-    // per group, ≤ k longs per group on the phase-1 exchange) — the true
-    // per-partition top-k the paragraph above says collect_set lacks;
-    // value-identical to slice(array_sort(collect_set(u)), 1, k).
-    val minKOf = (df: DataFrame, c: Column) =>
-      graft.GraftFunctions.minK(df, c, k)
-    val local = u.withColumn("__p", spark_partition_id())
-      .groupBy(col("stratum"), col("__p"))
-      .agg(minKOf(u, col("u")).as("mins"))
-    local.select(col("stratum"), explode(col("mins")).as("u"))
-      .groupBy(col("stratum"))
-      .agg(minKOf(u, col("u")).as("mins"))
+    u.groupBy(col("stratum"))
+      .agg(graft.GraftFunctions.minK(u, col("u"), k).as("mins"))
   }
 
   /** Merge any number of [[kmvSketch]] frames (unioned) back into one

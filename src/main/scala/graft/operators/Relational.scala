@@ -15,7 +15,7 @@ import graft.functions.NumericFunctions.detRound
   *    (window over PARTITION BY key). A window partition is one task, so
   *    these are for keys with BOUNDED group sizes (orders have dozens of
   *    events, not millions); for unbounded/hot keys use saltedAgg or the
-  *    two-phase top-k pattern in Similarity instead.
+  *    bounded `graft_top_k` aggregate (Similarity.topKPerQuery) instead.
   *  - upsert is one full-outer shuffle join on the key; at production scale
   *    the base side would be bucketed on the key so only the delta shuffles.
   *  - topK uses Spark's TakeOrderedAndProject (per-partition partial top-k,

@@ -20,9 +20,8 @@ import graft.functions.NumericFunctions.detRound
   *    bound, not a hash match).
   *
   * Skew discipline: NO `row_number() OVER (PARTITION BY q_id)` anywhere —
-  * that would sort each query's entire candidate set in one task. Top-k is a
-  * two-phase aggregation (local top-k per input partition, then a merge of
-  * ≤k·partitions candidates per query), and nearest-centroid is a `max_by`
+  * that would sort each query's entire candidate set in one task. Top-k is
+  * the bounded `graft_top_k` aggregate and nearest-centroid is a `max_by`
   * aggregate — both run with map-side partial aggregation and bounded
   * per-group state.
   *
@@ -38,20 +37,14 @@ object Similarity {
     round(GraftFunctions.cosine(df, a, b), 4)
 
   /** Per-query top-k of a scored frame (q_id, n_id, sim) without a global
-    * per-query sort. Phase 1 keeps the best k per (q_id, input partition);
-    * phase 2 merges the ≤ k·numPartitions survivors per query. Sort key is
-    * struct(-sim, n_id): array_sort orders field-lexicographically, giving
-    * sim DESC then n_id ASC. */
-  private[operators] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    * per-query sort: one bounded `graft_top_k` aggregate per query, so the
+    * partial aggregate keeps only the best k per query as rows arrive and
+    * each task ships ≤ k candidates per query. Sort key is struct(-sim, n_id):
+    * field-lexicographic ascending, giving sim DESC then n_id ASC. */
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val cand = struct((-col("sim")).as("negsim"), col("n_id"), col("sim"))
-    val local = scored
-      .withColumn("__p", spark_partition_id())
-      .groupBy(col("q_id"), col("__p"))
-      .agg(slice(array_sort(collect_list(cand)), 1, k).as("top"))
-    local
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .groupBy(col("q_id"))
-      .agg(slice(array_sort(collect_list(col("t"))), 1, k).as("top"))
+    scored.groupBy(col("q_id"))
+      .agg(GraftFunctions.topK(scored, cand, k).as("top"))
       .select(col("q_id"), explode(col("top")).as("t"))
       .select(col("q_id"), col("t.n_id").as("n_id"), col("t.sim").as("sim"))
   }
@@ -349,7 +342,7 @@ object Similarity {
     val q = emb.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     // probe-cluster ranking is queries × codebook — both broadcast-small;
-    // reuses the two-phase top-k so no Window sneaks into the plan
+    // reuses the bounded top-k so no Window sneaks into the plan
     val qcScored = broadcast(q).join(broadcast(centroids.select(col("c_id"), col("c_emb"))))
       .select(col("q_id"), col("c_id").as("n_id"),
         simCol(emb)(col("q_emb"), col("c_emb")).as("sim"))
@@ -414,7 +407,7 @@ object Similarity {
     * random negatives teach nothing; the hardest ones sit just across
     * the label boundary). Same scale shape as [[bruteForceTopK]]:
     * queries broadcast, corpus streams (the label filter prunes inside
-    * the broadcast join), two-phase window-free top-k. Output: q_id,
+    * the broadcast join), window-free bounded top-k. Output: q_id,
     * n_id, sim. */
   def hardNegatives(emb: DataFrame, queryPred: Column, k: Int,
                     labelCol: String = "label"): DataFrame = {

@@ -283,8 +283,8 @@ object TextAnalysis {
     * length-weighted" must be reproducible across runs and engines
     * (weights > 0; larger weight ⇒ key nearer 0 ⇒ higher priority).
     *
-    * Selection uses the shared two-phase partial top-k — bounded
-    * per-group state, never a per-stratum window — and keys round to 6
+    * Selection uses the shared `graft_top_k` cut — bounded per-group
+    * state, never a per-stratum window — and keys round to 6
     * decimals with a doc_id tiebreak, so the ~1-ulp liberty libm pow/ln
     * implementations have cannot flip a rank across engines (the
     * x11-x13 discipline). Output: stratum, doc_id, priority. */
@@ -1736,12 +1736,12 @@ object TextAnalysis {
     *
     * Scale shape: one (source, term) count aggregate with map-side
     * partials (hot terms absorbed exactly like [[vocabulary]]); the
-    * top-`topV` cut is the two-phase partial top-k (best topV per input
-    * partition, then per-source merge — bounded per-group state, ZERO
-    * Window nodes: rank falls out of the sorted array position). The OLS
-    * sums are four ROUND-6 DECIMAL(18,6) terms per source — order-free
-    * addition (the x37 convention), so the fit is insensitive to
-    * aggregation order on both engines; slope/intercept are one double
+    * top-`topV` cut is one bounded `graft_top_k` aggregate per source
+    * (O(topV) per-group state, ZERO Window nodes: rank falls out of the
+    * sorted array position). The OLS sums are four ROUND-6
+    * DECIMAL(18,6) terms per source — order-free addition (the x37
+    * convention), so the fit is insensitive to aggregation order on
+    * both engines; slope/intercept are one double
     * expression over the exact sums. Sources with a single distinct term
     * have no variance to fit and drop. Output: source, n_terms,
     * slope (ROUND 4), intercept (ROUND 4). */
@@ -1762,17 +1762,11 @@ object TextAnalysis {
     * operator and the incremental runner's fold, so the two cannot
     * drift. */
   def zipfSlopeFromCounts(counts: DataFrame, topV: Int = 100): DataFrame = {
-    val tc = counts
-    // sort key struct(-c, term): array_sort is field-lexicographic →
-    // count DESC, term ASC — the deterministic cut the oracle's
-    // ROW_NUMBER replays
+    // sort key struct(-c, term): field-lexicographic → count DESC, term
+    // ASC — the deterministic cut the oracle's ROW_NUMBER replays
     val cand = struct((-col("c")).as("negc"), col("term"), col("c"))
-    val top = tc.withColumn("__p", spark_partition_id())
-      .groupBy(col("source"), col("__p"))
-      .agg(slice(array_sort(collect_list(cand)), 1, topV).as("top"))
-      .select(col("source"), explode(col("top")).as("t"))
-      .groupBy(col("source"))
-      .agg(slice(array_sort(collect_list(col("t"))), 1, topV).as("top"))
+    val top = counts.groupBy(col("source"))
+      .agg(graft.GraftFunctions.topK(counts, cand, topV).as("top"))
       .select(col("source"), posexplode(col("top")))
       .select(col("source"), (col("pos") + 1).cast("double").as("__x"),
         col("col").getField("c").cast("double").as("__y"))
@@ -2013,14 +2007,14 @@ object TextAnalysis {
     * zero out and each source's report reads as "what this feed talks
     * about that others don't" — the at-a-glance characterization a
     * curation team reads before weighting a new source. Top-`k` per
-    * source by (ROUND-4 score DESC, term ASC) via the two-phase partial
-    * top-k (zero Window nodes); rank is the sorted-array position.
+    * source by (ROUND-4 score DESC, term ASC) via the bounded
+    * `graft_top_k` aggregate (zero Window nodes); rank is the
+    * sorted-array position.
     *
     * Scale shape: rides [[zipfCounts]] (one count pass feeds x122, x130,
     * x131, and this); source-df is a term-keyed aggregate with map-side
     * partials; |sources| is a 1-row broadcast. Per-group top-k state is
-    * bounded (the [[Similarity.topKPerQuery]] discipline). Output:
-    * source, pos (1-based), term, score. */
+    * bounded by k. Output: source, pos (1-based), term, score. */
   def sourceTopTerms(docs: DataFrame, k: Int = 5): DataFrame =
     sourceTopTermsFromCounts(zipfCounts(docs), k)
 
@@ -2035,12 +2029,8 @@ object TextAnalysis {
         round(col("c").cast("double") *
           log(col("__ns") / col("__df").cast("double")), 4).as("score"))
     val cand = struct((-col("score")).as("negs"), col("term"), col("score"))
-    scored.withColumn("__p", spark_partition_id())
-      .groupBy(col("source"), col("__p"))
-      .agg(slice(array_sort(collect_list(cand)), 1, k).as("top"))
-      .select(col("source"), explode(col("top")).as("t"))
-      .groupBy(col("source"))
-      .agg(slice(array_sort(collect_list(col("t"))), 1, k).as("top"))
+    scored.groupBy(col("source"))
+      .agg(graft.GraftFunctions.topK(scored, cand, k).as("top"))
       .select(col("source"), posexplode(col("top")))
       .select(col("source"), (col("pos") + 1).cast("long").as("pos"),
         col("col").getField("term").as("term"),

@@ -1048,7 +1048,8 @@ object ExtensionQueries {
     TextAnalysis.sourceDivergence(docs(s, dir)).orderBy("stratum")
 
   /** x80: per-doc top-k similar docs over the x43 signature scores —
-    * ranked by the two-phase partial top-k, never a per-doc window. */
+    * ranked by the bounded `graft_top_k` aggregate, never a per-doc
+    * window. */
   val neighborTopK = 5
 
   def x80(s: SparkSession, dir: String): DataFrame =
@@ -3051,8 +3052,8 @@ object ExtensionQueries {
         |FROM oh FULL OUTER JOIN nh ON oh.doc_id = nh.doc_id
         |WHERE oh.h IS NULL OR nh.h IS NULL OR oh.h <> nh.h
         |ORDER BY doc_id""".stripMargin,
-    // the native per-query window IS the oracle: the engine's two-phase
-    // partial top-k must reproduce ROW_NUMBER selection exactly (ties
+    // the native per-query window IS the oracle: the engine's bounded
+    // top-k must reproduce ROW_NUMBER selection exactly (ties
     // land on bit-equal j_est, broken by n_id on both sides)
     "x80_topk_neighbors" ->
       s"""WITH $lshCtes,
@@ -4071,7 +4072,7 @@ object ExtensionQueries {
          |WHERE rn <= 10 ORDER BY q_id, sim DESC, n_id""".stripMargin,
     // the ES priority key as one shared expression: md5-salted uniform,
     // ln, divide by weight, ROUND 6; the native window replays the
-    // engine's two-phase selection
+    // engine's bounded top-k selection
     "x88_weighted_sample" -> {
       val m = 1L << 30
       s"""WITH p AS (SELECT lang AS stratum, doc_id,
@@ -4683,7 +4684,7 @@ object ExtensionQueries {
          |FROM lw JOIN seq$bpeRounds sq ON sq.w = lw.w
          |GROUP BY lang ORDER BY lang""".stripMargin,
     // OLS of ln(freq) on ln(rank) over the ROW_NUMBER head cut (count
-    // DESC, term ASC — the two-phase top-k's struct order); the four sums
+    // DESC, term ASC — the bounded top-k's struct order); the four sums
     // are ROUND-6 DECIMALs (order-free, x37), slope/intercept ONE double
     // expression over them, +0.0 normalizing any tiny-negative zero
     "x122_zipf_slope" ->
@@ -4898,7 +4899,7 @@ object ExtensionQueries {
         |FROM g GROUP BY from_type, to_type
         |ORDER BY from_type, to_type""".stripMargin,
     // source-level TF-IDF: count · ln(|sources|/df), ROUND-4 ordering
-    // with a term tiebreak (the ROW_NUMBER replay of the two-phase cut)
+    // with a term tiebreak (the ROW_NUMBER replay of the bounded top-k)
     "x133_source_terms" ->
       s"""WITH tc AS (SELECT source, term, count(*)::BIGINT AS c FROM
          |    (SELECT source,

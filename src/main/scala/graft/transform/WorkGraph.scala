@@ -60,10 +60,6 @@ object WorkGraph {
       Seq(col("created_date").desc_nulls_last,
         hash(struct(tempMaster.columns.toSeq.map(col): _*)).asc))
 
-  /** Q2 merge_temp_master (DAG:98-104, DOC:8): upsert temp into master. */
-  def mergeTempMaster(master: DataFrame, temp: DataFrame): DataFrame =
-    Relational.upsert(master, temp, oid)
-
   /** Q3 INSERT_DELIVERY_ORDER_WORK_TEMP (DAG:106-112): seed the work frame
     * from master — scalar columns only, the arrays stay in master. */
   def insertWorkTemp(master: DataFrame): DataFrame =
@@ -315,10 +311,4 @@ object WorkGraph {
     joinUpdate(master,
       work.select(col(oid), col("visit1_ts"), col("visitlast_ts"), col("macro_status")),
       oid)
-
-  /** Q20 delete_* staging truncation (DAG:280-318): in-engine the staging
-    * frames are session-scoped temp views — dropping them is the whole
-    * truncation. */
-  def truncateStaging(spark: org.apache.spark.sql.SparkSession, names: Seq[String]): Unit =
-    names.foreach(spark.catalog.dropTempView)
 }

@@ -14,6 +14,20 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** The bounded per-key cut: `agg` runs as a map-side partial aggregate,
+    * and no hand-rolled collect_list / spark_partition_id phase is left. */
+  private def assertBoundedTopK(p: String, agg: String): Unit = {
+    assert(p.contains(s"partial_$agg("), p)
+    assert(!p.contains("collect_list"), p)
+    assert(!p.contains("SPARK_PARTITION_ID()"), p)
+  }
+
+  test("x11: brute-force kNN ranks with the bounded collect_top_k — zero Window nodes") {
+    val p = plan(ExtensionQueries.x11)
+    assert("Window".r.findAllIn(p).isEmpty, p)
+    assertBoundedTopK(p, "collect_top_k")
+  }
+
   test("OQ01: filter and projection are pushed into the parquet scan") {
     val p = plan(OracleQueries.oq01)
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,45.0)]"), p)
@@ -389,9 +403,9 @@ class PlanSpec extends SparkSpec {
   test("x74: KMV min-k is two-phase aggregation — zero Window nodes") {
     val p = plan(ExtensionQueries.x74).split("== Initial Plan ==").head
     // the naive k-th-minimum is ROW_NUMBER over a per-stratum sort; the
-    // sketch must build from partial collect+slice aggregates instead
+    // sketch must build from the partial graft_min_k aggregate instead
     assert("Window".r.findAllIn(p).isEmpty, p)
-    assert(p.contains("partial_"), p)
+    assertBoundedTopK(p, "graft_min_k")
   }
 
   test("x77: the salted join's exchange keys INCLUDE the salt (hot key spread)") {
@@ -424,7 +438,7 @@ class PlanSpec extends SparkSpec {
   test("x80: per-doc neighbor ranking is two-phase top-k — zero Window nodes") {
     val p = plan(ExtensionQueries.x80)
     assert("Window".r.findAllIn(p).isEmpty, p)
-    assert(p.contains("partial_"), p)
+    assertBoundedTopK(p, "collect_top_k")
   }
 
   test("x94: boilerplate strip is window-free and never collect_list-reassembles tokens") {
@@ -488,7 +502,8 @@ class PlanSpec extends SparkSpec {
   test("x122: the Zipf head cut is two-phase aggregation — zero Window nodes, partial counts") {
     val p = plan(ExtensionQueries.x122)
     assert("Window".r.findAllIn(p).isEmpty, p)
-    assert(p.contains("partial_"), p)
+    assert(p.contains("partial_count("), p)
+    assertBoundedTopK(p, "collect_top_k")
     assert(!p.contains("CartesianProduct"), p)
     // the fit reads exactly (text, source) — scan stays 2-column pruned
     assert(p.contains("ReadSchema: struct<text:string,source:string>"), p)
@@ -573,7 +588,7 @@ class PlanSpec extends SparkSpec {
     val p = plan(ExtensionQueries.x133)
     assert("Window".r.findAllIn(p).isEmpty, p)
     assert(!p.contains("CartesianProduct"), p)
-    assert(p.contains("partial_"), p)
+    assertBoundedTopK(p, "collect_top_k")
   }
 
   test("x134/x136: confusion matrix and behavior entropy are partial-aggregated, window-free") {

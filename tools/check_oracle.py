@@ -46,6 +46,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
 STRICT = "--strict" in sys.argv
+# positional args with every --flag filtered out, wherever the flag sits
+ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
+USAGE = __doc__[__doc__.index("Usage:"):].split("\n\n")[0]
 
 
 def canon(v):
@@ -89,7 +92,7 @@ def _run(sf_dir, out_dir, spill):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    names = [a for a in sys.argv[3:] if not a.startswith("--")]
+    names = ARGS[2:]
     if names:
         only = set(names[0].split(","))
         oracle = {k: v for k, v in oracle.items() if k in only}
@@ -147,4 +150,7 @@ def _run(sf_dir, out_dir, spill):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    if len(ARGS) < 2:
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
+    sys.exit(main(ARGS[0], ARGS[1]))
