@@ -58,18 +58,8 @@ object BackfillBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.wireCheckpointDir(spark)
-    val rt = Runtime.getRuntime
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    println(s"""{"metric":"env","jvm":"${System.getProperty("java.version")}",""" +
-      s""""heap_max_gb":${rt.maxMemory() / 1e9},"cpus":${rt.availableProcessors()},""" +
-      s""""load_avg":${os.getSystemLoadAverage},"spark_threads":"$cpus",""" +
-      s""""days":$days,"orders_per_day":$orders,"overlap":$overlap,"mode":"$mode"}""")
-
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
+    println(Sessions.envLine(cpus,
+      s""""days":$days,"orders_per_day":$orders,"overlap":$overlap,"mode":"$mode""""))
 
     val start = java.time.LocalDate.of(2024, 1, 15)
     val storeRoot = s"$outRoot/master_store"
@@ -100,7 +90,7 @@ object BackfillBench {
       prevMaster = Some(s"$outDir/delivery_order_master")
       total += secs
       daySecs += secs
-      release()
+      Sessions.release(spark)
       org.apache.commons.io.FileUtils.deleteDirectory(inDir.toFile)
     }
     // first/last thirds mean ratio: the O(history) smoke signal in one

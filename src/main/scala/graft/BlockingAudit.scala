@@ -45,11 +45,6 @@ import graft.sources.Tables
   */
 object BlockingAudit {
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: recall <caps>[ <fractions>] | curve <abs:N|frac:F> | planted <specs>")
@@ -62,18 +57,8 @@ object BlockingAudit {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.wireCheckpointDir(spark)
-    val rt = Runtime.getRuntime
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    println(s"""{"metric":"env","jvm":"${System.getProperty("java.version")}",""" +
-      s""""heap_max_gb":${rt.maxMemory() / 1e9},"cpus":${rt.availableProcessors()},""" +
-      s""""load_avg":${os.getSystemLoadAverage},"spark_threads":"$cpus","runs":$runs,"sf":"$sfDir"}""")
+    println(Sessions.envLine(cpus, s""""runs":$runs,"sf":"$sfDir""""))
     val docs = Tables(spark, sfDir, "documents")
-
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
 
     args(0) match {
       case "recall" =>
@@ -90,7 +75,7 @@ object BlockingAudit {
         // the uncapped truth: every pair >= threshold (blocking with an
         // infinite cap finds every pair sharing ANY shingle, a superset
         // of every pair with J > 0) — landed in a tmp parquet, not a
-        // cache: release() between caps clears ALL persistent blocks and
+        // cache: Sessions.release between caps clears ALL persistent blocks and
         // a localCheckpoint'd truth cannot be recomputed after that
         val t0 = System.nanoTime()
         val truthDir = java.nio.file.Files
@@ -112,7 +97,7 @@ object BlockingAudit {
             s""""threshold":$threshold,"truth_pairs":${r.getLong(0)},""" +
             s""""found_pairs":$foundPairs,"matched_pairs":${r.getLong(1)},""" +
             s""""recall":${r.getDouble(2)},"secs":$secs}""")
-          release()
+          Sessions.release(spark)
         }
         caps.foreach { c =>
           report(s"abs:$c", c.toLong,
@@ -160,7 +145,7 @@ object BlockingAudit {
             s""""truth_pairs":${r.getLong(0)},"found_pairs":$foundPairs,""" +
             s""""matched_pairs":${r.getLong(1)},"recall":${r.getDouble(2)},""" +
             s""""secs":$secs}""")
-          release()
+          Sessions.release(spark)
         }
         args(1).split(",").map(_.trim).filter(_.nonEmpty).foreach { s =>
           s.split(":") match {
@@ -200,13 +185,13 @@ object BlockingAudit {
         }
         val pairs = query().count() // warm-up, untimed; also the result size
         val times = (1 to runs).map { _ =>
-          release()
+          Sessions.release(spark)
           val t1 = System.nanoTime()
           query().write.mode("overwrite").format("noop").save()
           (System.nanoTime() - t1) / 1e9
         }
         println(s"""{"metric":"cap_curve","spec":"$spec","threshold":$threshold,""" +
-          s""""pairs":$pairs,"secs":${median(times)},"runs":$runs,"sf":"$sfDir"}""")
+          s""""pairs":$pairs,"secs":${Sessions.median(times)},"runs":$runs,"sf":"$sfDir"}""")
 
       case other => sys.error(s"unknown mode: $other")
     }

@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   * the session builder, asserted by SessionConfigSpec, instead of a
   * default three `spark-defaults.conf` lines away from silently off.
   * `conf/cluster-smoke.conf` pins the same three for cluster submits.
+  *
+  * It also holds the measurement mains' shared plumbing (Bench,
+  * BlockingAudit, BackfillBench, StreamStateBench): the `env` header
+  * line, the between-windows [[release]] and the [[median]] estimator.
   */
 object Sessions {
 
@@ -58,6 +62,42 @@ object Sessions {
   def wireCheckpointDir(spark: SparkSession): Unit =
     spark.sparkContext.getConf.getOption("spark.graft.checkpoint.dir")
       .foreach(spark.sparkContext.setCheckpointDir)
+
+  /** The `{"metric":"env",…}` header a measurement main prints first:
+    * jvm, max heap, cpus, load average and Spark threads, then `fields`
+    * — the main's own comma-separated JSON members — so a contended or
+    * misconfigured box is visible in the artifact itself. */
+  def envLine(cpus: String, fields: String): String = {
+    val rt = Runtime.getRuntime
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    s"""{"metric":"env","jvm":"${System.getProperty("java.version")}",""" +
+      s""""heap_max_gb":${rt.maxMemory() / 1e9},"cpus":${rt.availableProcessors()},""" +
+      s""""load_avg":${os.getSystemLoadAverage},"spark_threads":"$cpus",$fields}"""
+  }
+
+  /** Inter-window hygiene: every Persist.hot/cut inside a measured run
+    * leaves cached or localCheckpoint'd blocks alive until the driver GCs
+    * the last reference — across ~4x130 query executions that squeezes
+    * execution memory (spill-visible: the SAME query measured 3-4x
+    * slower at the end-to-end contract size than in isolation). Each
+    * window's blocks are dead once it returns, so releasing them between
+    * timed windows measures the engine, not the harness's accumulated
+    * garbage; a window still pays its OWN materialization. The GC forces
+    * the dead blocks OUT before the next window: without it, collection
+    * debt from window N lands as a GC pause inside window N+1 — observed
+    * as 2-4x per-query swings that vanish when the same query runs
+    * isolated. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    System.gc()
+  }
+
+  /** Median of the timed passes (the mean of the middle two when even). */
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
 
   /** local[cpus] builder with the shared baseline: shuffle partitions =
     * thread count (local[n] has no cluster to fan to; AQE coalesces

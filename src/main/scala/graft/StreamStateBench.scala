@@ -67,12 +67,8 @@ object StreamStateBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Sessions.wireCheckpointDir(spark)
-    val rt = Runtime.getRuntime
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    println(s"""{"metric":"env","jvm":"${System.getProperty("java.version")}",""" +
-      s""""heap_max_gb":${rt.maxMemory() / 1e9},"cpus":${rt.availableProcessors()},""" +
-      s""""load_avg":${os.getSystemLoadAverage},"spark_threads":"$cpus",""" +
-      s""""events":$n,"users":$users,"files_per_trigger":$fpt,"provider":"rocksdb"}""")
+    println(Sessions.envLine(cpus,
+      s""""events":$n,"users":$users,"files_per_trigger":$fpt,"provider":"rocksdb""""))
 
     // ---- the feed: n events, time-ordered into 50 range files ----------
     val feed = Files.createTempDirectory("graft_ssb_feed").toString

@@ -31,6 +31,18 @@ object NumericFunctions {
     floor(c * lit(p) + lit(0.5)).cast("double") / lit(p)
   }
 
+  /** The exact Shannon-entropy fold over per-term counts `c`, as two
+    * halves. [[entropyTermSum]] is the aggregate S = Σ round(c·ln c, 6)
+    * in DECIMAL(18,6): each term is rounded before it is summed, so the
+    * sum is exact and order-free. [[entropyFromSum]] finishes
+    * H = round(ln n − S/n, 4) in nats from the total count n. */
+  def entropyTermSum(c: Column): Column =
+    sum(round(c * log(c.cast("double")), 6).cast("decimal(18,6)"))
+
+  /** See [[entropyTermSum]]. */
+  def entropyFromSum(n: Column, s: Column): Column =
+    round(log(n.cast("double")) - s.cast("double") / n, 4)
+
   /** The oracle-side spelling of [[detRound]] — the SAME three IEEE ops
     * (multiply, add 0.5, floor) so both engines compute bit-identical
     * results from bit-identical inputs. The power of ten is written in

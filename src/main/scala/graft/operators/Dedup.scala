@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.NumericFunctions.detRound
 import graft.functions.TextFunctions._
@@ -835,27 +835,25 @@ object Dedup {
     * covers components with diameter into the hundreds, far beyond real
     * near-dup chains. If the graph still has not converged at `maxIters`,
     * falls back to the greedy answer — still a safe dedup (every dropped
-    * doc had a kept near-dup within 2 hops), just not cluster-canonical. */
+    * doc had a kept near-dup within 2 hops), just not cluster-canonical.
+    * No candidate pairs: every doc is kept. */
   def dropNearDuplicatesCC(docs: DataFrame, pairs: DataFrame,
                            maxIters: Int = 10): DataFrame =
-    componentLabels(pairs, maxIters) match {
-      case None => docs                       // no candidate pairs: keep all
-      case Some((_, false)) => dropNearDuplicates(docs, pairs) // greedy fallback
-      case Some((labels, true)) => docs.join(
+    ccKept(docs, pairs, maxIters)._1
+
+  /** The CC keep rule with its greedy fallback, and whether the labels
+    * converged: when they did, drop every doc whose label is not itself;
+    * otherwise [[dropNearDuplicates]]. */
+  private def ccKept(docs: DataFrame, pairs: DataFrame,
+                     maxIters: Int): (DataFrame, Boolean) = {
+    val (labels, converged) = componentLabels(pairs, maxIters)
+    val kept =
+      if (converged) docs.join(
         labels.filter(col("id") =!= col("lbl")).select(col("id").as("__drop")),
         docs("doc_id") === col("__drop"), "left_anti")
-    }
-
-  /** Public window onto the shared CC core for OTHER operator families
-    * (e.g. [[Linkage.erClusters]]' name-domain graph): converged
-    * min-label membership for every node appearing in `pairs`
-    * (`a_id`/`b_id` columns), or None on an edgeless graph. Semantics —
-    * including the finer-partition guarantee under a non-converged
-    * `maxIters` cap — are [[componentLabels]]'. Output: ((id, lbl)
-    * frame, converged). */
-  def componentMembership(pairs: DataFrame, maxIters: Int = 10)
-      : Option[(DataFrame, Boolean)] =
-    componentLabels(pairs, maxIters)
+      else dropNearDuplicates(docs, pairs)
+    (kept, converged)
+  }
 
   /** Near-dup cluster-size histogram — the dedup-graph HEALTH read: how
     * many components of each size the candidate graph has. A healthy
@@ -869,14 +867,9 @@ object Dedup {
     * for an alarm. Cost beyond the shared CC loop: two label-frame
     * aggregates. Output: component_size, n_components. */
   def componentSizeHistogram(pairs: DataFrame, maxIters: Int = 10): DataFrame =
-    componentLabels(pairs, maxIters) match {
-      case None =>
-        pairs.sparkSession.range(0)
-          .select(col("id").as("component_size"), col("id").as("n_components"))
-      case Some((labels, _)) =>
-        labels.groupBy(col("lbl")).agg(count(lit(1)).as("component_size"))
-          .groupBy(col("component_size")).agg(count(lit(1)).as("n_components"))
-    }
+    componentLabels(pairs, maxIters)._1
+      .groupBy(col("lbl")).agg(count(lit(1)).as("component_size"))
+      .groupBy(col("component_size")).agg(count(lit(1)).as("n_components"))
 
   /** INCREMENTAL connected components — the daily-cadence form of the CC
     * dedup family: fold a new batch's candidate pairs into EXISTING
@@ -900,15 +893,12 @@ object Dedup {
       .select(col("id").as("a_id"), col("lbl").as("b_id"))
     val selfOnly = oldLabels.filter(col("id") === col("lbl"))
       .select(col("id"), col("lbl"))
-    componentLabels(asPairs.unionByName(newPairs.select(col("a_id"), col("b_id"))),
-        maxIters) match {
-      case None => oldLabels.select(col("id"), col("lbl"))
-      case Some((labels, _)) =>
-        // nodes whose label was already themselves and who gained no new
-        // edge don't appear in the propagation input — carry them through
-        labels.unionByName(
-          selfOnly.join(labels.select(col("id")), Seq("id"), "left_anti"))
-    }
+    val (labels, _) = componentLabels(
+      asPairs.unionByName(newPairs.select(col("a_id"), col("b_id"))), maxIters)
+    // nodes whose label was already themselves and who gained no new
+    // edge don't appear in the propagation input — carry them through
+    labels.unionByName(
+      selfOnly.join(labels.select(col("id")), Seq("id"), "left_anti"))
   }
 
   /** Leakage-safe train/val/test assignment: [[TextAnalysis
@@ -928,32 +918,22 @@ object Dedup {
     * true components — which for THIS operator is the unsafe direction:
     * a cluster split across labels can still straddle a split boundary,
     * the exact leak the operator exists to prevent. So unlike
-    * [[dropNearDuplicatesCC]] the flag is SURFACED, not swallowed:
-    * `spark.graft.cc.onNonConverged` = `warn` (default — log and accept
-    * the residual-leak labeling) | `error` (throw; the setting a
-    * leakage-audited training run wants, telling the operator to raise
-    * maxIters instead).
+    * [[dropNearDuplicatesCC]] the flag is SURFACED, not swallowed
+    * ([[onNonConverged]]: `warn` by default — log and accept the
+    * residual-leak labeling — or `error`, the setting a leakage-audited
+    * training run wants).
     * Output: doc_id, split ('train'|'val'|'test'). */
   def splitByComponent(docs: DataFrame, pairs: DataFrame,
                        trainPct: Int = 90, valPct: Int = 5,
                        maxIters: Int = 10): DataFrame = {
     require(trainPct + valPct < 100, "train+val must leave room for test")
-    val keyed = componentLabels(pairs, maxIters) match {
-      case None => docs.select(col("doc_id"), col("doc_id").as("__k"))
-      case Some((labels, converged)) =>
-        if (!converged) {
-          val msg = s"splitByComponent: component labels did NOT converge " +
-            s"within maxIters=$maxIters — labels partition finer than true " +
-            "components and near-dup pairs may straddle split boundaries " +
-            "(train/test leakage). Raise maxIters."
-          docs.sparkSession.conf.get("spark.graft.cc.onNonConverged", "warn") match {
-            case "error" => throw new IllegalStateException(msg)
-            case _ => org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-          }
-        }
-        docs.join(labels, docs("doc_id") === labels("id"), "left_outer")
-          .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("__k"))
-    }
+    val (labels, converged) = componentLabels(pairs, maxIters)
+    onNonConverged(docs.sparkSession, converged,
+      s"splitByComponent: component labels did NOT converge " +
+        s"within maxIters=$maxIters — labels partition finer than true " +
+        "components and near-dup pairs may straddle split boundaries " +
+        "(train/test leakage). Raise maxIters.")
+    val keyed = attachLabels(docs, "doc_id", labels, "__k")
     val bucket = md5Mod(col("__k"), lit(100L))
     keyed.select(col("doc_id"),
       when(bucket < trainPct, "train")
@@ -994,16 +974,7 @@ object Dedup {
   def pageRank(pairs: DataFrame, iters: Int = 5,
                damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    // materialize the PAIR frame before symmetrizing: both union branches
-    // consume it, and callers pass the live candidate-generation lineage —
-    // cutting only the union (as before) ran that generation twice. The
-    // symmetrized view stays lazy: a union over a materialized frame is
-    // narrow, so per-iteration consumers pay two cheap rescans, never two
-    // candidate joins.
-    val fwd = graft.Persist.cut(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
-    val edges = fwd.unionByName(
-      fwd.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = undirectedEdges(pairs)
     val deg = graft.Persist.cut(
       edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     // greatest(n, 1): on an edgeless graph the rank frame is empty and the
@@ -1037,24 +1008,20 @@ object Dedup {
     ranks.select(col("id"), col("pr").cast("double").as("pr"))
   }
 
-  /** Converged min-label component ids for the candidate-pair graph —
-    * the shared CC core of [[dropNearDuplicatesCC]] (drop all but the
-    * minimum id) and [[keepBestPerCluster]] (keep the best-scoring doc
-    * per component). Returns None when the graph has no edges; otherwise
-    * ((id, lbl) for every node appearing in a pair, converged?) — on a
+  /** Converged min-label component ids for the candidate-pair graph
+    * (`a_id`/`b_id` columns) — the ONE CC core behind every component
+    * consumer: [[dropNearDuplicatesCC]], [[keepBestPerCluster]],
+    * [[splitByComponent]], the audits and [[Linkage.erClusters]]' name
+    * graph. Returns ((id, lbl) for every node appearing in a pair,
+    * converged?); an edgeless graph gives the (already materialized)
+    * empty label frame, converged — every consumer's join or aggregate
+    * over it is then its own no-pair answer (all nodes singletons). On a
     * non-converged cap the labels are a FINER partition than the true
     * components (label propagation only merges), which callers must
     * treat as "keep possibly-more representatives", never fewer. */
-  private def componentLabels(pairs: DataFrame,
-                              maxIters: Int): Option[(DataFrame, Boolean)] = {
-    // materialize the PAIR frame before symmetrizing (see [[pageRank]]):
-    // callers pass the live candidate-generation lineage, and the two
-    // union branches would otherwise run it twice; the symmetrized view
-    // over the cut frame is a narrow union, cheap to rescan per round
-    val fwd = graft.Persist.cut(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
-    val edges = fwd.unionByName(
-      fwd.select(col("dst").as("src"), col("src").as("dst")))
+  private[graft] def componentLabels(pairs: DataFrame,
+                                     maxIters: Int): (DataFrame, Boolean) = {
+    val edges = undirectedEdges(pairs)
     // round 1 folded into initialization: with all labels starting as own
     // ids, the first propagation is just least(id, min neighbor id) — one
     // aggregate over edges, no join.
@@ -1081,8 +1048,8 @@ object Dedup {
     def lblSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("lbl").cast("decimal(38,0)"))).collect().head.getDecimal(0)
     var prevSum = lblSum(labels)
-    if (prevSum == null) return None // no candidates at all (healthy corpus)
-    var converged = false
+    // no candidates at all (healthy corpus): the empty frame is the fixpoint
+    var converged = prevSum == null
     var i = 0
     while (i < maxIters && !converged) {
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
@@ -1109,8 +1076,41 @@ object Dedup {
       labels = next
       i += 1
     }
-    Some((labels, converged))
+    (labels, converged)
   }
+
+  /** The candidate pairs as an undirected (src, dst) edge frame, shared by
+    * [[componentLabels]] and [[pageRank]]. The PAIR frame is materialized
+    * before symmetrizing: callers pass the live candidate-generation
+    * lineage, and the two union branches would otherwise run it twice.
+    * The symmetrized view stays lazy — a union over a materialized frame
+    * is narrow, so per-round consumers pay two cheap rescans, never two
+    * candidate joins. */
+  private def undirectedEdges(pairs: DataFrame): DataFrame = {
+    val fwd = graft.Persist.cut(
+      pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
+    fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** `nodes` with its node's component label as column `as`: labels
+    * left-outer-joined on `nodeId`, and a node in no pair labels itself
+    * (a singleton component). */
+  private[operators] def attachLabels(nodes: DataFrame, nodeId: String,
+                                      labels: DataFrame, as: String): DataFrame =
+    nodes.join(labels, nodes(nodeId) === labels("id"), "left_outer")
+      .select(nodes.columns.map(nodes(_)) :+
+        coalesce(labels("lbl"), nodes(nodeId)).as(as): _*)
+
+  /** The one policy for a caller that must not accept a non-converged
+    * labeling silently: `spark.graft.cc.onNonConverged` = `warn`
+    * (default — log `msg` and go on with the finer labels) | `error`
+    * (throw it, telling the operator to raise maxIters). */
+  private[operators] def onNonConverged(spark: SparkSession, converged: Boolean,
+                                        msg: => String): Unit =
+    if (!converged) spark.conf.get("spark.graft.cc.onNonConverged", "warn") match {
+      case "error" => throw new IllegalStateException(msg)
+      case _ => org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
+    }
 
   /** Cluster-canonical dedup that keeps the BEST document per near-dup
     * component instead of the lowest id — "best" per `order` (e.g.
@@ -1129,13 +1129,7 @@ object Dedup {
     * one broadcast-friendly label join + one bounded-group window. */
   def keepBestPerCluster(docs: DataFrame, pairs: DataFrame,
                          order: Seq[Column], maxIters: Int = 10): DataFrame = {
-    val labeled = componentLabels(pairs, maxIters) match {
-      case None => docs.withColumn("__lbl", col("doc_id"))
-      case Some((labels, _)) => docs
-        .join(labels.select(col("id"), col("lbl")), docs("doc_id") === col("id"), "left_outer")
-        .withColumn("__lbl", coalesce(col("lbl"), col("doc_id")))
-        .drop("id", "lbl")
-    }
+    val labeled = attachLabels(docs, "doc_id", componentLabels(pairs, maxIters)._1, "__lbl")
     Relational.dedupeKeepFirst(labeled, Seq(col("__lbl")), order).drop("__lbl")
   }
 
@@ -1810,27 +1804,22 @@ object Dedup {
         .select(col("doc_id"), col("shard"), col("bin")))
     val nb = packed.select(col("shard"), col("bin")).distinct()
       .agg(count(lit(1)).as("n_bins"))
-    componentLabels(pairs, maxIters) match {
-      case None =>
-        nb.select(col("n_bins"), lit(0L).as("dirty_bins"),
-          lit(0L).as("colocated_pairs"))
-      case Some((labels, _)) =>
-        // `g` feeds two scalar aggregates (dirty bins + colocated pairs):
-        // materialize once (bounded: only (bin, cluster) groups with >= 2
-        // members) or the packed⋈labels join and groupBy run twice
-        val g = graft.Persist.cut(packed
-          .join(labels.select(col("id").as("doc_id"), col("lbl")), "doc_id")
-          .groupBy(col("shard"), col("bin"), col("lbl"))
-          .agg(count(lit(1)).as("__k"))
-          .filter(col("__k") >= 2L))
-        val dirty = g.select(col("shard"), col("bin")).distinct()
-          .agg(count(lit(1)).as("dirty_bins"))
-        val pairsN = g.agg(coalesce(
-          sum(expr("__k * (__k - 1) div 2")), lit(0L))
-          .cast("long").as("colocated_pairs"))
-        nb.crossJoin(broadcast(dirty)).crossJoin(broadcast(pairsN))
-          .select(col("n_bins"), col("dirty_bins"), col("colocated_pairs"))
-    }
+    val (labels, _) = componentLabels(pairs, maxIters)
+    // `g` feeds two scalar aggregates (dirty bins + colocated pairs):
+    // materialize once (bounded: only (bin, cluster) groups with >= 2
+    // members) or the packed⋈labels join and groupBy run twice
+    val g = graft.Persist.cut(packed
+      .join(labels.select(col("id").as("doc_id"), col("lbl")), "doc_id")
+      .groupBy(col("shard"), col("bin"), col("lbl"))
+      .agg(count(lit(1)).as("__k"))
+      .filter(col("__k") >= 2L))
+    val dirty = g.select(col("shard"), col("bin")).distinct()
+      .agg(count(lit(1)).as("dirty_bins"))
+    val pairsN = g.agg(coalesce(
+      sum(expr("__k * (__k - 1) div 2")), lit(0L))
+      .cast("long").as("colocated_pairs"))
+    nb.crossJoin(broadcast(dirty)).crossJoin(broadcast(pairsN))
+      .select(col("n_bins"), col("dirty_bins"), col("colocated_pairs"))
   }
 
   /** Dedup STRATEGY audit — greedy ([[dropNearDuplicates]]) vs
@@ -1862,14 +1851,8 @@ object Dedup {
     val base = docs.agg(count(lit(1)).as("n_docs"))
     val np = pairs.agg(count(lit(1)).as("n_pairs"))
     val g = dropNearDuplicates(docs, pairs).agg(count(lit(1)).as("kept_greedy"))
-    val (ccKept, converged) = componentLabels(pairs, maxIters) match {
-      case None => (docs, true) // no candidate pairs: CC trivially exact
-      case Some((_, false)) => (dropNearDuplicates(docs, pairs), false)
-      case Some((labels, true)) => (docs.join(
-        labels.filter(col("id") =!= col("lbl")).select(col("id").as("__drop")),
-        docs("doc_id") === col("__drop"), "left_anti"), true)
-    }
-    val c = ccKept.agg(count(lit(1)).as("kept_cc"))
+    val (cc, converged) = ccKept(docs, pairs, maxIters)
+    val c = cc.agg(count(lit(1)).as("kept_cc"))
     base.crossJoin(broadcast(np)).crossJoin(broadcast(g)).crossJoin(broadcast(c))
       .select(col("n_docs"), col("n_pairs"), col("kept_greedy"),
         col("kept_cc"),
@@ -2107,25 +2090,18 @@ object Dedup {
     * kept_tokens, saved_tokens. */
   def clusterTokenSavings(docs: DataFrame, pairs: DataFrame, k: Int = 20,
                           maxIters: Int = 10): DataFrame = {
-    val empty = docs.sparkSession.range(0).select(
-      col("id").as("cluster"), col("id").as("n_docs"),
-      col("id").as("total_tokens"), col("id").as("kept_tokens"),
-      col("id").as("saved_tokens"))
-    componentLabels(pairs, maxIters) match {
-      case None => empty
-      case Some((labels, _)) =>
-        val tok = docs.select(col("doc_id"),
-          size(tokens(col("text"))).cast("long").as("__nt"))
-        labels.join(tok, labels("id") === tok("doc_id"))
-          .groupBy(col("lbl").as("cluster"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("__nt")).as("total_tokens"),
-            min_by(col("__nt"), col("doc_id")).as("kept_tokens"))
-          .select(col("cluster"), col("n_docs"), col("total_tokens"),
-            col("kept_tokens"),
-            (col("total_tokens") - col("kept_tokens")).as("saved_tokens"))
-          .orderBy(col("saved_tokens").desc, col("cluster"))
-          .limit(k)
-    }
+    val (labels, _) = componentLabels(pairs, maxIters)
+    val tok = docs.select(col("doc_id"),
+      size(tokens(col("text"))).cast("long").as("__nt"))
+    labels.join(tok, labels("id") === tok("doc_id"))
+      .groupBy(col("lbl").as("cluster"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("__nt")).as("total_tokens"),
+        min_by(col("__nt"), col("doc_id")).as("kept_tokens"))
+      .select(col("cluster"), col("n_docs"), col("total_tokens"),
+        col("kept_tokens"),
+        (col("total_tokens") - col("kept_tokens")).as("saved_tokens"))
+      .orderBy(col("saved_tokens").desc, col("cluster"))
+      .limit(k)
   }
 }

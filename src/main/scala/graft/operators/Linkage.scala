@@ -35,8 +35,8 @@ import graft.functions.NumericFunctions.detRound
   *     [[Dedup.exactDuplicates]]' job) and the -1 sentinel.
   *
   * Cluster canonicalization ([[erClusters]]) reuses the shared CC core
-  * ([[Dedup.componentSizeHistogram]]'s label loop) over name-domain ids,
-  * so its cost is |distinct names|, not |rows|.
+  * ([[Dedup.componentLabels]]) over name-domain ids, so its cost is
+  * |distinct names|, not |rows|.
   */
 object Linkage {
 
@@ -93,14 +93,16 @@ object Linkage {
     * quality-ranked; [[Dedup.keepBestPerCluster]] is the ranked variant
     * on the document axis), the cluster width in distinct names, and the
     * entity-row mass it would merge. Names in no pair are their own
-    * canonical (singleton clusters). On a non-converged `maxIters` cap
-    * the labels partition FINER than truth (see Dedup's CC core): names
-    * may stay unmerged, never over-merge — the safe direction for a
-    * merge suggestion report, but SURFACED rather than silent (the
-    * `spark.graft.cc.onNonConverged` warn/error discipline shared with
+    * canonical (singleton clusters), including every name when no two
+    * names pair. On a non-converged `maxIters` cap the labels partition
+    * FINER than truth (see [[Dedup.componentLabels]]): names may stay
+    * unmerged, never over-merge — the safe direction for a merge
+    * suggestion report, but SURFACED rather than silent (the
+    * `spark.graft.cc.onNonConverged` warn/error policy shared with
     * [[Dedup.splitByComponent]]) because an exact-closure verification
-    * would otherwise read starvation as a mystery mismatch. Output:
-    * name, canonical, cluster_names, cluster_rows, n_rows. */
+    * — the x174 oracle — would otherwise read starvation as a mystery
+    * mismatch. Output: name, canonical, cluster_names, cluster_rows,
+    * n_rows. */
   def erClusters(df: DataFrame, name: Column, key: Column,
                  maxDist: Int = 2, maxBlock: Int = Int.MaxValue,
                  maxIters: Int = 10): DataFrame = {
@@ -111,32 +113,14 @@ object Linkage {
       .join(names.select(col("name").as("name_b"), col("name_id").as("b_id")),
         "name_b")
       .select(col("a_id"), col("b_id"))
-    val labeled = Dedup.componentMembership(pairs, maxIters) match {
-      case None => names.select(col("name"), col("name_id"),
-        col("n_rows"), col("name_id").as("lbl"))
-      case Some((labels, converged)) =>
-        // a starved maxIters yields FINER-than-truth clusters (safe for a
-        // merge report, but an exact-closure verification — the x174
-        // oracle — reads it as an undiagnosed mismatch), so the flag is
-        // SURFACED under the shared CC discipline: `spark.graft.cc
-        // .onNonConverged` = warn (default) | error, mirroring
-        // Dedup.splitByComponent
-        if (!converged) {
-          val msg = s"erClusters: component labels did NOT converge within " +
-            s"maxIters=$maxIters — clusters partition finer than the true " +
-            "closure (names stay unmerged; an exact-closure oracle will " +
-            "mismatch). Raise maxIters."
-          df.sparkSession.conf.get("spark.graft.cc.onNonConverged", "warn") match {
-            case "error" => throw new IllegalStateException(msg)
-            case _ => org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-          }
-        }
-        names.join(labels.withColumnRenamed("id", "name_id"),
-            Seq("name_id"), "left_outer")
-          .select(col("name"), col("name_id"), col("n_rows"),
-            coalesce(col("lbl"), col("name_id")).as("lbl"))
-    }
-    val l = graft.Persist.cut(labeled)
+    val (labels, converged) = Dedup.componentLabels(pairs, maxIters)
+    Dedup.onNonConverged(df.sparkSession, converged,
+      s"erClusters: component labels did NOT converge within " +
+        s"maxIters=$maxIters — clusters partition finer than the true " +
+        "closure (names stay unmerged; an exact-closure oracle will " +
+        "mismatch). Raise maxIters.")
+    val l = graft.Persist.cut(Dedup.attachLabels(names, "name_id", labels, "lbl")
+      .select(col("name"), col("name_id"), col("n_rows"), col("lbl")))
     val canon = l.groupBy(col("lbl"))
       .agg(min_by(col("name"), col("name_id")).as("canonical"),
         count(lit(1)).as("cluster_names"),

@@ -943,11 +943,9 @@ object Relational {
       .groupBy(col("key"))
       .agg(sum(col("c")).as("n_events"),
         count(lit(1)).as("distinct_types"),
-        sum(round(col("c") * log(col("c").cast("double")), 6)
-          .cast("decimal(18,6)")).as("__s"))
+        NumericFunctions.entropyTermSum(col("c")).as("__s"))
       .select(col("key"), col("n_events"), col("distinct_types"),
-        round(log(col("n_events").cast("double"))
-          - col("__s").cast("double") / col("n_events"), 4).as("entropy"))
+        NumericFunctions.entropyFromSum(col("n_events"), col("__s")).as("entropy"))
 
   /** Behavioral TWIN detection — groups of keys (users) whose event-type
     * SHARE profiles collide after quantization, the coordination tell
@@ -1452,13 +1450,11 @@ object Relational {
         count(lit(1)).as("distinct_hours"),
         min_by(col("h"), tieKey).as("peak_hour"),
         min_by(col("c"), tieKey).as("__pc"),
-        sum(round(col("c") * log(col("c").cast("double")), 6)
-          .cast("decimal(18,6)")).as("__s"))
+        NumericFunctions.entropyTermSum(col("c")).as("__s"))
       .select(col("event_type"), col("n_events"), col("distinct_hours"),
         col("peak_hour"),
         detRound(col("__pc").cast("double") / col("n_events"), 4).as("peak_share"),
-        round(log(col("n_events").cast("double"))
-          - col("__s").cast("double") / col("n_events"), 4).as("hour_entropy"))
+        NumericFunctions.entropyFromSum(col("n_events"), col("__s")).as("hour_entropy"))
   }
 
   /** Self-transition SHARE — what fraction of each type's outgoing hops

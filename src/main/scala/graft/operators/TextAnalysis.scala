@@ -1228,11 +1228,9 @@ object TextAnalysis {
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_tokens"),
         count(lit(1)).as("distinct_tokens"),
-        sum(round(col("c") * log(col("c").cast("double")), 6)
-          .cast("decimal(18,6)")).as("__s"))
+        NumericFunctions.entropyTermSum(col("c")).as("__s"))
       .select(col("doc_id"), col("n_tokens"), col("distinct_tokens"),
-        round(log(col("n_tokens").cast("double"))
-          - col("__s").cast("double") / col("n_tokens"), 4).as("entropy"))
+        NumericFunctions.entropyFromSum(col("n_tokens"), col("__s")).as("entropy"))
 
   /** Curation funnel report — the per-source "why did we drop what we
     * dropped" breakdown every corpus-curation dashboard leads with. Each

@@ -280,37 +280,49 @@ object ExtensionQueries {
     * is watermark-bounded, counts-only rows. */
   def w05(s: SparkSession, dir: String): DataFrame = {
     val e = Tables(s, dir, "events").select("event_id", "ts", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("graft_w05")
+    streamOracle(s, "w05", "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE",
+      Seq(e.filter(col("event_id") % 10 >= 2) -> "00_ontime.parquet",
+        e.filter(col("event_id") % 10 === 1) -> "01_advance.parquet",
+        e.filter(col("event_id") % 10 === 0) -> "02_replay.parquet"))(
+      graft.streaming.EventStream.hourlyCounts(_),
+      _.select(col("h"), col("event_type"), col("c")).orderBy("h", "event_type"))
+  }
+
+  /** The streaming-oracle harness of w05/w06: land each `(frame, file
+    * name)` as ONE parquet file under a fresh temp stream dir, the i-th
+    * with mtime (i + 1)·10⁶ ms — far apart, because FileStreamSource
+    * orders by (mtime, path) and the batch split IS the semantics under
+    * test. The landing writes are independent single-file jobs, submitted
+    * together so the later jobs back-fill the earlier ones' task tails
+    * (guide §2.6 overlap-independent-jobs); mtimes are pinned AFTER each
+    * write, so landing order is irrelevant. Then `transform` the file
+    * stream (`schema`, one file per trigger) into a UUID-named memory
+    * sink, run `AvailableNow` in append mode under
+    * [[withStreamStatePartitions]], and return `fold` of the sink table
+    * detached from the sink and the temp dirs. */
+  private def streamOracle(s: SparkSession, tag: String, schema: String,
+                           landings: Seq[(DataFrame, String)])(
+                           transform: DataFrame => DataFrame,
+                           fold: DataFrame => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory("graft_" + tag)
     val streamDir = root.resolve("stream")
     java.nio.file.Files.createDirectories(streamDir)
-    def land(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      landStreamFile(df, root, streamDir, name, mtimeMs)
-    // mtimes far apart: FileStreamSource orders by (mtime, path), and the
-    // three-batch split IS the semantics under test
-    // the three landing writes are independent single-file jobs: submit
-    // them concurrently so the later jobs back-fill the earlier ones'
-    // task tails (guide §2.6 overlap-independent-jobs) — mtimes are
-    // pinned AFTER each write, so landing order is irrelevant
-    graft.Concurrent.all(s)(Seq(
-      () => land(e.filter(col("event_id") % 10 >= 2), "00_ontime.parquet", 1000000L),
-      () => land(e.filter(col("event_id") % 10 === 1), "01_advance.parquet", 2000000L),
-      () => land(e.filter(col("event_id") % 10 === 0), "02_replay.parquet", 3000000L)))
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE")
+    graft.Concurrent.all(s)(landings.zipWithIndex.map { case ((df, name), i) =>
+      () => landStreamFile(df, root, streamDir, name, (i + 1) * 1000000L)
+    })
+    val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(streamDir.toString)
-    val sink = "w05_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val sink = tag + "_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withStreamStatePartitions(s) {
-      val q = graft.streaming.EventStream.hourlyCounts(stream)
+      transform(stream)
         .writeStream.format("memory").queryName(sink)
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
     }
-    detachStreamResult(s, sink, root,
-      s.table(sink).select(col("h"), col("event_type"), col("c"))
-        .orderBy("h", "event_type"))
+    detachStreamResult(s, sink, root, fold(s.table(sink)))
   }
 
   /** Run the streaming-twin engine pass with
@@ -419,40 +431,19 @@ object ExtensionQueries {
     * production analogue is the retry-idempotent AvailableNow runners. */
   def w06(s: SparkSession, dir: String): DataFrame = {
     val e = Tables(s, dir, "events").select("event_id", "ts")
-    val root = java.nio.file.Files.createTempDirectory("graft_w06")
-    val streamDir = root.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    def land(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      landStreamFile(df, root, streamDir, name, mtimeMs)
     val mx = e.agg(max(col("ts")).as("mxts"))
     val rep = e.filter(col("event_id") % 10 === 0)
       .select(col("event_id"), (col("ts") + expr("INTERVAL 3 HOURS")).as("ts"))
-    // independent landing jobs, submitted concurrently (guide §2.6); the
-    // advancer's max-ts aggregate rides its own broadcast subquery
-    graft.Concurrent.all(s)(Seq(
-      () => land(e, "00_base.parquet", 1000000L),
-      () => land(e.join(broadcast(mx), col("ts") === col("mxts"))
-        .select("event_id", "ts"), "01_advance.parquet", 2000000L),
-      () => land(rep.unionAll(
-        rep.select((col("event_id") + lit(1000000000L)).as("event_id"), col("ts"))),
-        "02_replay.parquet", 3000000L)))
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
-    val sink = "w06_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamStatePartitions(s) {
-      val q = stream.withWatermark("ts", "2 hours")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    detachStreamResult(s, sink, root,
-      s.table(sink)
-        .groupBy(col("event_id")).agg(count(lit(1)).as("emissions"))
+    // the advancer's max-ts aggregate rides its own broadcast subquery
+    streamOracle(s, "w06", "event_id LONG, ts TIMESTAMP",
+      Seq(e -> "00_base.parquet",
+        e.join(broadcast(mx), col("ts") === col("mxts"))
+          .select("event_id", "ts") -> "01_advance.parquet",
+        rep.unionAll(
+          rep.select((col("event_id") + lit(1000000000L)).as("event_id"), col("ts")))
+          -> "02_replay.parquet"))(
+      _.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark("event_id"),
+      _.groupBy(col("event_id")).agg(count(lit(1)).as("emissions"))
         .groupBy(
           when(col("event_id") >= 1000000000L, lit("fresh")).otherwise(lit("base"))
             .as("kind"),
