@@ -17,7 +17,9 @@ import org.apache.spark.sql.SparkSession
   *
   * It also holds the measurement mains' shared plumbing (Bench,
   * BlockingAudit, BackfillBench, StreamStateBench): the `env` header
-  * line, the between-windows [[release]] and the [[median]] estimator.
+  * line, the between-windows [[release]] and the [[median]] estimator;
+  * and [[policy]], the one validated read of an enumerated
+  * `spark.graft.*` policy key.
   */
 object Sessions {
 
@@ -62,6 +64,18 @@ object Sessions {
   def wireCheckpointDir(spark: SparkSession): Unit =
     spark.sparkContext.getConf.getOption("spark.graft.checkpoint.dir")
       .foreach(spark.sparkContext.setCheckpointDir)
+
+  /** The session's value of the enumerated policy `key` (`default` when
+    * unset). A value outside `allowed` throws IllegalArgumentException
+    * naming the key and the allowed values, so a misspelled policy fails
+    * instead of silently meaning some other one. */
+  private[graft] def policy(spark: SparkSession, key: String, default: String,
+                            allowed: Seq[String]): String = {
+    val v = spark.conf.get(key, default)
+    require(allowed.contains(v),
+      s"$key must be one of ${allowed.mkString(", ")}; got '$v'")
+    v
+  }
 
   /** The `{"metric":"env",…}` header a measurement main prints first:
     * jvm, max heap, cpus, load average and Spark threads, then `fields`

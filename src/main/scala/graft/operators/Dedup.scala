@@ -1104,13 +1104,17 @@ object Dedup {
   /** The one policy for a caller that must not accept a non-converged
     * labeling silently: `spark.graft.cc.onNonConverged` = `warn`
     * (default — log `msg` and go on with the finer labels) | `error`
-    * (throw it, telling the operator to raise maxIters). */
+    * (throw it, telling the operator to raise maxIters). The value is
+    * checked on every call, converged or not. */
   private[operators] def onNonConverged(spark: SparkSession, converged: Boolean,
-                                        msg: => String): Unit =
-    if (!converged) spark.conf.get("spark.graft.cc.onNonConverged", "warn") match {
+                                        msg: => String): Unit = {
+    val policy = graft.Sessions.policy(spark, "spark.graft.cc.onNonConverged",
+      "warn", Seq("warn", "error"))
+    if (!converged) policy match {
       case "error" => throw new IllegalStateException(msg)
       case _ => org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
+  }
 
   /** Cluster-canonical dedup that keeps the BEST document per near-dup
     * component instead of the lowest id — "best" per `order` (e.g.

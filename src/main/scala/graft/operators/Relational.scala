@@ -200,11 +200,17 @@ object Relational {
     * Output: key, bucket, n_events (0 for gaps). */
   def resampleCounts(df: DataFrame, key: String, ts: String,
                      unit: String = "day"): DataFrame =
-    fillGaps(
-      df.filter(col(key).isNotNull)
-        .select(col(key), date_trunc(unit, col(ts)).as("bucket"))
-        .groupBy(col(key), col("bucket")).agg(count(lit(1)).as("n_events")),
-      key, unit)
+    fillGaps(bucketCounts(df, key, ts, unit), key, unit)
+
+  /** The (key, bucket, n_events) count step of [[resampleCounts]], before
+    * the gap fill — additive over any split of `df`, so the incremental
+    * anomaly twin lands it per batch and gap-fills the re-summed fold.
+    * Null keys drop. */
+  private[graft] def bucketCounts(df: DataFrame, key: String, ts: String,
+                                  unit: String): DataFrame =
+    df.filter(col(key).isNotNull)
+      .select(col(key), date_trunc(unit, col(ts)).as("bucket"))
+      .groupBy(col(key), col("bucket")).agg(count(lit(1)).as("n_events"))
 
   /** OUTAGE detector — the longest run of consecutive EMPTY buckets per
     * key on the [[resampleCounts]] spine: a feed that stopped for six
@@ -721,8 +727,12 @@ object Relational {
     * global sort, no collect. Null keys count as a key (a null-heavy
     * join column IS the classic skew case). Output: key, n, share, skew. */
   def heavyHitters(df: DataFrame, key: Column, k: Int): DataFrame =
-    heavyHittersFromCounts(
-      df.groupBy(key.as("key")).agg(count(lit(1)).as("n")), k)
+    heavyHittersFromCounts(keyCounts(df, key), k)
+
+  /** The (key, n) count step of [[heavyHitters]] — additive, so the
+    * incremental twin lands it per batch. */
+  private[graft] def keyCounts(df: DataFrame, key: Column): DataFrame =
+    df.groupBy(key.as("key")).agg(count(lit(1)).as("n"))
 
   /** [[heavyHitters]] over a PRECOMPUTED (key, n) count table — the
     * shared core that lets the incremental runner fold additive per-batch
@@ -929,9 +939,15 @@ object Relational {
     * distinct_types, entropy (ROUND 4). */
   def behaviorEntropy(events: DataFrame, key: Column,
                       typeCol: Column): DataFrame =
-    behaviorEntropyFromCounts(
-      events.select(key.as("key"), typeCol.as("etype"))
-        .groupBy(col("key"), col("etype")).agg(count(lit(1)).as("c")))
+    behaviorEntropyFromCounts(keyTypeCounts(events, key, typeCol))
+
+  /** The (key, etype, c) count step of [[behaviorEntropy]] and
+    * [[profileTwins]] — additive, so both incremental twins land it per
+    * batch. */
+  private[graft] def keyTypeCounts(events: DataFrame, key: Column,
+                                   typeCol: Column): DataFrame =
+    events.select(key.as("key"), typeCol.as("etype"))
+      .groupBy(col("key"), col("etype")).agg(count(lit(1)).as("c"))
 
   /** [[behaviorEntropy]] over an already-aggregated (key, etype, c)
     * frame — the (key, type) counts are ADDITIVE (sum-by-key folds any
@@ -978,10 +994,7 @@ object Relational {
     * distinct_types, total_events. */
   def profileTwins(events: DataFrame, key: Column, typeCol: Column,
                    decimals: Int = 1): DataFrame =
-    profileTwinsFromCounts(
-      events.select(key.as("key"), typeCol.as("etype"))
-        .groupBy(col("key"), col("etype")).agg(count(lit(1)).as("c")),
-      decimals)
+    profileTwinsFromCounts(keyTypeCounts(events, key, typeCol), decimals)
 
   /** [[profileTwins]] over an already-aggregated (key, etype, c) frame —
     * the counts are ADDITIVE (sum-by-key folds any batch split), so the
@@ -1022,10 +1035,14 @@ object Relational {
     * present_buckets, min_n, max_n, chi2 (ROUND 4). */
   def hashUniformity(df: DataFrame, key: Column,
                      buckets: Int = 64): DataFrame =
-    hashUniformityFromCounts(
-      df.select(graft.functions.TextFunctions.md5Mod(key, lit(buckets)).as("__b"))
-        .groupBy(col("__b")).agg(count(lit(1)).as("c")),
-      buckets)
+    hashUniformityFromCounts(bucketOccupancy(df, key, buckets), buckets)
+
+  /** The (__b, c) occupancy step of [[hashUniformity]] — additive, so
+    * the incremental twin lands it per batch. */
+  private[graft] def bucketOccupancy(df: DataFrame, key: Column,
+                                     buckets: Int): DataFrame =
+    df.select(graft.functions.TextFunctions.md5Mod(key, lit(buckets)).as("__b"))
+      .groupBy(col("__b")).agg(count(lit(1)).as("c"))
 
   /** [[hashUniformity]] over an already-aggregated (__b, c) occupancy
     * frame — bucket counts are ADDITIVE, so the incremental twin
@@ -1395,10 +1412,16 @@ object Relational {
     * (ROUND 6), is_fd. */
   def functionalDependencyAudit(df: DataFrame, det: Column,
                                 dep: Column): DataFrame =
-    functionalDependencyAuditFromCounts(
-      df.select(det.as("det"),
-          coalesce(dep.cast("string"), lit("__null__")).as("dep"))
-        .groupBy(col("det"), col("dep")).agg(count(lit(1)).as("c")))
+    functionalDependencyAuditFromCounts(dependencyCounts(df, det, dep))
+
+  /** The (det, dep, c) count step of [[functionalDependencyAudit]], NULL
+    * dependents counted as `__null__` — additive, so the incremental
+    * twin lands it per batch. */
+  private[graft] def dependencyCounts(df: DataFrame, det: Column,
+                                      dep: Column): DataFrame =
+    df.select(det.as("det"),
+        coalesce(dep.cast("string"), lit("__null__")).as("dep"))
+      .groupBy(col("det"), col("dep")).agg(count(lit(1)).as("c"))
 
   /** [[functionalDependencyAudit]] over an already-aggregated
     * (det, dep, c) frame — the counts are ADDITIVE, so the incremental
@@ -1434,9 +1457,14 @@ object Relational {
     * peak_share (ROUND 4), hour_entropy (ROUND 4). */
   def typeHourProfile(events: DataFrame, typeCol: Column,
                       ts: Column): DataFrame =
-    typeHourProfileFromCounts(
-      events.select(typeCol.as("event_type"), hour(ts).cast("long").as("h"))
-        .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("c")))
+    typeHourProfileFromCounts(typeHourCounts(events, typeCol, ts))
+
+  /** The (event_type, h, c) count step of [[typeHourProfile]] — additive,
+    * so the incremental twin lands it per batch. */
+  private[graft] def typeHourCounts(events: DataFrame, typeCol: Column,
+                                    ts: Column): DataFrame =
+    events.select(typeCol.as("event_type"), hour(ts).cast("long").as("h"))
+      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("c"))
 
   /** [[typeHourProfile]] over an already-aggregated (event_type, h, c)
     * frame — (type, hour) counts are ADDITIVE, so the incremental twin

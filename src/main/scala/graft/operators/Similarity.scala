@@ -355,7 +355,8 @@ object Similarity {
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"), simCol(emb)(col("q_emb"), col("n_emb")).as("sim"))
     val result = topKPerQuery(scored, k)
-    emb.sparkSession.conf.get("spark.graft.ivf.onPartialK", "allow") match {
+    graft.Sessions.policy(emb.sparkSession, "spark.graft.ivf.onPartialK", "allow",
+        Seq("allow", "warn", "error")) match {
       case "allow" => result
       case mode =>
         val pinned = graft.Persist.cut(result)

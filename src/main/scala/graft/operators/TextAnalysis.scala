@@ -1290,27 +1290,25 @@ object TextAnalysis {
     * join is vocab-sized, stratum totals broadcast. Output: |strata| rows
     * (stratum, n_tokens, n_terms, kl). */
   def sourceDivergence(docs: DataFrame, strataCol: String = "source"): DataFrame =
-    divergenceFromCounts(
-      docs.select(col(strataCol).as("stratum"),
-          explode(tokens(col("text"))).as("term"))
-        .groupBy(col("stratum"), col("term")).agg(count(lit(1)).as("c_st")))
+    divergenceFromCounts(stratumTermCounts(docs, strataCol))
+
+  /** The (stratum, term, c_st) count step of [[sourceDivergence]] —
+    * additive, so the incremental twin lands it per batch. */
+  private[graft] def stratumTermCounts(docs: DataFrame, strataCol: String): DataFrame =
+    docs.select(col(strataCol).as("stratum"), explode(tokens(col("text"))).as("term"))
+      .groupBy(col("stratum"), col("term")).agg(count(lit(1)).as("c_st"))
 
   /** [[sourceDivergence]]'s math from a PRE-AGGREGATED (stratum, term,
-    * c_st) count frame — the shared core that lets the incremental
-    * runner ([[graft.streaming.Incremental.runIncrementalSourceKl]])
-    * merge per-batch count partials and publish the same KL the batch
-    * pass computes: counts
-    * are additive, so summed partials feed this identically to one
-    * corpus pass. */
+    * c_st) count frame, one row per (stratum, term) — the shared core
+    * that lets the incremental runner
+    * ([[graft.streaming.Incremental.runIncrementalSourceKl]]) publish the
+    * same KL the batch pass computes from its re-summed per-batch count
+    * partials. */
   def divergenceFromCounts(counts: DataFrame): DataFrame = {
-    // the input may carry several PARTIAL rows per (stratum, term) — one
-    // per merged batch — so re-sum first; on an already-unique frame the
-    // child's partitioning makes this aggregate exchange-free.
     // Materialized once: three consumers (term totals, stratum totals,
     // the probe join) would otherwise each re-run the upstream corpus
-    // explode + this aggregate; the frame is vocab×strata-sized.
-    val cst = graft.Persist.cut(counts.groupBy(col("stratum"), col("term"))
-      .agg(sum(col("c_st")).as("c_st")))
+    // explode + count aggregate; the frame is vocab×strata-sized.
+    val cst = graft.Persist.cut(counts)
     val ct = cst.groupBy(col("term")).agg(sum(col("c_st")).as("c_t"))
     val ns = cst.groupBy(col("stratum")).agg(sum(col("c_st")).as("n_s"))
     val n = ns.agg(sum(col("n_s")).as("n"))

@@ -325,11 +325,13 @@ object ExtensionQueries {
     detachStreamResult(s, sink, root, fold(s.table(sink)))
   }
 
+  private val streamStatePartitions = 8
+
   /** Run the streaming-twin engine pass with
     * `spark.sql.shuffle.partitions` temporarily set to
-    * `spark.graft.stream.statePartitions` (default 8), restoring the
-    * session value afterwards. Rationale (optimization guide §2.2/§3):
-    * AQE does NOT coalesce STREAMING shuffles, so the session default
+    * [[streamStatePartitions]], restoring the session value afterwards.
+    * Rationale (optimization guide §2.2/§3): AQE does NOT coalesce
+    * STREAMING shuffles, so the session default
     * (= cluster thread count, right for batch where AQE re-plans) buys a
     * stateful micro-batch nothing but per-partition fixed costs — one
     * HDFS-backed state store, its commit files and its WAL entries PER
@@ -337,13 +339,13 @@ object ExtensionQueries {
     * Production streams size state partitions to STATE VOLUME, not
     * cluster width (the count pins at the first checkpoint); 8 is the
     * measured knee for the contract twins (32→8 halves the engine pass;
-    * below 8 is flat) and the knob lets a real deployment raise it.
+    * below 8 is flat).
     * Results are partition-count-independent (exact aggregates/dedup),
     * which the oracle re-verifies. */
   private def withStreamStatePartitions[T](s: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, s.conf.get("spark.graft.stream.statePartitions", "8"))
+    s.conf.set(key, streamStatePartitions.toString)
     try f finally s.conf.set(key, prev)
   }
 
@@ -442,7 +444,7 @@ object ExtensionQueries {
         rep.unionAll(
           rep.select((col("event_id") + lit(1000000000L)).as("event_id"), col("ts")))
           -> "02_replay.parquet"))(
-      _.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark("event_id"),
+      graft.streaming.EventStream.dedupEvents(_),
       _.groupBy(col("event_id")).agg(count(lit(1)).as("emissions"))
         .groupBy(
           when(col("event_id") >= 1000000000L, lit("fresh")).otherwise(lit("base"))

@@ -24,6 +24,9 @@ import graft.sinks.SnapshotStore
   *    `batch=<id>` directory with overwrite, so foreachBatch's
   *    at-least-once retry overwrites its previous attempt instead of
   *    appending twice, and readers see `batch` as a partition column.
+  *    A count-folded twin's partial is its batch operator's own count
+  *    step run on the micro-batch, and its report re-sums the partials
+  *    with [[resum]] before the operator's `*FromCounts` core.
   *
   * Checkpoint, partial and report directory names are what a running
   * deployment resumes from; they are part of the contract and pinned by
@@ -86,6 +89,12 @@ object Incremental {
     writePartial(partial, dir, batchId)
     report(allPartials(partial.sparkSession, dir)).write.mode("overwrite").parquet(out)
   }
+
+  /** Additive count partials summed per key: one row per distinct value
+    * of every column but the count `c`. */
+  private def resum(partials: DataFrame, c: String): DataFrame =
+    partials.groupBy(partials.columns.filterNot(_ == c).map(col): _*)
+      .agg(sum(col(c)).as(c))
 
   /** The partials of every batch but the running one (`batch` kept), or
     * None before the first batch lands. Excluding the running id makes a
@@ -152,9 +161,9 @@ object Incremental {
 
   /** Incremental anomaly monitoring — the streaming twin of the x42
     * chain (resample → rolling z-score): each micro-batch of events is
-    * reduced to per-(key, bucket) count PARTIALS tagged with the batch
-    * id and merged into a counts snapshot; the gap-filled series and its
-    * z-scores are then recomputed FROM THE MERGED COUNTS and land under
+    * reduced to its per-(key, bucket) count partial under
+    * `counts/batch=<id>`; the gap-filled series and its z-scores are then
+    * recomputed FROM THE RE-SUMMED PARTIALS and land under
     * `outRoot/anomalies`.
     *
     * Why this split is the right incremental shape: the z-score is a
@@ -165,14 +174,14 @@ object Incremental {
     * over |keys × buckets| aggregated rows, orders of magnitude smaller
     * than the event lake (and prunable further: only keys present in
     * the batch can change — documented option, full rewrite kept here
-    * for the simpler A/B-snapshot output contract).
+    * for the simpler output contract).
     *
     * Retry safety: foreachBatch is at-least-once, and an ADDITIVE merge
-    * double-counts a retried batch — so partials key on (key, bucket,
-    * batch_id) and merge by dedupe, making the retry overwrite its own
-    * prior rows instead of adding to them; totals are summed at read.
-    * The converged output equals the batch chain over the whole lake
-    * regardless of how files split into batches (spec-asserted). */
+    * double-counts a retried batch — so each batch writes only its own
+    * partial directory, and a retry overwrites its previous attempt
+    * instead of adding to it. The converged output equals the batch
+    * chain over the whole lake regardless of how files split into
+    * batches (spec-asserted). */
   def runStreamingAnomaly(spark: SparkSession, eventsDir: String, outRoot: String,
                           unit: String = "day", window: Int = 7, k: Int = 3): Unit =
     foreachBatch(EventStream.readEvents(spark, eventsDir), outRoot, "anomaly")(
@@ -180,32 +189,17 @@ object Incremental {
 
   /** One [[runStreamingAnomaly]] micro-batch: applying the SAME
     * (batch, batchId) twice must leave counts and anomalies unchanged —
-    * the dedupe on (user, bucket, batch_id) makes the retry overwrite its
-    * own prior partials instead of adding to them (spec-asserted). */
+    * the retry overwrites its own `counts/batch=<id>` partial, and no
+    * other batch's partial is rewritten (spec-asserted). */
   private[graft] def mergeAnomalyBatch(batch: DataFrame, batchId: Long,
                                        outRoot: String, unit: String,
-                                       window: Int, k: Int): Unit = {
-    val s = batch.sparkSession
-    val countsRoot = s"$outRoot/counts"
-    val bCounts = batch.filter(col("user_id").isNotNull)
-      .groupBy(col("user_id"), date_trunc(unit, col("ts")).as("bucket"))
-      .agg(count(lit(1)).as("n_events"))
-      .withColumn("batch_id", lit(batchId))
-    val all = SnapshotStore.read(s, countsRoot)
-      .map(_.unionByName(bCounts)).getOrElse(bCounts)
-    SnapshotStore.swapWrite(
-      Relational.dedupeKeepFirst(all,
-        Seq(col("user_id"), col("bucket"), col("batch_id")),
-        Seq(col("n_events"))),
-      countsRoot)
-    val merged = SnapshotStore.read(s, countsRoot).get
-      .groupBy(col("user_id"), col("bucket"))
-      .agg(sum(col("n_events")).as("n_events"))
-    Relational.rollingZscore(
-        Relational.fillGaps(merged, "user_id", unit),
+                                       window: Int, k: Int): Unit =
+    foldPartials(Relational.bucketCounts(batch, "user_id", "ts", unit),
+        s"$outRoot/counts", batchId, s"$outRoot/anomalies") { counts =>
+      Relational.rollingZscore(
+        Relational.fillGaps(resum(counts, "n_events"), "user_id", unit),
         "user_id", "bucket", "n_events", window, k)
-      .write.mode("overwrite").parquet(s"$outRoot/anomalies")
-  }
+    }
 
   /** Incremental ANN index maintenance: new embedding batches are
     * assigned to a FIXED codebook as they arrive and appended to the
@@ -215,9 +209,8 @@ object Incremental {
     * centroids would invalidate every previously assigned vector).
     *
     * Exactly-once without a transactional sink: each batch's assignments
-    * are a partial under `index/` (same discipline as the anomaly
-    * runner's batch-id keys, achieved with directory layout instead of a
-    * dedupe).
+    * are a partial under `index/` (the `batch=<id>` layout every twin
+    * shares).
     *
     * Scale: the codebook broadcast is the only data movement besides
     * the batch's own assign aggregate; the corpus-so-far is never
@@ -322,7 +315,7 @@ object Incremental {
                                            maxDf: Int): Unit = {
     val idxDir = s"$outRoot/bp_index"
     val idx = priorPartials(batch.sparkSession, idxDir, batchId)
-      .map(_.groupBy(col("h")).agg(sum(col("df")).as("df")))
+      .map(p => resum(p.drop("batch"), "df"))
       .getOrElse(Dedup.boilerplateIndex(batch.limit(0), n))
     writePartial(Dedup.stripBoilerplateAgainst(batch, idx, n, maxDf),
       s"$outRoot/clean", batchId)
@@ -431,11 +424,10 @@ object Incremental {
   /** One [[runIncrementalSourceKl]] micro-batch. */
   private[graft] def mergeSourceKlBatch(batch: DataFrame, batchId: Long,
                                         outRoot: String): Unit =
-    foldPartials(batch.select(col("source").as("stratum"),
-          explode(TextFunctions.tokens(col("text"))).as("term"))
-        .groupBy(col("stratum"), col("term"))
-        .agg(count(lit(1)).as("c_st")),
-      s"$outRoot/counts", batchId, s"$outRoot/kl")(TextAnalysis.divergenceFromCounts)
+    foldPartials(TextAnalysis.stratumTermCounts(batch, "source"),
+        s"$outRoot/counts", batchId, s"$outRoot/kl") { counts =>
+      TextAnalysis.divergenceFromCounts(resum(counts, "c_st"))
+    }
 
   /** Incremental event-type transition counts — x107's streaming twin:
     * each AvailableNow pass writes the batch's WITHIN-batch transition
@@ -464,9 +456,7 @@ object Incremental {
     writePartial(Relational.transitionBoundaries(e, col("user_id"), order, col("event_type")),
       s"$outRoot/bounds", batchId)
     val stitched = Relational.stitchTransitions(allPartials(s, s"$outRoot/bounds"))
-    allPartials(s, s"$outRoot/within").unionByName(stitched)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(sum(col("n")).as("n"))
+    resum(allPartials(s, s"$outRoot/within").unionByName(stitched), "n")
       .write.mode("overwrite").parquet(s"$outRoot/transitions")
   }
 
@@ -487,10 +477,9 @@ object Incremental {
   /** One [[runIncrementalHeavyKeys]] micro-batch. */
   private[graft] def mergeHeavyKeysBatch(batch: DataFrame, batchId: Long,
                                          outRoot: String, k: Int): Unit =
-    foldPartials(batch.groupBy(col("user_id").as("key")).agg(count(lit(1)).as("n")),
+    foldPartials(Relational.keyCounts(batch, col("user_id")),
         s"$outRoot/counts", batchId, s"$outRoot/heavy_keys") { counts =>
-      Relational.heavyHittersFromCounts(
-        counts.groupBy(col("key")).agg(sum(col("n")).as("n")), k)
+      Relational.heavyHittersFromCounts(resum(counts, "n"), k)
     }
 
   /** Incremental behavioral-twin monitoring — x140's streaming twin: the
@@ -507,15 +496,19 @@ object Incremental {
     foreachBatch(EventStream.readEvents(spark, eventsDir), outRoot, "profile_twins")(
       mergeProfileTwinsBatch(_, _, outRoot))
 
+  /** The (key, etype, c) partial of the profile-twins and user-entropy
+    * twins: the batch operators' count step over the batch's non-null
+    * users (x136/x140 drop null users the same way). */
+  private def userTypeCounts(batch: DataFrame): DataFrame =
+    Relational.keyTypeCounts(batch.filter(col("user_id").isNotNull),
+      col("user_id"), col("event_type"))
+
   /** One [[runIncrementalProfileTwins]] micro-batch. */
   private[graft] def mergeProfileTwinsBatch(batch: DataFrame, batchId: Long,
                                             outRoot: String): Unit =
-    foldPartials(batch.filter(col("user_id").isNotNull)
-        .select(col("user_id").as("key"), col("event_type").as("etype"))
-        .groupBy(col("key"), col("etype")).agg(count(lit(1)).as("c")),
+    foldPartials(userTypeCounts(batch),
         s"$outRoot/counts", batchId, s"$outRoot/profile_twins") { counts =>
-      Relational.profileTwinsFromCounts(
-        counts.groupBy(col("key"), col("etype")).agg(sum(col("c")).as("c")))
+      Relational.profileTwinsFromCounts(resum(counts, "c"))
     }
 
   /** Incremental hour-profile monitoring — x145's streaming twin: the
@@ -534,12 +527,9 @@ object Incremental {
   /** One [[runIncrementalHourProfile]] micro-batch. */
   private[graft] def mergeHourProfileBatch(batch: DataFrame, batchId: Long,
                                            outRoot: String): Unit =
-    foldPartials(batch
-        .select(col("event_type"), hour(col("ts")).cast("long").as("h"))
-        .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("c")),
+    foldPartials(Relational.typeHourCounts(batch, col("event_type"), col("ts")),
         s"$outRoot/counts", batchId, s"$outRoot/hour_profile") { counts =>
-      Relational.typeHourProfileFromCounts(
-        counts.groupBy(col("event_type"), col("h")).agg(sum(col("c")).as("c")))
+      Relational.typeHourProfileFromCounts(resum(counts, "c"))
     }
 
   /** Incremental hash-uniformity monitoring — x166's streaming twin:
@@ -564,12 +554,9 @@ object Incremental {
   private[graft] def mergeHashUniformityBatch(batch: DataFrame, batchId: Long,
                                               outRoot: String,
                                               buckets: Int): Unit =
-    foldPartials(batch
-        .select(TextFunctions.md5Mod(col("doc_id"), lit(buckets)).as("__b"))
-        .groupBy(col("__b")).agg(count(lit(1)).as("c")),
+    foldPartials(Relational.bucketOccupancy(batch, col("doc_id"), buckets),
         s"$outRoot/counts_b$buckets", batchId, s"$outRoot/hash_uniformity") { counts =>
-      Relational.hashUniformityFromCounts(
-        counts.groupBy(col("__b")).agg(sum(col("c")).as("c")), buckets)
+      Relational.hashUniformityFromCounts(resum(counts, "c"), buckets)
     }
 
   /** Incremental FD-audit monitoring — x146's streaming twin: the
@@ -589,13 +576,9 @@ object Incremental {
   /** One [[runIncrementalFdAudit]] micro-batch. */
   private[graft] def mergeFdAuditBatch(batch: DataFrame, batchId: Long,
                                        outRoot: String): Unit =
-    foldPartials(batch
-        .select(col("source").as("det"),
-          coalesce(col("lang").cast("string"), lit("__null__")).as("dep"))
-        .groupBy(col("det"), col("dep")).agg(count(lit(1)).as("c")),
+    foldPartials(Relational.dependencyCounts(batch, col("source"), col("lang")),
         s"$outRoot/counts", batchId, s"$outRoot/fd_audit") { counts =>
-      Relational.functionalDependencyAuditFromCounts(
-        counts.groupBy(col("det"), col("dep")).agg(sum(col("c")).as("c")))
+      Relational.functionalDependencyAuditFromCounts(resum(counts, "c"))
     }
 
   /** Incremental embedding-drift monitoring — x120's streaming twin,
@@ -727,8 +710,7 @@ object Incremental {
                                     outRoot: String, topV: Int): Unit =
     foldPartials(TextAnalysis.zipfCounts(batch),
         s"$outRoot/counts", batchId, s"$outRoot/zipf") { counts =>
-      TextAnalysis.zipfSlopeFromCounts(
-        counts.groupBy(col("source"), col("term")).agg(sum(col("c")).as("c")), topV)
+      TextAnalysis.zipfSlopeFromCounts(resum(counts, "c"), topV)
     }
 
   /** Incremental behavioral-entropy monitoring (x136's twin): per-batch
@@ -744,12 +726,9 @@ object Incremental {
   /** One [[runIncrementalUserEntropy]] micro-batch. */
   private[graft] def mergeUserEntropyBatch(batch: DataFrame, batchId: Long,
                                            outRoot: String): Unit =
-    foldPartials(batch.filter(col("user_id").isNotNull)
-        .groupBy(col("user_id").as("key"), col("event_type").as("etype"))
-        .agg(count(lit(1)).as("c")),
+    foldPartials(userTypeCounts(batch),
         s"$outRoot/counts", batchId, s"$outRoot/user_entropy") { counts =>
-      Relational.behaviorEntropyFromCounts(
-        counts.groupBy(col("key"), col("etype")).agg(sum(col("c")).as("c")))
+      Relational.behaviorEntropyFromCounts(resum(counts, "c"))
     }
 
   /** Incremental dedup-graph maintenance: candidate-pair batches fold

@@ -376,19 +376,39 @@ class PipelineSpec extends SparkSpec {
     import graft.sources.Tables
     val root = Files.createTempDirectory("graft_anom_retry").toString
     val ev = Tables(spark, sf(), "events").select("user_id", "ts")
-    def counts() = graft.sinks.SnapshotStore.read(spark, s"$root/counts").get
+    def counts() = spark.read.parquet(s"$root/counts")
       .groupBy("user_id", "bucket").agg(sum("n_events").as("n")).collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).toString, r.getLong(2))).sorted.toSeq
     Incremental.mergeAnomalyBatch(ev, batchId = 0L, root, "day", 7, 3)
     val once = counts()
     // an at-least-once retry re-delivers the SAME batch under the SAME id:
-    // an additive merge would double every count; the batch-id-keyed
-    // dedupe must make this a no-op
+    // an additive merge would double every count; overwriting the
+    // batch's own partial directory must make this a no-op
     Incremental.mergeAnomalyBatch(ev, batchId = 0L, root, "day", 7, 3)
     assert(counts() == once, "retried batch double-counted")
     // a genuinely NEW batch with the same rows (different id) DOES add
     Incremental.mergeAnomalyBatch(ev, batchId = 1L, root, "day", 7, 3)
     assert(counts().map(_._3).sum == 2 * once.map(_._3).sum)
+  }
+
+  test("O2 streaming: an anomaly batch writes only its own counts partial") {
+    import scala.jdk.CollectionConverters._
+    import graft.sources.Tables
+    val root = Files.createTempDirectory("graft_anom_own").toString
+    val ev = Tables(spark, sf(), "events").select("user_id", "ts")
+    val batch0 = Paths.get(root, "counts", "batch=0")
+    def files() = {
+      val listing = Files.list(batch0)
+      try listing.iterator().asScala
+        .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+      finally listing.close()
+    }
+    Incremental.mergeAnomalyBatch(ev, batchId = 0L, root, "day", 7, 3)
+    val before = files()
+    assert(before.keys.exists(_.endsWith(".parquet")), s"no partial under $batch0")
+    Incremental.mergeAnomalyBatch(ev, batchId = 1L, root, "day", 7, 3)
+    assert(files() == before, "batch 1 rewrote batch 0's partial")
+    assert(Files.exists(Paths.get(root, "counts", "batch=1")))
   }
 
   test("O2 streaming: incremental index assignment equals the batch assign over the lake") {

@@ -70,6 +70,19 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.cc.onNonConverged")
   }
 
+  test("spark.graft.cc.onNonConverged rejects an unknown value even when the labels converge") {
+    val d = (1L to 4L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L)).toDF("a_id", "b_id")
+    spark.conf.set("spark.graft.cc.onNonConverged", "eror")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        Dedup.splitByComponent(d, pairs).collect()
+      }
+      assert(ex.getMessage.contains("spark.graft.cc.onNonConverged"), ex.getMessage)
+      assert(ex.getMessage.contains("warn, error"), ex.getMessage)
+    } finally spark.conf.unset("spark.graft.cc.onNonConverged")
+  }
+
   test("noveltyScores: the minimum-id holder of a span scores it novel") {
     val d = docs(1L -> "a b c", 2L -> "a b x", 3L -> "b c")
     // 2-token spans: doc1 {a b, b c} introduces both; doc2 {a b, b x}

@@ -277,6 +277,20 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.ivf.onPartialK")
   }
 
+  test("spark.graft.ivf.onPartialK rejects an unknown value") {
+    val emb = Seq(1L -> Seq(1.0f, 0.0f), 2L -> Seq(0.95f, 0.05f))
+      .toDF("vec_id", "embedding")
+    val codebook = Similarity.centroidsOf(emb, col("vec_id") === 1L)
+    spark.conf.set("spark.graft.ivf.onPartialK", "eror")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        Similarity.ivfTopKWith(emb, codebook, col("vec_id") === 1, 1).collect()
+      }
+      assert(ex.getMessage.contains("spark.graft.ivf.onPartialK"), ex.getMessage)
+      assert(ex.getMessage.contains("allow, warn, error"), ex.getMessage)
+    } finally spark.conf.unset("spark.graft.ivf.onPartialK")
+  }
+
   test("CentroidAggregator + refineCentroids: cluster means, partial-agg safe") {
     val emb = Seq(
       0L  -> Seq(1.0f, 0.0f),

@@ -45,7 +45,7 @@ class IncrementalLayoutSpec extends SparkSpec {
     Twin("runStreamingCuration", () => docs, "curated", Seq("curated"))(
       Incremental.runStreamingCuration(spark, _, _)),
     Twin("runStreamingAnomaly", () => events, "anomaly",
-        Seq("counts/_current", "counts/A", "anomalies"))(
+        Seq("counts/batch=0", "anomalies"))(
       Incremental.runStreamingAnomaly(spark, _, _)),
     Twin("runStreamingIndexAssign", () => emb, "index", Seq("index/batch=0"))(
       (src, root) => Incremental.runStreamingIndexAssign(spark, src, root,
