@@ -151,11 +151,14 @@ object GraftFunctions {
     Seq(cosineDescriptor, bloomContainsDescriptor, hexParityMaskDescriptor,
       dotDescriptor, cdcCutsDescriptor, minKDescriptor, topKDescriptor)
 
-  /** Idempotent imperative registration into `spark`'s function registry. */
+  /** Idempotent imperative registration into `spark`'s function registry:
+    * a function the registry already holds is left in place, so the
+    * per-Column accessors below can call this on every use. */
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     descriptors.foreach { case (id, _, build) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, build, "internal")
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(id.funcName, build, "internal")
     }
     // the imperative twin of injectOptimizerRule for sessions built
     // without the extension (idempotent like the registrations above)

@@ -152,20 +152,9 @@ object Dedup {
     base.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
   }
 
-  /** LSH candidate pairs: banding the k-wide signature into `bands` rows of
-    * r = k/bands; docs sharing any band hash become a candidate pair.
-    *
-    * `maxBucket` (default off) is the hot-bucket cap for corpus scale: the
-    * bucket self-join is quadratic in bucket membership, and a degenerate
-    * bucket (boilerplate/empty documents all sharing a signature) carries
-    * no discriminative signal anyway — buckets over the cap are dropped
-    * wholesale, the same skew discipline as ngramJaccardPairs' maxDf and
-    * embeddingNearDupPairs' cluster cap. Off by default because the
-    * fixture contract (x08/x15 oracles) is uncapped.
-    * Output: (a_id, b_id), a_id < b_id, distinct, ordered. */
   /** Banded LSH rows (doc_id, band, bh) from a signature frame — ONE
     * definition of the banding rule, shared by the full-corpus self-join
-    * ([[lshCandidatePairs]]) and the incremental new-vs-corpus probe
+    * ([[bandPairs]]) and the incremental new-vs-corpus probe
     * ([[lshCandidatePairsAgainst]]), so the two cannot drift. */
   private def bandRows(sig: DataFrame, k: Int, bands: Int): DataFrame = {
     val r = k / bands
@@ -181,39 +170,73 @@ object Dedup {
     sig.select(col("doc_id"), posexplode(array(bhs: _*)).as(Seq("band", "bh")))
   }
 
-  /** `maxBucketFraction` is the corpus-relative form of `maxBucket`,
+  /** THE blocking self-join of every candidate generator (LSH bands,
+    * SimHash segments, rare-shingle postings, embedding sub-blocks,
+    * linkage blocks, term postings): rows sharing all `keys` pair up,
+    * one output row per (pair, shared bucket), `a_id < b_id`. Output:
+    * a_id, b_id, the `keys`, and `a_<p>`/`b_<p>` for each `payload`
+    * column — the caller adds its own tail (distinct, count, verify).
+    *
+    * The join is quadratic in bucket membership, so `cap` bounds it:
+    * buckets with more than `cap` rows are dropped wholesale (a
+    * degenerate bucket — boilerplate, byte-identical clusters, a
+    * catch-all blocking key — carries no discriminative signal, and its
+    * pairs are exact-dup work). `Long.MaxValue` (no cap) skips the
+    * bucket count. */
+  private[graft] def bucketPairs(rows: DataFrame, id: String, keys: Seq[String],
+                                 payload: Seq[String] = Nil,
+                                 cap: Long = Long.MaxValue): DataFrame = {
+    val kept =
+      if (cap == Long.MaxValue) rows
+      else rows.join(rows.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__bc"))
+        .filter(col("__bc") <= cap).select(keys.map(col): _*), keys)
+    // `a < b` is a filter, not part of the join condition: the planner
+    // folds it in AHEAD of any caller filter pushed into the join, so a
+    // costly verify predicate (cosine, edit distance) runs on the
+    // ordered half of the pairs only
+    kept.as("a")
+      .join(kept.as("b"), keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _))
+      .filter(col(s"a.$id") < col(s"b.$id"))
+      .select(Seq(col(s"a.$id").as("a_id"), col(s"b.$id").as("b_id")) ++
+        keys.map(k => col(s"a.$k").as(k)) ++
+        payload.flatMap(p => Seq(col(s"a.$p").as(s"a_$p"), col(s"b.$p").as(s"b_$p"))): _*)
+  }
+
+  /** Distinct LSH candidate pairs (a_id, b_id) over a materialized
+    * signature frame: docs sharing any band hash. */
+  private def bandPairs(sig: DataFrame, k: Int, bands: Int,
+                        cap: Long = Long.MaxValue): DataFrame =
+    bucketPairs(bandRows(sig, k, bands), "doc_id", Seq("band", "bh"), cap = cap)
+      .select(col("a_id"), col("b_id"))
+      .distinct()
+
+  /** LSH candidate pairs: banding the k-wide signature into `bands` rows of
+    * r = k/bands; docs sharing any band hash become a candidate pair.
+    *
+    * `maxBucket` (default off) is the hot-bucket cap of [[bucketPairs]]
+    * for corpus scale — the same skew discipline as ngramJaccardPairs'
+    * maxDf and embeddingNearDupPairs' cluster cap. Off by default because
+    * the fixture contract (x08/x15 oracles) is uncapped.
+    *
+    * `maxBucketFraction` is the corpus-relative form of `maxBucket`,
     * mirroring [[ngramJaccardPairs]]' `maxDfFraction` one level up: an
     * absolute bucket cap pins the drop threshold to one corpus size
     * (template-family buckets grow ∝ N), while `Some(f)` derives the
     * cap as ceil(f · nDocs) from one count over the already-materialized
     * signature frame — a cluster holding a fixed FRACTION of the corpus
     * is treated the same at every scale. Overrides `maxBucket` when
-    * set; `None` (the oracle default) is bit-identical. */
+    * set; `None` (the oracle default) is bit-identical.
+    * Output: (a_id, b_id), a_id < b_id, distinct. */
   def lshCandidatePairs(docs: DataFrame, n: Int = 3, k: Int = 12, bands: Int = 4,
                         maxBucket: Int = Int.MaxValue,
                         maxBucketFraction: Option[Double] = None): DataFrame = {
     require(k % bands == 0, "k must divide into equal bands")
-    // signatures feed all `bands` branches of the union: materialize once
+    // signatures feed the cap count and the banding: materialize once
     // (localCheckpoint truncates lineage so the shingle explode + groupBy
-    // don't re-run per band; production would persist to reliable storage)
+    // don't re-run per consumer; production would persist to reliable storage)
     val sig = graft.Persist.cut(minhashSignatures(docs, n, k))
-    val cap = resolveBucketCap(sig, maxBucket, maxBucketFraction)
-    val allBandRows = bandRows(sig, k, bands)
-    val bucketed =
-      if (cap == Long.MaxValue) allBandRows
-      else {
-        val keep = allBandRows.groupBy(col("band"), col("bh"))
-          .agg(count(lit(1)).as("__bc"))
-          .filter(col("__bc") <= cap).select(col("band"), col("bh"))
-        allBandRows.join(keep, Seq("band", "bh"))
-      }
-    val a = bucketed.as("a")
-    val bb = bucketed.as("b")
-    a.join(bb,
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    bandPairs(sig, k, bands, resolveBucketCap(sig, maxBucket, maxBucketFraction))
   }
 
   /** LSH candidate pairs SCORED from the signatures alone: the fraction
@@ -245,13 +268,7 @@ object Dedup {
   private def estimatedJaccardPairsFromSigs(sig: DataFrame, k: Int,
                                             bands: Int): DataFrame = {
     require(k % bands == 0, "k must divide into equal bands")
-    val br = bandRows(sig, k, bands)
-    val cand = br.as("a")
-      .join(br.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    val cand = bandPairs(sig, k, bands)
     val agree = (0 until k)
       .map(i => when(col(s"sa.h$i") === col(s"sb.h$i"), 1L).otherwise(0L))
       .reduce(_ + _)
@@ -754,13 +771,11 @@ object Dedup {
     * candidate-volume / key-width scale analysis; everything here ships
     * (id, band, key) longs, never payloads.
     *
-    * `maxBucket` (default off) is the hot-bucket cap for corpus scale —
-    * the [[lshCandidatePairs]] discipline applied to the segment
-    * buckets: a mega-cluster of byte-identical inputs shares EVERY
-    * band key, so the bucket self-join goes quadratic in cluster size;
-    * those clusters are exact-dup work (the x118 cascade runs byte-exact
-    * dedup FIRST, precisely so the near-dup stage never sees them), and
-    * buckets over the cap are dropped wholesale. Off by default: the
+    * `maxBucket` (default off) is the [[bucketPairs]] hot-bucket cap
+    * over the segment buckets: a mega-cluster of byte-identical inputs
+    * shares EVERY band key, and those clusters are exact-dup work (the
+    * x118 cascade runs byte-exact dedup FIRST, precisely so the
+    * near-dup stage never sees them). Off by default: the
     * x17/x20/x69 fixture oracles are uncapped. `maxBucketFraction` is
     * the corpus-relative form (see [[lshCandidatePairs]]).
     * Output: (a_id, b_id, hamming), a_id < b_id, hamming <= maxHamming. */
@@ -770,7 +785,7 @@ object Dedup {
     val blocks = maxHamming + 1
     require(bits % blocks == 0, s"bits=$bits must split into ${blocks} equal segments")
     val w = bits / blocks
-    // fingerprints feed all `blocks` banding branches: materialize once
+    // fingerprints feed the cap count and the banding: materialize once
     val fp = graft.Persist.cut(fp0)
     val cap = resolveBucketCap(fp, maxBucket, maxBucketFraction)
     // ONE scan with a posexplode over the `blocks` segment keys, not a
@@ -781,22 +796,11 @@ object Dedup {
       // every fingerprint into key=0 for maxHamming=0
       shiftright(col("fingerprint"), i * w).bitwiseAND(lit((1L << w) - 1))
     }
-    val allBanded = fp.select(col("id"), col("fingerprint"),
+    val banded = fp.select(col("id"), col("fingerprint"),
       posexplode(array(keys: _*)).as(Seq("band", "key")))
-    val banded =
-      if (cap == Long.MaxValue) allBanded
-      else {
-        val keep = allBanded.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("__bc"))
-          .filter(col("__bc") <= cap).select(col("band"), col("key"))
-        allBanded.join(keep, Seq("band", "key"))
-      }
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
-        bit_count(col("a.fingerprint").bitwiseXOR(col("b.fingerprint")))
+    bucketPairs(banded, "id", Seq("band", "key"), Seq("fingerprint"), cap)
+      .select(col("a_id"), col("b_id"),
+        bit_count(col("a_fingerprint").bitwiseXOR(col("b_fingerprint")))
           .cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
@@ -1247,12 +1251,9 @@ object Dedup {
     val blocked = assigned.join(broadcast(sizes), Seq("cluster"))
       .withColumn("__blk", md5Mod(col("vec_id"),
         floor((col("csz") + lit(maxClusterSize - 1)) / lit(maxClusterSize)).cast("long")))
-    val a = blocked.select(col("cluster"), col("__blk"), col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val b = blocked.select(col("cluster"), col("__blk"), col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-    a.join(b, Seq("cluster", "__blk"))
-      .filter(col("a_id") < col("b_id"))
+    bucketPairs(blocked, "vec_id", Seq("cluster", "__blk"), Seq("embedding"))
       .select(col("a_id"), col("b_id"),
-        round(graft.GraftFunctions.cosine(emb, col("a_emb"), col("b_emb")), 4).as("sim"))
+        round(graft.GraftFunctions.cosine(emb, col("a_embedding"), col("b_embedding")), 4).as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -1529,9 +1530,8 @@ object Dedup {
     // the blocking join YIELDS the shared-rare-shingle count per pair —
     // aggregating it is both the candidate set and most of the exact
     // intersection, with no per-pair set materialization
-    val iRare = rare.as("a")
-      .join(rare.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+    val iRare = bucketPairs(rare, "doc_id", Seq("s"))
+      .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("i_rare"))
     // per-doc stats in ONE doc_id aggregate: total cardinality, hot count,
     // and the hot-only shingle array for the exactness correction

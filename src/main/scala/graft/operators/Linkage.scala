@@ -22,12 +22,12 @@ import graft.functions.NumericFunctions.detRound
   *  2. **Block, then compare.** Candidates form only inside a blocking
   *     key (default: the name's last token — the head noun carries the
   *     entity type while typos live in the modifier). A block is a
-  *     bounded-group shuffle, and the per-block self-join is the same
-  *     shape as [[Dedup.minhashLsh]]'s band buckets.
-  *  3. **Cap hot blocks.** `maxBlock` (default off) drops blocks with
-  *     more distinct names than the cap, mirroring the LSH `maxBucket`
-  *     discipline: a degenerate blocking key (every name ending in
-  *     "inc") must refuse its quadratic blow-up loudly, not attempt it.
+  *     bounded-group shuffle, and the per-block self-join is
+  *     [[Dedup.bucketPairs]], the one every blocking generator shares.
+  *  3. **Cap hot blocks.** `maxBlock` (default off) is the
+  *     `bucketPairs` cap over distinct names: a degenerate blocking key
+  *     (every name ending in "inc") must refuse its quadratic blow-up
+  *     loudly, not attempt it.
   *  4. **Threshold inside the comparator.** The Spark side uses the
   *     3-arg `levenshtein(l, r, threshold)` (returns -1 past the bound)
   *     so codegen bails out of a row's DP matrix early; the `d >= 1`
@@ -64,27 +64,15 @@ object Linkage {
                      maxDist: Int = 2,
                      maxBlock: Int = Int.MaxValue): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
-    val names0 = graft.Persist.cut(nameDomain(df, name, key))
-    val names =
-      if (maxBlock == Int.MaxValue) names0
-      else {
-        val wide = names0.groupBy(col("block"))
-          .agg(count(lit(1)).as("__bc"))
-          .filter(col("__bc") <= maxBlock)
-          .select(col("block"))
-        names0.join(wide, "block")
-      }
-    val a = names.select(col("block"), col("name").as("name_a"),
-      col("n_rows").as("n_a"))
-    val b = names.select(col("block"), col("name").as("name_b"),
-      col("n_rows").as("n_b"))
-    a.join(b, Seq("block"))
-      .filter(col("name_a") < col("name_b"))
+    val names = graft.Persist.cut(nameDomain(df, name, key))
+    Dedup.bucketPairs(names, "name", Seq("block"), Seq("n_rows"),
+        cap = if (maxBlock == Int.MaxValue) Long.MaxValue else maxBlock.toLong)
       .withColumn("dist",
-        levenshtein(col("name_a"), col("name_b"), maxDist).cast("long"))
+        levenshtein(col("a_id"), col("b_id"), maxDist).cast("long"))
       .filter(col("dist") >= 1L) // identical → 0, past-threshold → -1
-      .select(col("name_a"), col("name_b"), col("dist"),
-        col("n_a"), col("n_b"), (col("n_a") * col("n_b")).as("n_pairs"))
+      .select(col("a_id").as("name_a"), col("b_id").as("name_b"), col("dist"),
+        col("a_n_rows").as("n_a"), col("b_n_rows").as("n_b"),
+        (col("a_n_rows") * col("b_n_rows")).as("n_pairs"))
   }
 
   /** ER CLUSTERS — connected components over [[fuzzyNamePairs]]'

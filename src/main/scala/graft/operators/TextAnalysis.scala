@@ -2071,12 +2071,10 @@ object TextAnalysis {
       .select(col("source"), col("term"), col("c")))
     val norms = vec.groupBy(col("source"))
       .agg(sum(col("c") * col("c")).as("__n2"))
-    val dots = vec.as("a")
-      .join(vec.as("b"),
-        col("a.term") === col("b.term") && col("a.source") < col("b.source"))
-      .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
+    val dots = Dedup.bucketPairs(vec, "source", Seq("term"), Seq("c"))
+      .groupBy(col("a_id").as("source_a"), col("b_id").as("source_b"))
       .agg(count(lit(1)).as("shared_terms"),
-        sum(col("a.c") * col("b.c")).as("__dot"))
+        sum(col("a_c") * col("b_c")).as("__dot"))
     dots
       .join(broadcast(norms.select(col("source").as("source_a"),
         col("__n2").as("__na"))), Seq("source_a"))

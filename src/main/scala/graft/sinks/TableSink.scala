@@ -3,28 +3,13 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** S2/S9: sinks.
-  *
-  * S9 (WriteToBigQuery with CREATE_IF_NEEDED + WRITE_APPEND,
-  * 1_run_main_table_pipeline.py:125-130) maps to catalog tables:
-  * `saveAsTable` creates-if-needed with the frame's explicit schema, append
-  * mode streams batches in. The reference's STREAMING_INSERTS for batch
-  * loads is an antipattern (SURVEY §4.2 #4) — file-based parquet appends
-  * replace it.
+/** S2: sinks.
   *
   * S2 (one GCS JSON object per day, app.py:122-133) maps to a
   * day-partitioned write: `partitionBy(ingest_date)` gives the same
   * `date=.../` layout with partition pruning for free (SURVEY §1.2).
   */
 object TableSink {
-
-  /** S9: append into a catalog table, creating it if needed. */
-  def appendTable(df: DataFrame, table: String): Unit =
-    df.write.mode(SaveMode.Append).saveAsTable(table)
-
-  /** S9 overwrite variant (the work-table finalize, Q18). */
-  def overwriteTable(df: DataFrame, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).saveAsTable(table)
 
   /** S2: day-partitioned lake write. `dateCol` becomes the physical
     * partition key (directory per day, America/Santiago bucketing is the

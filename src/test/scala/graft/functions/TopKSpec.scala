@@ -100,4 +100,16 @@ class TopKSpec extends SparkSpec {
     assert(unordered.getMessage.contains("graft_top_k: x must be orderable"),
       unordered.getMessage)
   }
+
+  test("register is idempotent: a second call keeps graft_top_k's registry entry") {
+    val registry = spark.sessionState.functionRegistry
+    val id = graft.GraftFunctions.topKDescriptor._1
+    graft.GraftFunctions.register(spark)
+    val info = registry.lookupFunction(id).get
+    val builder = registry.lookupFunctionBuilder(id).get
+    graft.GraftFunctions.register(spark)
+    // a re-registration would store a fresh ExpressionInfo
+    assert(registry.lookupFunction(id).get eq info)
+    assert(registry.lookupFunctionBuilder(id).get eq builder)
+  }
 }

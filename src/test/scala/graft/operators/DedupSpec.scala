@@ -427,6 +427,25 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(capped == Seq((100L, 101L))) // hot buckets gone, cold pair intact
     assert(Dedup.lshCandidatePairs(d).count() == 190 + 1) // uncapped: C(20,2) + 1
+    // the cap boundary: a bucket of exactly maxBucket docs keeps all its
+    // pairs, a bucket of maxBucket + 1 is dropped
+    val atCap = (1L to 5L).map(_ -> "five copies of this one sentence right here")
+    val overCap = (11L to 16L).map(_ -> "six copies of some other unrelated line there")
+    val edge = Dedup.lshCandidatePairs(docs(atCap ++ overCap: _*), maxBucket = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(edge == (for (i <- 1L to 5L; j <- i + 1 to 5L) yield (i, j)).toSet)
+  }
+
+  test("pigeonholePairs: maxBucket keeps a bucket of exactly the cap, drops cap + 1") {
+    import spark.implicits._
+    // 16 bits, maxHamming 1: two 8-bit segments. 0x0101 puts ids 1-3 in
+    // buckets (0,1) and (1,1); 0x0202 puts ids 11-14 in (0,2) and (1,2)
+    val fp = ((1L to 3L).map(_ -> 0x0101L) ++ (11L to 14L).map(_ -> 0x0202L))
+      .toDF("id", "fingerprint")
+    def pairs(maxBucket: Int) = Dedup.pigeonholePairs(fp, 16, 1, maxBucket)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(pairs(3) == Set((1L, 2L, 0L), (1L, 3L, 0L), (2L, 3L, 0L)))
+    assert(pairs(Int.MaxValue).size == 3 + 6) // uncapped: C(3,2) + C(4,2)
   }
 
   test("simhashNearDupPairs: identical docs pair at hamming 0; disjoint docs don't pair") {

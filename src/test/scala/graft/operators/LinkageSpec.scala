@@ -45,6 +45,15 @@ class LinkageSpec extends SparkSpec {
     // the 12-name "widget" block exceeds the cap → refused; cord block survives
     val names = capped.select("name_a").distinct().as[String].collect().toSet
     assert(names == Set("acme cord"))
+    // the cap boundary: a block of exactly maxBlock names keeps all its
+    // pairs, a block of maxBlock + 1 is dropped
+    val atCap = (0 until 5).map(i => (200L + i, s"beta$i gadget", "b"))
+    val overCap = (0 until 6).map(i => (300L + i, s"gamma$i gizmo", "b"))
+    val edge = Linkage.fuzzyNamePairs((atCap ++ overCap).toDF("id", "name", "brand"),
+        col("name"), col("id"), maxDist = 2, maxBlock = 5)
+      .select("name_a", "name_b").as[(String, String)].collect().toSet
+    assert(edge == (for (i <- 0 until 5; j <- i + 1 until 5)
+      yield (s"beta$i gadget", s"beta$j gadget")).toSet)
   }
 
   test("erClusters: CC over the name graph, canonical = min-name-id member, singletons kept") {

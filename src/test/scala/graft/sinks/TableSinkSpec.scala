@@ -9,17 +9,6 @@ import graft.SparkSpec
 class TableSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  test("S9: appendTable creates if needed, then appends (CREATE_IF_NEEDED + WRITE_APPEND)") {
-    val t = "graft_test_sink"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    TableSink.appendTable(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
-    TableSink.appendTable(Seq((3L, "c")).toDF("id", "v"), t)
-    assert(spark.table(t).count() == 3)
-    TableSink.overwriteTable(Seq((9L, "z")).toDF("id", "v"), t)
-    assert(spark.table(t).collect().map(_.getLong(0)).toSeq == Seq(9L))
-    spark.sql(s"DROP TABLE $t")
-  }
-
   test("S2: day-partitioned write produces date directories + pruning scan") {
     val out = Files.createTempDirectory("graft_sink").toString
     val df = Seq(
