@@ -204,7 +204,8 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(inDir, outDir) = args.take(2)
+    val Array(inDir, outDir) =
+      Sessions.mainArgs(args, 2, 2, "usage: graft.Main <inDir> <outDir>")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -14,8 +14,8 @@ package graft
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length == 3, "usage: PlanDump <outDir> <tag> <q1,q2,...>")
-    val Array(outDir, tag, qcsv) = args
+    val Array(outDir, tag, qcsv) = Sessions.mainArgs(args, 3, 3,
+      "usage: graft.PlanDump <outDir> <tag> <q1,q2,...|all>")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus)

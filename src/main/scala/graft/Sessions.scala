@@ -18,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   * It also holds the measurement mains' shared plumbing (Bench,
   * BlockingAudit, BackfillBench, StreamStateBench): the `env` header
   * line, the between-windows [[release]] and the [[median]] estimator;
-  * and [[policy]], the one validated read of an enumerated
-  * `spark.graft.*` policy key.
+  * [[mainArgs]], the argument-count check of the contract mains; and
+  * [[policy]], the one validated read of an enumerated `spark.graft.*`
+  * policy key.
   */
 object Sessions {
 
@@ -64,6 +65,18 @@ object Sessions {
   def wireCheckpointDir(spark: SparkSession): Unit =
     spark.sparkContext.getConf.getOption("spark.graft.checkpoint.dir")
       .foreach(spark.sparkContext.setCheckpointDir)
+
+  /** A main's positional arguments when there are `min` to `max` of
+    * them; any other count prints `usage` to stderr and exits 2, as
+    * `tools/check_oracle.py` does, instead of failing on a pattern match. */
+  def mainArgs(args: Array[String], min: Int, max: Int,
+               usage: String): Array[String] = {
+    if (args.length < min || args.length > max) {
+      System.err.println(usage)
+      sys.exit(2)
+    }
+    args
+  }
 
   /** The session's value of the enumerated policy `key` (`default` when
     * unset). A value outside `allowed` throws IllegalArgumentException

@@ -7,7 +7,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local iteration;
     // the driver always runs the full contract)
-    val Array(sfDir, outDir) = args.take(2)
+    val Array(sfDir, outDir) = Sessions.mainArgs(args, 2, 3,
+      "usage: graft.Verify <sfDir> <outDir> [q1,q2,...]").take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -94,129 +94,4 @@ object OrderFlatten {
   def toMasterSink(flat: DataFrame): DataFrame =
     flat.withColumns(Schemas.jsonStringFields.map(f =>
       f -> when(col(f).isNotNull, to_json(col(f)))).toMap)
-
-  /** One polygon-lab resolution: (structureId, polygon) => segmentation,
-    * None when the service has no answer. Mirrors the reference's per-order
-    * POST (app.py:56-65); injected as a function so tests (and this
-    * egress-less container) stub it — the [[graft.sources.Extract]]
-    * transport discipline. Must be Serializable (ships to executors). */
-  type ResolveSegmentation = ((Long, String)) => Option[String]
-
-  /** T3 with the reference's ONLINE fallback (SURVEY §7.4): rows the
-    * precomputed broadcast lookup misses are resolved by calling the
-    * polygon service — but NEVER per row. The reference POSTs once per
-    * order (app.py:56-65); at 100 TB that is billions of HTTP calls for a
-    * dimension whose true cardinality is |distinct (structure_id,
-    * polygon)| — so the fallback (1) collapses misses to DISTINCT keys
-    * first, (2) resolves them in a rate-limited `mapPartitions` over a
-    * deliberately SMALL number of partitions (global rate = rps ×
-    * partitions, both conf knobs), and (3) broadcast-joins the resolved
-    * dim back. Network stays a key-cardinality cost, not a row cost.
-    *
-    * Retry discipline is Extract's: `maxRetries` attempts per key, then
-    * give-up-and-record (the key resolves to null and the row stays
-    * unenriched — exactly what the reference's except-branch does).
-    * `mapPartitions` here is a transport boundary (an external service
-    * call), the same legitimacy class as the Multimodal batch decoder —
-    * not expressible as a Catalyst expression by design.
-    *
-    * Conf: spark.graft.polygon.fallback.rps (default 10 calls/sec per
-    * partition), .partitions (default 1), .retries (default 3 =
-    * Extract.maxRetries). */
-  def enrichPolygonLabWithFallback(flat: DataFrame, polygonLookup: DataFrame,
-                                   resolve: ResolveSegmentation): DataFrame = {
-    val spark = flat.sparkSession
-    import spark.implicits._
-    val rps = spark.conf.get("spark.graft.polygon.fallback.rps", "10").toDouble
-    val parts = spark.conf.get("spark.graft.polygon.fallback.partitions", "1").toInt
-    val retries = spark.conf.get("spark.graft.polygon.fallback.retries",
-      graft.sources.Extract.maxRetries.toString).toInt
-    require(rps > 0 && parts > 0 && retries > 0, "fallback knobs must be positive")
-    val enriched = enrichPolygonLab(flat, polygonLookup)
-    val missing = enriched
-      .filter(col("destination_polygon_lab").isNull &&
-        col("destination_structure_id").isin(enrichedStructureIds: _*) &&
-        col("destination_polygon").isNotNull)
-      .select(col("destination_structure_id").cast("long"),
-        col("destination_polygon").cast("string"))
-      .distinct()
-      .coalesce(parts)
-    val minIntervalNs = (1e9 / rps).toLong
-    val resolved = missing.as[(Long, String)].mapPartitions { it =>
-      var nextAllowed = 0L
-      it.map { case (sid, poly) =>
-        val wait = nextAllowed - System.nanoTime()
-        if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
-        nextAllowed = System.nanoTime() + minIntervalNs
-        var attempt = 0
-        var seg: Option[String] = None
-        var ok = false
-        while (attempt < retries && !ok) {
-          attempt += 1
-          try { seg = resolve((sid, poly)); ok = true }
-          catch { case scala.util.control.NonFatal(_) => } // retry, then record
-        }
-        (sid, poly, seg)
-      }
-    }.toDF("__fb_sid", "__fb_poly", "__fb_seg")
-    // pin the HTTP resolution pass: without a cut, every action on the
-    // returned frame (count-then-write, stage retry) would re-fire the
-    // whole rate-limited resolution — doubling network cost and risking
-    // inconsistent enrichment if the service's answers drift mid-run
-    val resolvedDim = graft.Persist.cut(resolved)
-    // miss keys are disjoint from lookup hits (the lookup join matched on
-    // the same (sid, poly) equality), so the coalesce can never overwrite
-    // an already-enriched value
-    enriched
-      .join(broadcast(resolvedDim.filter(col("__fb_seg").isNotNull)),
-        col("destination_structure_id").cast("long") === col("__fb_sid") &&
-          // the key frame stringified the polygon (a stable resolver key
-          // whatever the source type); compare through the same cast
-          col("destination_polygon").cast("string") === col("__fb_poly"),
-        "left_outer")
-      .withColumn("destination_polygon_lab",
-        coalesce(col("destination_polygon_lab"), col("__fb_seg")))
-      .drop("__fb_sid", "__fb_poly", "__fb_seg")
-  }
-
-  /** Production [[ResolveSegmentation]] over `java.net.http`: POSTs the
-    * reference's per-order body (app.py:56-65) and reads the
-    * `segmentation` field; non-2xx and malformed responses THROW so the
-    * caller's retry/give-up policy applies — transport only, no policy
-    * (the [[graft.sources.Extract.httpFetchPage]] contract). A 404 maps
-    * to None (the service knows the key and has no polygon for it).
-    * The reference gates on the response's `contained` flag
-    * (app.py:63-65: segmentation is used only when contained is truthy)
-    * — an uncontained answer maps to None, never an enrichment.
-    * Client and mapper build lazily PER EXECUTOR ([[transient]] — the
-    * resolver ships serialized into the mapPartitions closure). */
-  final case class HttpSegmentationResolver(
-      endpoint: String, headers: Map[String, String] = Map.empty)
-      extends ResolveSegmentation {
-    @transient private lazy val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(30)).build()
-    @transient private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def apply(key: (Long, String)): Option[String] = {
-      val (sid, poly) = key
-      val body = s"""{"structure_id":$sid,"polygon":${mapper.writeValueAsString(poly)}}"""
-      val req = headers.foldLeft(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
-          .timeout(java.time.Duration.ofSeconds(120))
-          .header("Content-Type", "application/json")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))) {
-        case (b, (k, v)) => b.header(k, v)
-      }.build()
-      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-      if (resp.statusCode() == 404) None
-      else {
-        require(resp.statusCode() / 100 == 2, s"HTTP ${resp.statusCode()} for ($sid, $poly)")
-        val root = mapper.readTree(resp.body())
-        val seg = root.path("segmentation")
-        // contained falsy (false / missing / non-boolean) => no enrichment
-        if (root.path("contained").asBoolean(false) && seg.isTextual)
-          Some(seg.asText())
-        else None
-      }
-    }
-  }
 }

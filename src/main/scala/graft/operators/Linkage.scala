@@ -62,17 +62,23 @@ object Linkage {
     * n_a, n_b, n_pairs. */
   def fuzzyNamePairs(df: DataFrame, name: Column, key: Column,
                      maxDist: Int = 2,
-                     maxBlock: Int = Int.MaxValue): DataFrame = {
+                     maxBlock: Int = Int.MaxValue): DataFrame =
+    namePairs(graft.Persist.cut(nameDomain(df, name, key)), maxDist, maxBlock)
+      .drop("a_name_id", "b_name_id")
+
+  /** [[fuzzyNamePairs]] over an already-cut [[nameDomain]], plus each
+    * side's `name_id` (a_name_id, b_name_id) for the CC loop. */
+  private def namePairs(names: DataFrame, maxDist: Int, maxBlock: Int): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
-    val names = graft.Persist.cut(nameDomain(df, name, key))
-    Dedup.bucketPairs(names, "name", Seq("block"), Seq("n_rows"),
+    Dedup.bucketPairs(names, "name", Seq("block"), Seq("n_rows", "name_id"),
         cap = if (maxBlock == Int.MaxValue) Long.MaxValue else maxBlock.toLong)
       .withColumn("dist",
         levenshtein(col("a_id"), col("b_id"), maxDist).cast("long"))
       .filter(col("dist") >= 1L) // identical → 0, past-threshold → -1
       .select(col("a_id").as("name_a"), col("b_id").as("name_b"), col("dist"),
         col("a_n_rows").as("n_a"), col("b_n_rows").as("n_b"),
-        (col("a_n_rows") * col("b_n_rows")).as("n_pairs"))
+        (col("a_n_rows") * col("b_n_rows")).as("n_pairs"),
+        col("a_name_id"), col("b_name_id"))
   }
 
   /** ER CLUSTERS — connected components over [[fuzzyNamePairs]]'
@@ -95,12 +101,8 @@ object Linkage {
                  maxDist: Int = 2, maxBlock: Int = Int.MaxValue,
                  maxIters: Int = 10): DataFrame = {
     val names = graft.Persist.cut(nameDomain(df, name, key))
-    val pairs = fuzzyNamePairs(df, name, key, maxDist, maxBlock)
-      .join(names.select(col("name").as("name_a"), col("name_id").as("a_id")),
-        "name_a")
-      .join(names.select(col("name").as("name_b"), col("name_id").as("b_id")),
-        "name_b")
-      .select(col("a_id"), col("b_id"))
+    val pairs = namePairs(names, maxDist, maxBlock)
+      .select(col("a_name_id").as("a_id"), col("b_name_id").as("b_id"))
     val (labels, converged) = Dedup.componentLabels(pairs, maxIters)
     Dedup.onNonConverged(df.sparkSession, converged,
       s"erClusters: component labels did NOT converge within " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads ride through the
@@ -46,21 +46,6 @@ object Multimodal {
       .withColumn("n_frames", greatest(col("meta.n_bytes") / 64, lit(1)).cast("long"))
       .select(col("doc_id"), col("image"),
         explode(sequence(lit(0L), col("n_frames") - 1, lit(stride.toLong))).as("frame_idx"))
-
-  /** Resize step (stub geometry, real column contract): scale the decoded
-    * dimensions to fit a bounding box preserving aspect ratio — the
-    * metadata transform a real resizer would apply; pixel work would live
-    * in the batched decoder. Narrow, codegen-friendly. */
-  def resizeMeta(decoded: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val scale = least(
-      lit(maxW.toDouble) / col("image.width"),
-      lit(maxH.toDouble) / col("image.height"),
-      lit(1.0))
-    decoded.withColumn("resized", struct(
-      greatest(floor(col("image.width") * scale), lit(1L)).cast("long").as("width"),
-      greatest(floor(col("image.height") * scale), lit(1L)).cast("long").as("height"),
-      col("image.mean_luma").as("mean_luma")))
-  }
 
   /** Byte-window chunking over the raw binary payload — the audio/ASR
     * prep step (fixed-duration windows with overlap) done entirely on
@@ -229,37 +214,4 @@ object Multimodal {
     * exactly once ever) and publish the identical report shape. */
   def cdcDuplicateStatsFromChunks(ch: DataFrame, minDf: Int = 2): DataFrame =
     Dedup.duplicateShare(ch, "chunks", minDf)
-
-  /** Output row of the partition-batched decoder. */
-  final case class DecodedFeatures(doc_id: Long, n_bytes: Int, checksum: Long,
-                                   features: Array[Float])
-
-  /** Partition-batched decode — the Scala analogue of a `mapInPandas`
-    * feature extractor: one decoder instance per PARTITION (the expensive
-    * codec/model init happens once per task, not per row), rows streamed
-    * through it lazily. The decoder body is a DETERMINISTIC STUB (no
-    * codecs in this container): `features` are derived from content bytes.
-    * The real interface — per-partition init, Iterator→Iterator streaming,
-    * fixed output schema — is exactly what a production decoder plugs into.
-    */
-  def decodeFeaturesBatch(bin: DataFrame, dim: Int = 8): Dataset[DecodedFeatures] = {
-    val spark = bin.sparkSession
-    import spark.implicits._
-    bin.select(col("doc_id"), col("content")).as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition "codec init" (stub: a reusable buffer)
-        val feat = new Array[Float](dim)
-        rows.map { case (id, bytes) =>
-          java.util.Arrays.fill(feat, 0.0f)
-          var crc = 0L
-          var i = 0
-          while (i < bytes.length) {
-            crc = (crc * 31 + (bytes(i) & 0xff)) % 1000000007L
-            feat(i % dim) += (bytes(i) & 0xff) / 255.0f
-            i += 1
-          }
-          DecodedFeatures(id, bytes.length, crc, feat.clone())
-        }
-      }
-  }
 }

@@ -443,32 +443,6 @@ object Relational {
       .groupBy(col("bucket")).agg(countDistinct(col(key)).as(as))
   }
 
-  /** [[rollingDistinct]] with an HLL sketch instead of the exact
-    * count-distinct — the 100 TB swap: exact distinct shuffles every
-    * (bucket, key) survivor to the bucket's reducer, while the sketch
-    * aggregate carries one bounded HLL buffer per bucket per partition
-    * across the shuffle (map-side partial merge), immune to per-bucket
-    * key cardinality. Within ~2% of exact at the default rsd
-    * (tolerance-tested, not oracle-matched — sketch estimates are
-    * engine-specific by nature; cf. corpusStatsApprox). */
-  def rollingDistinctApprox(df: DataFrame, key: String, ts: String,
-                            unit: String = "day", window: Int = 7,
-                            as: String = "n_active",
-                            rsd: Double = 0.02): DataFrame = {
-    require(Seq("hour", "day", "week").contains(unit),
-      s"unit must be hour|day|week, got $unit")
-    require(window >= 1, "window must be >= 1 bucket")
-    val ud = df.filter(col(key).isNotNull)
-      .select(col(key), date_trunc(unit, col(ts)).as("__d")).distinct()
-    val bounds = ud.agg(max(col("__d")).as("__mx"))
-    ud.select(col(key), explode(sequence(col("__d"),
-        col("__d") + expr(s"interval ${window - 1} $unit"),
-        expr(s"interval 1 $unit"))).as("bucket"))
-      .crossJoin(broadcast(bounds))
-      .filter(col("bucket") <= col("__mx"))
-      .groupBy(col("bucket")).agg(approx_count_distinct(col(key), rsd).as(as))
-  }
-
   /** Quantile bucketing without a global sort: assign each row to one of
     * `buckets` quantile bins of `value` (length-curriculum strata,
     * size-tiered processing). The naive formulation — NTILE over a

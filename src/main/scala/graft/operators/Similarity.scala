@@ -101,25 +101,6 @@ object Similarity {
     emb.filter(centroidPred)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
 
-  /** Persist the codebook through [[graft.sinks.SnapshotStore]]'s
-    * A/B rotation — the production shape: assign/search stages read a
-    * FIXED, versioned codebook snapshot instead of re-deriving centroids
-    * per call ([[centroidsOf]] stays the oracle-contract inline path),
-    * and a codebook REFRESH (periodic re-train, e.g. a
-    * [[refineCentroidsFrom]] pass) writes the idle side and atomically
-    * flips the pointer — a concurrent assign never reads a half-written
-    * codebook, the same merge-into-what-you-read discipline as the
-    * master snapshot. The codebook is tiny (fixed-size by contract), so
-    * the rotation costs one small parquet write per refresh. */
-  def snapshotCodebook(emb: DataFrame, centroidPred: Column, root: String): Unit =
-    graft.sinks.SnapshotStore.swapWrite(centroidsOf(emb, centroidPred), root)
-
-  /** The live persisted codebook — [[snapshotCodebook]]'s reader, in the
-    * (c_id, c_emb) schema [[ivfAssignTo]]/[[ivfTopKWith]] consume. */
-  def loadCodebook(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame =
-    graft.sinks.SnapshotStore.read(spark, root).getOrElse(
-      sys.error(s"no codebook snapshot at $root — run snapshotCodebook first"))
-
   /** Prototypicality pruning — the embedding-space outlier filter a
     * curation pipeline runs after clustering (the companion read to
     * SemDeDup-style within-cluster dedup): each vector is assigned to

@@ -137,31 +137,13 @@ object TextAnalysis {
     * partial-aggregable and bounded-memory, at the cost of the oracle
     * equality this query pins. Output: lang, n_docs, mean_tokens,
     * median_tokens, p95_tokens. */
-  /** One aggregate body for both corpusStats variants — only the quantile
-    * expressions differ, so the tokenization/rounding discipline cannot
-    * drift between the exact and approximate paths. */
-  private def corpusStatsWith(docs: DataFrame,
-                              median: Column, p95: Column): DataFrame =
+  def corpusStats(docs: DataFrame): DataFrame =
     docs.select(col("lang"), size(tokens(col("text"))).cast("double").as("n"))
       .groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
         detRound(avg(col("n")), 4).as("mean_tokens"),
-        round(median, 4).as("median_tokens"),
-        round(p95, 4).as("p95_tokens"))
-
-  def corpusStats(docs: DataFrame): DataFrame =
-    corpusStatsWith(docs, expr("percentile(n, 0.5)"), expr("percentile(n, 0.95)"))
-
-  /** The corpus-scale twin of [[corpusStats]]: approx_percentile buffers a
-    * bounded sketch per group instead of every value, so memory stays flat
-    * however large a language's slice grows. `accuracy` trades sketch size
-    * for error (10000 ≈ 1/10000 rank error). Same output schema; values
-    * are approximate, so no SQL-equality oracle — accuracy is
-    * property-tested against the exact operator instead. */
-  def corpusStatsApprox(docs: DataFrame, accuracy: Int = 10000): DataFrame =
-    corpusStatsWith(docs,
-      percentile_approx(col("n"), lit(0.5), lit(accuracy)),
-      percentile_approx(col("n"), lit(0.95), lit(accuracy)))
+        round(expr("percentile(n, 0.5)"), 4).as("median_tokens"),
+        round(expr("percentile(n, 0.95)"), 4).as("p95_tokens"))
 
   /** RE2-safe PII patterns (no backrefs/lookarounds, so the identical
     * pattern runs under Java regex and RE2-family engines): email

@@ -43,25 +43,6 @@ object RawReader {
       // frame is cached (provenance doesn't survive InMemoryRelation)
       .withColumn("source_file", input_file_name())
 
-  /** JSONL twin of [[readOrders]]: one record per LINE — the framing a
-    * 100 TB corpus must use. `multiLine=true` array files are
-    * UNSPLITTABLE (a whole day-file parses as one unit on one executor
-    * core, however large); JSONL splits on line boundaries, so scan
-    * parallelism tracks `maxPartitionBytes`, not file count. Corruption
-    * blast radius shrinks the same way: a bad byte quarantines ONE line
-    * via `_corrupt_record`, not the whole file ([[quarantine]] applies
-    * unchanged). Same schema/glob/metadata-name discipline. */
-  def readOrdersJsonl(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("pathGlobFilter", "*.jsonl")
-      .option("recursiveFileLookup", true)
-      .schema(Schemas.rawOrderWithCorrupt)
-      .json(path)
-      .filter(!element_at(split(input_file_name(), "/"), -1).contains("metadata"))
-      .withColumn("source_file", input_file_name())
-
   /** Split (good, quarantined). Good rows drop the corrupt column; the
     * quarantine side keeps the raw payload + source file for triage.
     *

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.Persist
 import graft.functions.TextFunctions
@@ -13,10 +13,9 @@ import graft.sinks.SnapshotStore
   * loads without re-reading history). Every twin is a (source, name,
   * merge) triple over three decisions this module makes once:
   *
-  *  - the runner: one `Trigger.AvailableNow` pass with its checkpoint at
-  *    `<outRoot>/_checkpoints/<name>`, blocking until the pass completes
-  *    ([[foreachBatch]] for merge twins, [[appendParquet]] for plain
-  *    append sinks);
+  *  - the runner: [[foreachBatch]], one `Trigger.AvailableNow` pass with
+  *    its checkpoint at `<outRoot>/_checkpoints/<name>`, blocking until
+  *    the pass completes;
   *  - the sources: the events lake ([[EventStream.readEvents]]), the
   *    documents lake ([[docs]]) and the embeddings lake ([[embeddings]]),
   *    each with a fixed schema — streaming sources must never infer;
@@ -47,26 +46,16 @@ object Incremental {
       .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
       .parquet(dir)
 
-  private def availableNow[T](w: DataStreamWriter[T], outRoot: String,
-                              name: String): Unit =
-    w.option("checkpointLocation", s"$outRoot/_checkpoints/$name")
+  /** One AvailableNow pass of `source`, handing each micro-batch and its
+    * id to `merge`; blocks until the pass completes. */
+  def foreachBatch(source: DataFrame, outRoot: String, name: String)(
+      merge: (DataFrame, Long) => Unit): Unit =
+    source.writeStream.foreachBatch {
+      (batch: Dataset[Row], batchId: Long) => merge(batch.toDF(), batchId)
+    }.option("checkpointLocation", s"$outRoot/_checkpoints/$name")
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-
-  /** One AvailableNow pass of `source`, handing each micro-batch and its
-    * id to `merge`. */
-  def foreachBatch(source: DataFrame, outRoot: String, name: String)(
-      merge: (DataFrame, Long) => Unit): Unit =
-    availableNow(source.writeStream.foreachBatch {
-      (batch: Dataset[Row], batchId: Long) => merge(batch.toDF(), batchId)
-    }, outRoot, name)
-
-  /** One AvailableNow pass of `source` appended as parquet to
-    * `<outRoot>/<name>`. */
-  def appendParquet(source: DataFrame, outRoot: String, name: String): Unit =
-    availableNow(source.writeStream.format("parquet")
-      .option("path", s"$outRoot/$name").outputMode("append"), outRoot, name)
 
   private def exists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -103,61 +92,6 @@ object Incremental {
                             batchId: Long): Option[DataFrame] =
     if (exists(spark, dir)) Some(spark.read.parquet(dir).filter(col("batch") =!= batchId))
     else None
-
-  /** O2's streaming twin (optional path): ONE `Trigger.AvailableNow` pass
-    * of the watermarked hourly event aggregate over the day-partitioned
-    * events lake, landing parquet + checkpoint under `outDir`. Append mode
-    * emits only watermark-FINALIZED windows, so a re-run after new files
-    * arrive appends exactly the newly-closed hours — incremental daily
-    * loads without re-reading history (the reference re-reads 5 months,
-    * DOC:61). */
-  def runStreamingHourly(spark: SparkSession, eventsDir: String, outDir: String): Unit =
-    appendParquet(EventStream.hourlyCounts(EventStream.readEvents(spark, eventsDir)),
-      outDir, "hourly_counts")
-
-  /** Deduplicated landing of the events lake: one AvailableNow pass
-    * through the watermark-bounded dedup — re-delivered event_ids (an
-    * at-least-once upstream's retries) collapse before they reach
-    * downstream consumers, incrementally per pass. The watermark caveat
-    * in [[EventStream.dedupEvents]] applies across passes too: the
-    * checkpoint carries the watermark forward, so a straggler file whose
-    * events predate it by more than the watermark is dropped, not landed
-    * — backfills older than the watermark belong on the batch path. */
-  def runStreamingDedup(spark: SparkSession, eventsDir: String, outDir: String): Unit =
-    appendParquet(EventStream.dedupEvents(EventStream.readEvents(spark, eventsDir)),
-      outDir, "events_deduped")
-
-  /** The sessionizer's AvailableNow twin: one incremental pass of the
-    * stateful gap-sessionizer over the events lake, landing sessions as
-    * parquet. A session is emitted once closed — by a successor event
-    * past the gap, or by the event-time timeout once the watermark
-    * passes; an in-watermark straggler arriving in a LATER pass can land
-    * as its own additional late session for the same user (the standard
-    * append-mode trade — downstream consumers aggregate per user/span,
-    * they must not assume one row per logical session). */
-  def runStreamingSessions(spark: SparkSession, eventsDir: String, outDir: String,
-                           gapSeconds: Long = 1800): Unit = {
-    import spark.implicits._
-    val events = EventStream.readEvents(spark, eventsDir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStream.Event]
-    appendParquet(EventStream.sessionize(events, gapSeconds).toDF(), outDir, "sessions")
-  }
-
-  /** Incremental curation: the narrow text gate (fused language+quality
-    * scores, x18's operator) as a streaming transform over a documents
-    * lake — new files are scored, filtered, and landed as they arrive,
-    * so corpus curation keeps up with ingestion instead of re-running
-    * over history (same §4.2 #3 discipline as the hourly runner).
-    * Stateless-narrow ops need no watermark and are trivially
-    * streaming-safe; the runner's value is the pinned CONTRACT: per-doc
-    * decisions identical to the batch gate (spec-asserted), because the
-    * operator is deterministic per row. */
-  def runStreamingCuration(spark: SparkSession, docsDir: String, outDir: String,
-                           minQuality: Double = 0.5, lang: String = "en"): Unit =
-    appendParquet(TextAnalysis.curationScores(docs(spark, docsDir))
-        .filter(col("pred_lang") === lang && col("quality_score") >= minQuality),
-      outDir, "curated")
 
   /** Incremental anomaly monitoring — the streaming twin of the x42
     * chain (resample → rolling z-score): each micro-batch of events is
@@ -219,50 +153,6 @@ object Incremental {
                               outRoot: String, codebook: DataFrame): Unit =
     foreachBatch(embeddings(spark, embDir), outRoot, "index") { (batch, batchId) =>
       writePartial(Similarity.ivfAssignTo(batch, codebook), s"$outRoot/index", batchId)
-    }
-
-  /** [[runStreamingIndexAssign]] against the PERSISTED codebook — the
-    * production wiring: the codebook comes from
-    * [[graft.operators.Similarity.snapshotCodebook]]'s A/B-rotated
-    * SnapshotStore instead of an inline [[graft.operators.Similarity
-    * .centroidsOf]] derivation, so every incremental pass (and any
-    * concurrent searcher) reads the same versioned snapshot, and a
-    * codebook refresh can land mid-stream without ever being read
-    * half-written. Assignment identity vs the inline derivation is
-    * spec-pinned (PipelineSpec). */
-  def runStreamingIndexAssignFromStore(spark: SparkSession, embDir: String,
-                                       outRoot: String, codebookRoot: String): Unit =
-    runStreamingIndexAssign(spark, embDir, outRoot,
-      Similarity.loadCodebook(spark, codebookRoot))
-
-  /** Streaming MERGE into a master snapshot — the streaming twin of the
-    * daily history upsert (Q2): each micro-batch of update rows merges
-    * into the current snapshot under "latest per key wins" (`order`
-    * decides recency), landing via [[graft.sinks.SnapshotStore]]'s A/B
-    * rotation so the snapshot being read is never the one being
-    * rewritten.
-    *
-    * Semantics are keep-latest-per-key over base ∪ batch, NOT
-    * last-batch-wins: a straggler batch carrying an OLDER row for a key
-    * cannot regress the snapshot, so the converged master is independent
-    * of how the files split into micro-batches (spec-asserted equal to
-    * the batch dedupeKeepFirst over the whole lake). foreachBatch is
-    * at-least-once — a retried batch re-merges the same rows, and
-    * keep-latest is idempotent under exactly that retry.
-    *
-    * Scale: one shuffle per batch on the key (the snapshot rewrite is
-    * the price of plain parquet — a transactional format with MERGE
-    * support would rewrite only matched files; at 100 TB the snapshot
-    * would be bucketed on the key, S9, so the union-dedupe co-locates). */
-  def runStreamingMasterMerge(spark: SparkSession, updatesDir: String,
-                              schema: String, masterRoot: String, key: String,
-                              order: Seq[Column]): Unit =
-    foreachBatch(spark.readStream.schema(schema).parquet(updatesDir),
-        masterRoot, "merge") { (batch, _) =>
-      val all = SnapshotStore.read(batch.sparkSession, masterRoot)
-        .map(_.unionByName(batch)).getOrElse(batch)
-      SnapshotStore.swapWrite(
-        Relational.dedupeKeepFirst(all, Seq(col(key)), order), masterRoot)
     }
 
   /** Incremental novelty scoring — the daily-ops loop of the x64 query:

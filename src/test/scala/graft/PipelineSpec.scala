@@ -29,24 +29,6 @@ class PipelineSpec extends SparkSpec {
     assert(bad.collect().head.getString(0).contains("corrupt.json"))
   }
 
-  test("S7 JSONL twin: corruption blast radius is ONE LINE, metadata still excluded") {
-    val dir = Files.createTempDirectory("jsonl").toFile
-    dir.deleteOnExit()
-    // one file mixing good and corrupt LINES: the array reader would
-    // quarantine the whole file; the JSONL reader must keep both good rows
-    Files.write(Paths.get(dir.getPath, "day.jsonl"), java.util.Arrays.asList(
-      """{"delivery_order_id": "L-1", "code": "C-1"}""",
-      """{ this line is not json""",
-      """{"delivery_order_id": "L-2", "code": "C-2"}"""))
-    Files.write(Paths.get(dir.getPath, "day.metadata.jsonl"), java.util.Arrays.asList(
-      """{"delivery_order_id": "L-3", "code": "C-3"}"""))
-    val (good, bad) = RawReader.quarantine(RawReader.readOrdersJsonl(spark, dir.getPath))
-    assert(good.select("delivery_order_id").collect().map(_.getString(0)).sorted
-      .sameElements(Array("L-1", "L-2")))
-    assert(bad.count() == 1)
-    assert(bad.collect().head.getString(1).contains("not json"))
-  }
-
   test("T1: empty-string→null, defaults, nested projection") {
     val byId = flat.collect().map(r => r.getAs[String]("delivery_order_id") -> r).toMap
     // ORD-1 twice (dup), plus ORD-2, ORD-3
@@ -241,97 +223,6 @@ class PipelineSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("O2 streaming: AvailableNow hourly pass lands exactly the finalized windows") {
-    import graft.sources.Tables
-    val src = Files.createTempDirectory("graft_stream_in").toString
-    Tables(spark, sf(), "events").write.mode("overwrite").parquet(src)
-    val out = Files.createTempDirectory("graft_stream_out").toString
-    Incremental.runStreamingHourly(spark, src, out)
-    val streamed = spark.read.parquet(s"$out/hourly_counts").collect()
-      .map(r => (r.getTimestamp(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    val batch = Tables(spark, sf(), "events")
-      .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
-      .agg(count(lit(1)).as("c"), round(sum("value"), 2).as("s"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    assert(streamed.nonEmpty, "no finalized windows written")
-    // every streamed window must equal its batch twin exactly
-    streamed.foreach { case (k, v) => assert(batch(k) == v, s"window $k diverged") }
-    // append mode withholds only windows the final watermark (max ts - 2h)
-    // hasn't passed: all strictly-older windows must have landed
-    val maxTs = Tables(spark, sf(), "events").agg(max("ts")).collect().head.getTimestamp(0)
-    val wm = maxTs.getTime - 2L * 3600 * 1000
-    val mustHave = batch.keys.filter(_._1.getTime + 3600 * 1000 < wm)
-    mustHave.foreach(k => assert(streamed.contains(k), s"finalized window $k missing"))
-  }
-
-  test("O2 streaming: AvailableNow dedup runner lands exactly the distinct events") {
-    import graft.sources.Tables
-    val src = Files.createTempDirectory("graft_dedup_in").toString
-    val once = Tables(spark, sf(), "events")
-    once.unionByName(once).write.mode("overwrite").parquet(src) // double delivery
-    val out = Files.createTempDirectory("graft_dedup_out").toString
-    Incremental.runStreamingDedup(spark, src, out)
-    val landed = spark.read.parquet(s"$out/events_deduped")
-    assert(landed.count() == once.select("event_id").distinct().count())
-    assert(landed.select("event_id").distinct().count() == landed.count())
-  }
-
-  test("O2 streaming: AvailableNow sessionizer lands finalized sessions as parquet") {
-    import graft.sources.Tables
-    val src = Files.createTempDirectory("graft_sess_in").toString
-    Tables(spark, sf(), "events").write.mode("overwrite").parquet(src)
-    val out = Files.createTempDirectory("graft_sess_out").toString
-    Incremental.runStreamingSessions(spark, src, out)
-    val sessions = spark.read.parquet(s"$out/sessions")
-    assert(sessions.count() > 0, "no finalized sessions landed")
-    val bad = sessions.filter(col("session_end") < col("session_start")).count()
-    assert(bad == 0, "session with end < start")
-    // no double-counting: per-user session events bounded by input events
-    val perUser = sessions.groupBy("user_id").agg(sum("n_events").as("n")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val inputPerUser = Tables(spark, sf(), "events").groupBy("user_id")
-      .agg(count(lit(1)).as("n")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    perUser.foreach { case (u, n) => assert(n <= inputPerUser(u)) }
-  }
-
-  test("O2 streaming: foreachBatch master merge converges to latest-per-key across passes") {
-    import graft.sources.Tables
-    import graft.sinks.SnapshotStore
-    val src = Files.createTempDirectory("graft_merge_in").toString
-    val root = Files.createTempDirectory("graft_merge_master").toString
-    val ev = Tables(spark, sf(), "events")
-    val schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-    def order = Seq(col("ts").desc, col("event_id").desc)
-    def latest(df: org.apache.spark.sql.DataFrame) =
-      graft.operators.Relational.dedupeKeepFirst(df, Seq(col("user_id")), order)
-        .select("user_id", "event_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    def snap() = SnapshotStore.read(spark, root).get
-      .select("user_id", "event_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    // pass 1: even events only
-    ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    Incremental.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
-    val side1 = SnapshotStore.currentSide(spark, root)
-    assert(side1.nonEmpty)
-    assert(snap() == latest(ev.filter(col("event_id") % 2 === 0)))
-    // pass 2: the odd events arrive (some older than already-merged rows —
-    // a straggler batch must not regress any key)
-    ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    Incremental.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
-    assert(snap() == latest(ev), "converged master != batch latest-per-key over the whole lake")
-    // the rewrite landed on the OTHER side: the read snapshot was never
-    // the write target
-    val side2 = SnapshotStore.currentSide(spark, root)
-    assert(side2 != side1)
-    // re-invocation with NOTHING new to process is a no-op: the checkpoint
-    // admits no batch, so the snapshot (and its side) must not move —
-    // the at-least-once retry story depends on this
-    Incremental.runStreamingMasterMerge(spark, src, schema, root, "user_id", order)
-    assert(SnapshotStore.currentSide(spark, root) == side2)
-    assert(snap() == latest(ev))
-  }
-
   test("O2 streaming: incremental anomaly counts converge to the batch x42 chain") {
     import graft.sources.Tables
     val src = Files.createTempDirectory("graft_anom_in").toString
@@ -491,57 +382,6 @@ class PipelineSpec extends SparkSpec {
     val chained = rows(spark.read.parquet(s"$rootA/day_2/delivery_order_master"))
     assert(rows(graft.sinks.PartitionStore.read(spark, storeRoot).get) == chained,
       "PartitionStore delta diverged from the chained merge")
-  }
-
-  test("persisted codebook: store-backed assign + search are identical to the inline derivation") {
-    import graft.sources.Tables
-    import graft.operators.Similarity
-    val emb = Tables(spark, sf("sf0.01"), "embeddings")
-    val cbRoot = Files.createTempDirectory("graft_cb_root").toString
-    // x12's codebook contract (first 32 vec_ids), persisted through the
-    // A/B rotation instead of re-derived per call
-    Similarity.snapshotCodebook(emb, col("vec_id") < 32, cbRoot)
-    val stored = Similarity.loadCodebook(spark, cbRoot)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_id", "cluster").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val inlineAssign = pairs(Similarity.ivfAssignTo(
-      emb, Similarity.centroidsOf(emb, col("vec_id") < 32)))
-    assert(pairs(Similarity.ivfAssignTo(emb, stored)) == inlineAssign,
-      "store-backed assignment diverged from the inline codebook")
-    // x12's search path, bit-identical against the stored codebook
-    def topk(cb: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfTopKWith(emb, cb, col("vec_id") % 100 === 0, k = 10, probes = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    assert(topk(stored) == topk(Similarity.centroidsOf(emb, col("vec_id") < 32)))
-    // the streaming runner's store-backed variant lands the same index
-    val src = Files.createTempDirectory("graft_cbidx_in").toString
-    val root = Files.createTempDirectory("graft_cbidx_out").toString
-    emb.write.mode("append").parquet(src)
-    Incremental.runStreamingIndexAssignFromStore(spark, src, root, cbRoot)
-    val landed = pairs(spark.read.parquet(s"$root/index"))
-    assert(landed == inlineAssign, "store-backed streaming index diverged")
-    // a codebook REFRESH rotates sides; the reader follows the pointer
-    Similarity.snapshotCodebook(emb, col("vec_id") < 16, cbRoot)
-    assert(Similarity.loadCodebook(spark, cbRoot).count() == 16)
-  }
-
-  test("O2 streaming: incremental curation pass decides exactly like the batch gate") {
-    import graft.sources.Tables
-    val src = Files.createTempDirectory("graft_cur_in").toString
-    val docs = Tables(spark, sf("sf0.01"), "documents")
-    // two "arrival waves" so the pass is genuinely incremental
-    docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
-    val out = Files.createTempDirectory("graft_cur_out").toString
-    Incremental.runStreamingCuration(spark, src, out)
-    val streamed = spark.read.parquet(s"$out/curated")
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val batch = graft.operators.TextAnalysis.curationScores(docs)
-      .filter(col("pred_lang") === "en" && col("quality_score") >= 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(streamed == batch, "streaming curation diverged from the batch gate")
-    assert(streamed.nonEmpty)
   }
 
   test("O2 streaming: incremental novelty scores wave 2 against wave 1's span index") {

@@ -28,4 +28,17 @@ class SessionConfigSpec extends SparkSpec {
       "spark.sql.adaptive.enabled",
       "spark.sql.adaptive.skewJoin.enabled"))
   }
+
+  test("a contract main given the wrong argument count prints its usage line and exits 2") {
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val cp = System.getProperty("java.class.path")
+    for ((main, args) <- Seq("graft.Main" -> Seq("in"), "graft.Verify" -> Nil,
+                             "graft.PlanDump" -> Seq("out", "tag", "all", "extra"))) {
+      val p = new ProcessBuilder((Seq(java, "-cp", cp, main) ++ args): _*)
+        .redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes())
+      assert(p.waitFor() == 2, s"$main ${args.mkString(" ")}: $out")
+      assert(out.contains(s"usage: $main "), out)
+    }
+  }
 }

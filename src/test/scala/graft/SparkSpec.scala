@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +10,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Jobs started while `body` runs: a listener counter, drained by
+    * polling until stable (job-start events post asynchronously). */
+  def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var prev = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = n.get
+        if (c == prev) stable += 1 else { stable = 0; prev = c }
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
 }
 
 object SparkSpec {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** ROUND 9 — job-count ceilings for the driver-loop operators.
@@ -24,27 +23,6 @@ import org.apache.spark.sql.functions._
   */
 class JobCountSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs started while `body` runs: a listener counter, drained by
-    * polling until stable (job-start events post asynchronously). */
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get
-        if (c == prev) stable += 1 else { stable = 0; prev = c }
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
 
   // ten 2-char words with separated counts: ten disjoint merge
   // candidates, no two sharing a symbol — the batched selector can take

@@ -70,6 +70,14 @@ class LinkageSpec extends SparkSpec {
       ("zenith corp", "zenith corp", 1L, 1L, 1L)))
   }
 
+  test("erClusters: the name domain is aggregated and cut once (job count)") {
+    // 22 jobs on this fixture; a second domain aggregate + cut and the
+    // name_id re-joins onto the pairs cost 28
+    val jobs = countJobs(
+      Linkage.erClusters(fixture, col("name"), col("id"), maxDist = 2).collect())
+    assert(jobs <= 24, s"erClusters ran $jobs jobs")
+  }
+
   test("linkageAgreement: agreement mass is the exact contingency product, by distance") {
     val out = Linkage.linkageAgreement(fixture, col("name"), col("id"),
       col("brand"), maxDist = 2)

@@ -66,21 +66,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("decodeFeaturesBatch: per-partition streaming decode, deterministic") {
-    val out = Multimodal.decodeFeaturesBatch(Multimodal.asBinaryTable(d), dim = 4)
-      .collect().sortBy(_.doc_id)
-    assert(out.length == 2)
-    assert(out(0).n_bytes == 9 && out(1).n_bytes == 403)
-    assert(out.forall(_.features.length == 4))
-    // deterministic across runs (stub contract)
-    val again = Multimodal.decodeFeaturesBatch(Multimodal.asBinaryTable(d), dim = 4)
-      .collect().sortBy(_.doc_id)
-    assert(out.map(_.checksum).toSeq == again.map(_.checksum).toSeq)
-    assert(out(0).features.toSeq == again(0).features.toSeq)
-    // rows keep independent feature vectors (buffer is cloned per row)
-    assert(out(0).features.toSeq != out(1).features.toSeq)
-  }
-
   test("duplicateChunks: shared and looped windows flag; unique payloads score 0") {
     import spark.implicits._
     val a = "A" * 32 + "B" * 32

@@ -701,23 +701,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("corpusStatsApprox tracks the exact percentiles on the documents fixture") {
-    val docs = graft.sources.Tables(spark, sf(), "documents")
-    def byLang(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      .toMap
-    val exact = byLang(graft.operators.TextAnalysis.corpusStats(docs))
-    val approx = byLang(graft.operators.TextAnalysis.corpusStatsApprox(docs))
-    assert(approx.keySet == exact.keySet)
-    exact.foreach { case (lang, (n, mean, med, p95)) =>
-      val (an, amean, amed, ap95) = approx(lang)
-      assert(an == n && amean == mean) // count and mean are exact either way
-      // rank-sketch error: within 5% of the exact quantile values
-      assert(math.abs(amed - med) <= 0.05 * med, s"$lang median $amed vs $med")
-      assert(math.abs(ap95 - p95) <= 0.05 * p95, s"$lang p95 $ap95 vs $p95")
-    }
-  }
-
   test("percentile parity: Spark percentile == the quantile_cont closed form after ROUND(·,4)") {
     // The x61/x83/x84 shared assumption, tested instead of asserted:
     // Spark's `percentile` and DuckDB's `quantile_cont` both implement
@@ -773,19 +756,6 @@ class PropertiesSpec extends SparkSpec {
           .when(col("lang") === "b", capB).otherwise(Long.MaxValue))
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(got == expected, s"caps=($capA,$capB) n=${langs.size}")
-    }
-  }
-
-  test("rollingDistinctApprox tracks exact rolling actives within 5% per bucket") {
-    val ev = graft.sources.Tables(spark, sf(), "events").select("user_id", "ts")
-    val exact = Relational.rollingDistinct(ev, "user_id", "ts", "day", 7)
-      .collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
-    val approx = Relational.rollingDistinctApprox(ev, "user_id", "ts", "day", 7)
-      .collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
-    assert(approx.keySet == exact.keySet, "sketch variant changed the bucket spine")
-    exact.foreach { case (b, n) =>
-      assert(math.abs(approx(b) - n) <= math.max(1L, (n * 0.05).toLong),
-        s"bucket $b: approx ${approx(b)} vs exact $n")
     }
   }
 

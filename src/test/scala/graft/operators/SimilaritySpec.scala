@@ -366,13 +366,4 @@ class SimilaritySpec extends SparkSpec {
     val mean = ratios.sum / ratios.size
     assert(mean > 0.6 && mean < 1.6, s"mean distance ratio $mean")
   }
-
-  test("resizeMeta scales into the box preserving aspect ratio") {
-    val d = Seq((1L, "x")).toDF("doc_id", "text")
-    val decoded = Multimodal.decodeImageMeta(Multimodal.asBinaryTable(d))
-      .withColumn("image", struct(lit(1000L).as("width"), lit(500L).as("height"), lit(7L).as("mean_luma")))
-    val r = Multimodal.resizeMeta(decoded, maxW = 100, maxH = 100)
-      .select("resized.width", "resized.height", "resized.mean_luma").collect().head
-    assert(r.getLong(0) == 100 && r.getLong(1) == 50 && r.getLong(2) == 7)
-  }
 }

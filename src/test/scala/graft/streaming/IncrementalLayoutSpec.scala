@@ -36,30 +36,12 @@ class IncrementalLayoutSpec extends SparkSpec {
       val run: (String, String) => Unit)
 
   private val twins = Seq(
-    Twin("runStreamingHourly", () => events, "hourly_counts", Seq("hourly_counts"))(
-      Incremental.runStreamingHourly(spark, _, _)),
-    Twin("runStreamingDedup", () => events, "events_deduped", Seq("events_deduped"))(
-      Incremental.runStreamingDedup(spark, _, _)),
-    Twin("runStreamingSessions", () => events, "sessions", Seq("sessions"))(
-      Incremental.runStreamingSessions(spark, _, _)),
-    Twin("runStreamingCuration", () => docs, "curated", Seq("curated"))(
-      Incremental.runStreamingCuration(spark, _, _)),
     Twin("runStreamingAnomaly", () => events, "anomaly",
         Seq("counts/batch=0", "anomalies"))(
       Incremental.runStreamingAnomaly(spark, _, _)),
     Twin("runStreamingIndexAssign", () => emb, "index", Seq("index/batch=0"))(
       (src, root) => Incremental.runStreamingIndexAssign(spark, src, root,
         Similarity.centroidsOf(emb, col("vec_id") < 8))),
-    Twin("runStreamingIndexAssignFromStore", () => emb, "index", Seq("index/batch=0"))(
-      { (src, root) =>
-        val cb = temp("graft_layout_cb")
-        Similarity.snapshotCodebook(emb, col("vec_id") < 8, cb)
-        Incremental.runStreamingIndexAssignFromStore(spark, src, root, cb)
-      }),
-    Twin("runStreamingMasterMerge", () => events, "merge", Seq("_current", "A"))(
-      Incremental.runStreamingMasterMerge(spark, _,
-        "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING",
-        _, "user_id", Seq(col("ts").desc, col("event_id").desc))),
     Twin("runIncrementalNovelty", () => docs, "novelty",
         Seq("novelty/batch=0", "span_index/batch=0"))(
       Incremental.runIncrementalNovelty(spark, _, _)),

@@ -8,11 +8,13 @@
 # The third number is an APPROXIMATE name grep, not a compiler query: a
 # `def` counts as public unless its line says private/protected/override,
 # and it counts as uncalled when its name occurs in src/main only on its
-# own definition lines (comments included, so a name mentioned in a
-# scaladoc counts as called). Overloads and same-named members in
-# different objects share one name; `main` is skipped (entry points).
-# Callers in src/test, perfbench and tools are not counted on purpose:
-# the number is what only a test or an outside tool keeps alive.
+# own definition lines. Uses are counted with comments stripped (whole
+# `//`, `/*` and scaladoc `*` lines, and a trailing ` // ...`), so a name
+# that only a scaladoc `[[...]]` mentions counts as uncalled. Overloads
+# and same-named members in different objects share one name; `main` is
+# skipped (entry points). Callers in src/test, perfbench and tools are
+# not counted on purpose: the number is what only a test or an outside
+# tool keeps alive. The last line lists those names.
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: the current dir)
 set -eu
@@ -26,9 +28,12 @@ defs=$(grep -rhE '^\s*(final |implicit |@[A-Za-z]+ )*def [A-Za-z_][A-Za-z0-9_]*'
   | sed -E 's/.*\bdef ([A-Za-z_][A-Za-z0-9_]*).*/\1/' | grep -vx main \
   | sort | uniq -c | awk '{print $2, $1}' | sort)
 uses=$(find "$ROOT/src/main" -name '*.scala' | xargs cat \
+  | grep -v '^\s*\(//\|/\*\|\*\)' | sed -E 's#[[:space:]]//[[:space:]].*$##' \
   | grep -oE '\b[A-Za-z_][A-Za-z0-9_]*\b' \
   | sort | uniq -c | awk '{print $2, $1}' | sort)
-uncalled=$(join <(echo "$defs") <(echo "$uses") | awk '$3 <= $2' | wc -l)
+uncalled=$(join -a 1 -e 0 -o 0,1.2,2.2 <(echo "$defs") <(echo "$uses") \
+  | awk '$3 <= $2 {print $1}')
 echo "non_comment_lines_src_main $lines"
 echo "distinct_spark_graft_keys $keys"
-echo "uncalled_public_defs_src_main $uncalled"
+echo "uncalled_public_defs_src_main $(echo -n "$uncalled" | grep -c .)"
+echo "uncalled:" $uncalled
